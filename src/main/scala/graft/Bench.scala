@@ -1,42 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep ObjectHashAggregate on the hash path: the default 128-key
-      // fallback silently degrades every Aggregator-based aggregation
-      // (MinHashAgg, SimHashAgg, HeavyHittersAgg, percentile_approx) to
-      // per-partition external sort of the pre-aggregation rows — for
-      // MinHash that is a sort of the full exploded shingle stream.
-      // 1M keys × the largest state (32-long MinHash sig ≈ 400 B with
-      // overhead) bounds the per-task map at ~400 MB, sized for this
-      // harness's 128 GiB / local[32]; a production job sizes it to
-      // executor memory. Measured ~15% off the LSH dedup path at 11×
-      // gate scale (tools/ScaleSmoke A/B).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      // r21: let AQE re-plan (coalesce) exchanges INSIDE cached plans.
-      // Off by default upstream only to keep a cached plan's output
-      // partitioning stable for consumers that depend on it; results
-      // are unchanged (full oracle gate re-run under this conf). The
-      // gate's cached graph/iteration frames (q_triangles, q_graph_bfs,
-      // q_power_iter edge/embedding caches) otherwise materialize at
-      // the static shuffle width with AQE disabled in the cached
-      // subtree — 32 near-empty blocks per consumer stage here, and at
-      // any scale a partition count pinned at conf-time rather than
-      // sized to the cached bytes. Interleaved 16-query A/B
-      // (tools/ConfAB, 4 reps, element-wise min): 15.84 → 13.85 s,
-      // q_triangles −0.90, q_graph_bfs −0.52, worst regression −0.06
-      // (noise floor).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 1-min load average at start and end, so the artifact shows whether
+    // co-tenant load, not the plan, moved a run (-1.0 where unavailable)
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    val loadStart = os.getSystemLoadAverage
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
     // untimed warmup: JIT/codegen/parquet-reader bring-up is session cost,
     // not query cost. The streaming engine has its own ~10s one-time
     // bring-up (micro-batch planner, state store machinery), so warm both
@@ -78,14 +49,6 @@ object Bench {
         finally spark.catalog.clearCache()
         (System.nanoTime() - t0) / 1e9
       }
-      // SPARK_GRAFT_BENCH_GC=1: untimed System.gc() between entries so
-      // the ContextCleaner reaps dead shuffle files before the next
-      // query (the r14 smoke census measured the footprint growing
-      // monotonically to 25 GB with the cleaner never firing — default
-      // periodicGC is 30 min). OFF by default: the committed bench
-      // series must stay protocol-identical; flip it only in a round
-      // that re-baselines with a matched-window control.
-      if (sys.env.get("SPARK_GRAFT_BENCH_GC").contains("1")) System.gc()
       name -> samples
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v.min }
@@ -113,7 +76,8 @@ object Bench {
       s""","obj_hash_agg_fallback":${spark.conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")}""" +
       s""","java":"${System.getProperty("java.version")}"""" +
       s""","heap_max_mb":${rt.maxMemory() / (1024 * 1024)}""" +
-      s""","host_cpus":${rt.availableProcessors()}}"""
+      s""","host_cpus":${rt.availableProcessors()}""" +
+      s""","load1_start":$loadStart,"load1_end":${os.getSystemLoadAverage}}"""
     // the shared streaming runs' one-time bring-up walls: rep 1 pays
     // them, rep 2 serves the memo, so no entry's MIN carries the cost —
     // it is real and lives only in wall_sec unless recorded here

@@ -11,8 +11,7 @@ import graft.plans.{CosineFusionRule, TopKPerKeyStrategy}
  * ship everything custom in one switch:
  *
  *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions …
- * or
- *   SparkSession.builder().withExtensions(new GraftExtensions) …
+ * or `.withExtensions(new GraftExtensions)` on a session builder.
  *
  * Installs:
  *  - `vec_dot` / `vec_cosine` as SQL functions (codegen expressions,

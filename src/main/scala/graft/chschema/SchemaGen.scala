@@ -2,6 +2,7 @@ package graft.chschema
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /**
  * Schema utilities: the reference's one real capability — Parquet footer
@@ -74,16 +75,20 @@ object SchemaGen {
   /** Flag-for-flag parse of the reference CLI plus the extended-mode
    * extras. Fails fast (sys.error) on a missing required flag, matching
    * the reference's clap `required = true` behavior
-   * (reference: src/bin/schemagen.rs:6-21). */
+   * (reference: src/bin/schemagen.rs:6-21), and on a `--mode` other than
+   * `legacy` or `extended` (a misspelt mode must not render lossy Legacy
+   * DDL). */
   def parseArgs(args: Array[String]): Config = {
     val kv = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
     def req(k: String): String =
       kv.getOrElse(k, sys.error(s"missing required flag --$k"))
-    val mode =
-      if (kv.get("mode").contains("extended")) ClickHouseType.Extended
-      else ClickHouseType.Legacy
+    val mode = kv.get("mode") match {
+      case None | Some("legacy") => ClickHouseType.Legacy
+      case Some("extended") => ClickHouseType.Extended
+      case Some(m) => sys.error(s"--mode must be legacy or extended, got '$m'")
+    }
     val partitionBy = kv.get("partition-by")
     val orderBy = kv.get("order-by")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
@@ -113,15 +118,8 @@ object SchemaGen {
     val partitionBy = cfg.partitionBy
     val orderBy = cfg.orderBy
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[2]"))
-      .appName("graft-schemagen")
-      .config("spark.ui.enabled", "false")
-      // NANOS parquet timestamps (events table) otherwise fail the read
-      // with PARQUET_TYPE_ILLEGAL; as a long they map to Int64, which is
-      // also the reference's timestamp mapping
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    // the DDL path runs no keyed shuffle, so the width is nominal
+    val spark = GraftSession(sys.env.getOrElse("SPARK_MASTER", "local[2]"), 2)
     try {
       // lcArg is already None in Legacy mode (parseArgs warns; don't pay
       // the auto row scan for a flag Legacy mode ignores)

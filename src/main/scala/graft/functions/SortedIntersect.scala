@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
  *
  * The near-dup pair build's verify prefilter evaluates this once per
  * LSH candidate pair — millions of evaluations per corpus, 99%+ of
- * them spurious candidates (PairProfile: 7.6M candidates for 20k true
+ * them spurious candidates (SCALING.md: 7.6M candidates for 20k true
  * pairs at 220k docs). `size(array_intersect(a, b))` at that call site
  * builds a hash set of one side PER ROW and re-hashes every element of
  * the other; over 8-byte pre-hashed shingles a two-pointer merge over

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
  * never partial-aggregates: every occurrence row of a hot key ("the",
  * "of the", a boilerplate 30-gram) lands in ONE WindowExec task, which
  * buffers and sorts the whole partition. At lake scale that task holds
- * ~n_docs rows and serializes the stage on one straggler. ZipfWindowProbe
- * measures the knee; this helper is the routed shape that removes it:
+ * ~n_docs rows and serializes the stage on one straggler.
+ * `ZIPFPROBE_r*.json` record the knee; this helper is the routed shape
+ * that removes it:
  *
  *  1. `freq = stream.groupBy(key).agg(sum(weight))` — a hash aggregate
  *     PARTIAL-combines map-side, so a hot key contributes one row per
@@ -23,7 +24,7 @@ import org.apache.spark.sql.functions._
  *     reading; an earlier 4-scan reading was a counter artifact, see
  *     PlanAudit.executedScans), but each consumer still re-runs the
  *     final aggregation over the reused map output, and the
- *     three-arm interleaved ZipfWindowProbe read persist at
+ *     three-arm interleave (`ZIPFPROBE_r15_3arm.json`) read persist at
  *     2.9–3.6 s vs no-persist 4.5–5.5 s on the planted 110× corpus
  *     (every rep, both corpora) — materializing the
  *     distinct-keys-sized frame (8+8 bytes per key, MEMORY_AND_DISK,
@@ -52,7 +53,7 @@ import org.apache.spark.sql.functions._
  * Results are exact — routing changes where each frequency is computed,
  * never its value.
  *
- * FREQ SOURCING BY KEY-SPACE REGIME (FreqCardinalityProbe, r16 —
+ * FREQ SOURCING BY KEY-SPACE REGIME (`FREQPROBE_r16*.json` —
  * 6 GiB heap standing in for a cluster's per-executor storage budget):
  *
  *  - key space FITS the storage budget → PERSIST (the default here).
@@ -91,7 +92,8 @@ object HotColdFreq {
     sys.env.get("SPARK_GRAFT_HOT_MIN").map(_.toLong).getOrElse(2000000L)
 
   /** Whether withFreq persists its freq frame by default — decided by
-   * ZipfWindowProbe's three-arm interleave (see scaladoc item 1).
+   * the three-arm interleave of `ZIPFPROBE_r15_3arm.json` (see
+   * scaladoc item 1).
    * Only "0"/"1" are accepted: a lenient parse would read
    * SPARK_GRAFT_HOT_PERSIST=true as DISABLE (the inversion footgun).
    * A `def` for the same initializer-error reason as [[DefaultHotMin]]. */
@@ -178,7 +180,7 @@ object HotColdFreq {
    * `(keyCol, freqName)` frame onto the stream via the hot/cold routed
    * shape. Split out so a freq frame sourced elsewhere — the persisted
    * build above, a stage-reuse rebuild, or a bucketed freq TABLE
-   * (FreqCardinalityProbe's third arm, for key spaces too large to
+   * (the third arm of `FREQPROBE_r16.json`, for key spaces too large to
    * cache) — flows through the IDENTICAL join, and arm comparisons
    * measure only the sourcing. */
   def attachFreq(stream: DataFrame, freq: DataFrame, keyCol: String,
@@ -231,13 +233,13 @@ object HotColdFreq {
    * win). The
    * write replaces the persist as the "materialize once" step; its
    * cost is the price of surviving a key space where both in-memory
-   * sourcings OOM (FreqCardinalityProbe, 360M keys / 6 GiB heap:
+   * sourcings OOM (`FREQPROBE_r16_360m_table.json`, 360M keys / 6 GiB heap:
    * persist and stage-reuse both die, this shape finishes in 105 s
    * including the write).
    *
    * The table is OVERWRITTEN if present — the full-rebuild semantics.
    * For a corpus that changes by small deltas, [[freqTableRefresh]]
-   * is the measured-in shape: FreqRefreshProbe (r17, 110× corpus, 2%
+   * is the measured-in shape: `FREQREFRESH_r17.json` (110× corpus, 2%
    * append) read the full rebuild at 63–74% of an end-to-end
    * incremental refresh cycle (sig + pair + freq) on the 140M-key
    * gram stream — past the declared ~30% build criterion, and the
@@ -295,8 +297,8 @@ object HotColdFreq {
    * width would silently break the exchange-free serve property every
    * consumer relies on). Cost is one freq-table scan + delta-sized
    * work + one table write; the rebuild's corpus scan + explode +
-   * corpus-wide aggregation never happens. Measured (FreqRefreshProbe
-   * r17, 110× corpus, 140M-key gram stream, 2% delta,
+   * corpus-wide aggregation never happens. Measured (r17,
+   * 110× corpus, 140M-key gram stream, 2% delta,
    * `FREQREFRESH_r17.json`): rebuild 35–37 s vs merge 8.0–8.2 s
    * (4.3–4.7× across two windows), refresh-cycle share 66–74% →
    * 31–38%, table checksums identical every run; the remaining ~8 s

@@ -953,7 +953,7 @@ object Advanced {
         // exchange (3-rep A/B, tools-level). The r1 finding that
         // motivated the cache predates the bench's AQE-planned shape.
         // Re-litigated r15: an interim (pre-finalization-fix) executed
-        // sweep read "4 lineitem scans / 0 reuse", prompting CooccurAB
+        // sweep read "4 lineitem scans / 0 reuse", prompting an A/B
         // — persisting only the TINY items frame + a countDistinct tot
         // was still slower warm (1.6-1.9 vs 1.2-1.6 s interleaved; the
         // persist barrier serializes branches this plan runs
@@ -963,7 +963,7 @@ object Advanced {
         // Shape stands by both measurements.
         // r21: hash-repartition the projected pair stream by l_orderkey
         // BEFORE the basket aggregation. The bench input is a single
-        // row-group file (tools/PartProbe), so the scan stage — and with
+        // row-group file (OPTIMIZATION_r21.md), so the scan stage — and with
         // it the partial collect_set over 600k rows — ran as ONE task;
         // the explicit exchange moves the basket build behind a cheap
         // 16-byte-row shuffle and onto every core (guide §2.5, one huge
@@ -972,7 +972,7 @@ object Advanced {
         // orderkeys reduces almost nothing (avg basket ≈ 4), so the
         // map-side partial pass saved no shuffle bytes — it only
         // serialized the build. Interleaved 5-rep A/B
-        // (tools/ScanFanoutAB): min 1.909 → 1.173 s, every rep pair
+        // (OPTIMIZATION_r21.md): min 1.909 → 1.173 s, every rep pair
         // agreeing, checksums equal; oracle re-pinned at sf0.01/sf0.001.
         val baskets = rd(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_partkey"))
@@ -1081,7 +1081,7 @@ object Advanced {
         // HotColdFreq pays a second kernel pass in the frequency
         // branch but partial-aggregates map-side, broadcasts hot
         // grams around the exchange, and shuffles the cold tail
-        // skew-bounded (ZipfWindowProbe: routed ≥ window at 110× in
+        // skew-bounded (`ZIPFPROBE_r*.json`: routed ≥ window at 110× in
         // both skew regimes, identical checksums).
         val g1 = docs
           .select(col("doc_id"),
@@ -1095,9 +1095,9 @@ object Advanced {
         // fraction at 9.4% (sf0.1 gate corpus, DuckDB-corroborated)
         // and 45% (20k-doc × 21 KB long-doc corpus) — both above the
         // ~5% line where the dup-only aggregation stops paying for its
-        // extra corpus scan; SubstrOneScanAB (interleaved, checksums
-        // asserted) read one-scan ≤ two-scan on every pair at both
-        // corpora, element-min 79 vs 107 s on the long-doc corpus.
+        // extra corpus scan; an interleaved A/B (checksums asserted,
+        // OPTIMIZATION_r21.md) read one-scan ≤ two-scan on every pair at
+        // both corpora, element-min 79 vs 107 s on the long-doc corpus.
         graft.plans.HotColdFreq.withFreq(
             g1, "h", "tot", col("pos_cnt"), col("doc_id"))
           .groupBy(col("doc_id"))

@@ -35,7 +35,7 @@ object Curation {
     // lambda form it replaced — array_max(transform(array_distinct,
     // … filter …)) — was O(distinct × n) per doc with both lambdas
     // interpreted, fine on 100-word gate docs but ~10¹⁰ comparisons in
-    // ONE ROW for a 100k-token document (TokenRunBench measures the
+    // ONE ROW for a 100k-token document (SCALING.md records the
     // knee; TokenMaxRunSpec pins value parity against the lambda form
     // on the real corpus).
     QueryDef("q_gopher_rules",

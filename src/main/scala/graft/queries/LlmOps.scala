@@ -23,11 +23,9 @@ import Q._
 object LlmOps {
 
   /** BFS lineage-truncation interval (r16: localCheckpoint every N
-   * rounds kills the exponential plan-tree wall). Shared with
-   * [[graft.tools.IterScanAudit]], whose pre-truncation exact-scan
-   * bound is derived from it — change it HERE and the audit's bound
-   * follows (ADVICE r16: the hardcoded copy silently decoupled). */
-  private[graft] val BfsTruncateEvery = 5
+   * rounds kills the exponential plan-tree wall; `ITERSCAN_r16*.json`
+   * and `ITERSCAN_r17.json` record the sweep). */
+  private val BfsTruncateEvery = 5
 
   /** tokens of the space-separated document text */
   private def toks(c: Column): Column = split(c, " ")
@@ -65,7 +63,7 @@ object LlmOps {
   }
 
   /** q_pagerank's fixed-point-integer rank loop, depth-parameterized so
-   * IterScanAudit / PlanAuditSpec can pin that executed file scans stay
+   * PlanAuditSpec can pin that executed file scans stay
    * O(1) as iterations grow (VERDICT r15 item 2). The gate entry runs
    * iters = 3.
    *
@@ -140,9 +138,10 @@ object LlmOps {
       .cache()
     // BFS references dist TWICE per round (frontier extraction + the
     // min-merge union), so the LOGICAL tree doubles per iteration even
-    // though executed scans stay O(1) — the r16 IterScanAudit wall
-    // sweep measured the knee: 0.78 s at depth 2 growing ~1.6× per
-    // added depth to 20.5 s of mostly plan analysis at depth 12
+    // though executed scans stay O(1) — the r16 wall sweep
+    // (`ITERSCAN_r16_wall.json`) measured the knee: 0.78 s at depth 2
+    // growing ~1.6× per added depth to 20.5 s of mostly plan analysis
+    // at depth 12
     // (pagerank references ranks once per round and stays linear).
     // Fix: every TruncateEvery rounds, localCheckpoint(eager) replaces
     // the accumulated tree with a materialized leaf — the GraphX
@@ -314,9 +313,9 @@ object LlmOps {
    * 2-row band collides with probability s², so the LOW-similarity
    * pair mass (which grows ~quadratically with corpus size on a
    * self-similar corpus) leaks candidates linearly in Σ|bucket|² —
-   * tools/ScaleSmoke measured candidates 2.7M → 10.4M for 100k → 200k
-   * synthetic docs, 99.8% of them spurious. Size filtering cuts the
-   * cross-size portion of every bucket for free; the residual
+   * the scale smoke (SCALING.md) measured candidates 2.7M → 10.4M for
+   * 100k → 200k synthetic docs, 99.8% of them spurious. Size filtering
+   * cuts the cross-size portion of every bucket for free; the residual
    * same-size junk is the banding selectivity trade documented in
    * SCALING.md (more rows per band would square it away, at the cost
    * of recall at the declared 0.5 threshold — the oracle's
@@ -393,8 +392,8 @@ object LlmOps {
     verifyCandidates(selfCandidates(sigs, threshold), threshold, ids =>
       shingled(rd(s, dir, "documents").join(ids, Seq("doc_id"), "left_semi")))(use)
 
-  /** [[neardupPairsBuild]] over an in-memory (doc_id, sh) frame —
-   * tools/ScaleSmoke's standalone pipeline measurement. */
+  /** [[neardupPairsBuild]] over an in-memory (doc_id, sh) frame — the
+   * standalone pipeline the specs pin. */
   private[graft] def neardupPairsFast[T](docs: DataFrame, threshold: Double)
                                         (use: DataFrame => T): T =
     verifyCandidates(selfCandidates(minhashSigs(docs), threshold), threshold,
@@ -449,7 +448,7 @@ object LlmOps {
       col("nb"), col("db"), col("ih"))
 
   /** Two-phase EXACT verify of LSH candidate pairs — the near-dup
-   * family's scale fix for the verify stage, which PairProfile measured
+   * family's scale fix for the verify stage, which profiling measured
    * as 86 s of the 109 s full build at 220k docs (7.6M candidates, 20k
    * true pairs — 99.7% spurious, each paying a string-array
    * `array_intersect`).
@@ -500,7 +499,7 @@ object LlmOps {
       val hb = v.select(col("doc_id").as("b_id"), col("d").as("db"),
         col("n").as("nb"))
       // SHUFFLE-HASH, not sort-merge: the candidate side is the big one
-      // (PairProfile: 47.65M pairs at 550k docs) and under SMJ the
+      // (SCALING.md: 47.65M pairs at 550k docs) and under SMJ the
       // second join SORTS it carrying the first join's array payload —
       // tens of GB of spill that dominated the whole build. Hash-
       // building on the hashed-doc side (narrow, corpus-CARDINALITY —
@@ -511,7 +510,7 @@ object LlmOps {
       // ONLY survivors, so the 47.65M spurious pairs never materialize
       // as joined output rows — materializing them (two array copies
       // per row) was the dominant cost even under shuffle-hash
-      // (PairProfile at 550k: survivors-as-filter 74 s, fused 11.8 s).
+      // (SCALING.md, 550k docs: survivors-as-filter 74 s, fused 11.8 s).
       val j1 = cand.join(ha.hint("shuffle_hash"), "a_id")
       val surv = j1.as("l").join(hb.hint("shuffle_hash").as("r"),
           col("l.b_id") === col("r.b_id") &&
@@ -1853,7 +1852,7 @@ object LlmOps {
         // corpus frequency via the hot/cold ROUTED shape, not a window
         // over h: a window never partial-aggregates, so every
         // occurrence of a hot bigram ("of the" at ~n_docs-scale mass)
-        // lands in ONE WindowExec task — ZipfWindowProbe planted one
+        // lands in ONE WindowExec task — the Zipf probe planted one
         // key at 10% corpus mass at 110× and the routed shape won
         // (4.75–5.05 s vs the window's 5.66–5.81, identical checksums)
         // while ALSO matching it on the unplanted corpus (hash-agg
@@ -1935,7 +1934,7 @@ object LlmOps {
         // lake scale ("the" appears in ~every doc). HotColdFreq's
         // groupBy partial-aggregates map-side (skew-immune), hot toks
         // broadcast around the exchange, cold tail shuffles bounded
-        // (ZipfWindowProbe: routed ≥ window at 110× in both skew
+        // (`ZIPFPROBE_r*.json`: routed ≥ window at 110× in both skew
         // regimes, checksums identical).
         val withDf = graft.plans.HotColdFreq.withFreq(
           tf, "tok", "df", lit(1L), col("doc_id"))

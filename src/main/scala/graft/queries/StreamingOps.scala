@@ -44,7 +44,7 @@ object StreamingOps {
    * thousand open keys (windows × types, users), and every micro-batch
    * pays per-partition state-store init/commit. 32 partitions measured
    * 4.5s for the sliding window at sf0.1 vs 2.7s at 8; the round-8
-   * tools/StreamProfile sweep over the tumbling agg (tmpfs checkpoints)
+   * profile sweep (SURVEY.md) over the tumbling agg (tmpfs checkpoints)
    * measured addBatch 0.59s/0.70s/0.90s/1.11s at 4/8/16/32 partitions —
    * per-partition store overhead dominates parallelism at gate-scale
    * key counts. A round-9 whole-family A/B over all 15 entries (2-rep
@@ -910,8 +910,9 @@ object StreamingOps {
           // already performs that per-key reduction before anything
           // shuffles, at any scale. One exchange per microbatch
           // instead of two; results identical (max is associative —
-          // tools/CdcMergeAB asserts the final state byte-equal, min
-          // 1.981 → 1.751 s over 8 interleaved reps; oracle re-pinned).
+          // an interleaved A/B (OPTIMIZATION_r21.md) asserted the final
+          // state byte-equal, min 1.981 → 1.751 s over 8 interleaved reps;
+          // oracle re-pinned).
           val merged = cur match {
             case Some(prev) => lww(s.read.parquet(prev).unionByName(b))
             case None       => lww(b)

@@ -84,8 +84,8 @@ object KnnGraphIndex {
   /** 16-way LSH sign bucket from the first 4 embedding components —
    * the blocking key (same definition as LlmOps's pairwise family, and
    * declared in every graph oracle's SQL). private[graft] so the
-   * profiling tools (EdgeProfile/EdgeExplain) reproduce the build's
-   * EXACT blocking key instead of drifting on a copy. */
+   * queries reproduce the build's EXACT blocking key instead of
+   * drifting on a copy. */
   private[graft] def signBucket(a: String) =
     expr(s"""CAST(element_at($a, 1) > 0 AS INT)
             |+ 2 * CAST(element_at($a, 2) > 0 AS INT)
@@ -129,7 +129,7 @@ object KnnGraphIndex {
    * price of parallelizing the quadratic term. Cold buckets get
    * nsub = 1 (sub ≡ 0), the pre-split plan. Gate corpora peak at 137
    * rows/bucket — far under threshold; the split engages only at scale
-   * (ScaleSmoke plants a hot bucket and measures both variants).
+   * (`SCALESMOKE_r*.json` time both variants on a planted hot bucket).
    * Past MAX_SUB·SPLIT_ROWS rows in ONE bucket the shared Salting
    * helper goes two-dimensional (round 13; Salting.scala scaladoc):
    * the b-side also chunks and `sub` becomes a grid cell, so per-task
@@ -197,7 +197,7 @@ object KnnGraphIndex {
     // over corpus-cardinality sides, so every probe key matches a whole
     // sub-bucket. SMJ streams each a-row against the b-group buffered
     // CONTIGUOUSLY; a hash join walks the HashedRelation's match chain
-    // per pair — EdgeProfile measured the identical 382M-pair plan at
+    // per pair — profiling (SCALING.md) read the identical 382M-pair plan at
     // 125 s CPU under SMJ vs 1015 s when the refresh path's cached-
     // projection stats tipped the planner into BroadcastHashJoin. The
     // sort is over the SIDES (corpus-cardinality), never the pairs.
@@ -234,7 +234,7 @@ object KnnGraphIndex {
    * repartition on the deterministic half bit, NOT repartitionByRange
    * (round 13): RangePartitioning samples its child, which RE-EXECUTES
    * the full quadratic edge-build plan once for the sample and again
-   * for the write — EdgeProfile measured the artifact build at 2× the
+   * for the write — profiling (SCALING.md) read the artifact build at 2× the
    * bare plan (41.9 vs 17.8 s at 50k vecs) from exactly this. A hash
    * collision merges a bucket's two halves into one file (~40% chance
    * SOME bucket collides per build at 32 keys into 32 partitions), so

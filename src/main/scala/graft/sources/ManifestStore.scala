@@ -644,11 +644,8 @@ object ManifestStore {
    * corpus refresh can run minutes); a holder per (store, stamp) blocks
    * only same-key callers — exactly the dedup the memo exists for. */
   private final class MemoCell {
-    // @volatile: writes happen under cell.synchronized, but memoCensus
-    // reads ref while holding only the outer frameMemo lock — volatile
-    // keeps that cross-lock read current (the census is still a
-    // point-in-time approximation; weak values can clear at any time)
-    @volatile var ref: java.lang.ref.WeakReference[Any] = null
+    // read and written only under cell.synchronized
+    var ref: java.lang.ref.WeakReference[Any] = null
   }
 
   private val frameMemo = new java.util.WeakHashMap[
@@ -659,22 +656,6 @@ object ManifestStore {
    * probe. Calling size() expunges stale (collected-key) entries. */
   private[graft] def memoSessionCount: Int =
     frameMemo.synchronized { frameMemo.size() }
-
-  /** (sessions, cells, cells-with-live-value) — the session-tax
-   * instrument's census (ScaleSmoke stage boundaries): shows whether
-   * the memo is what a long session accumulates. Weak values mean
-   * liveCells can be below cells at any time. */
-  private[graft] def memoCensus: (Int, Int, Int) =
-    frameMemo.synchronized {
-      var cells = 0; var live = 0
-      frameMemo.values().asScala.foreach { m =>
-        cells += m.size()
-        m.values().asScala.foreach { c =>
-          if (c.ref != null && c.ref.get() != null) live += 1
-        }
-      }
-      (frameMemo.size(), cells, live)
-    }
 
   def memoFrame[T](session: AnyRef, store: Path, stamp: String)
                   (build: => T): T = {
@@ -778,7 +759,7 @@ object ManifestStore {
   }
 
   /** Total bytes under a store-relative entry set — the observability
-   * hook ScaleSmoke and the specs use to pin "refresh writes ∝ delta":
+   * hook the specs use to pin "refresh writes ∝ delta":
    * bytes referenced by the new manifest but not the old one are
    * exactly what the refresh wrote. */
   def entryBytes(store: Path, entries: Seq[Entry]): Long =

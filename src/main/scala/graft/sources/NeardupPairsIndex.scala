@@ -59,7 +59,7 @@ import graft.queries.Q
  * runs), and endpoint-removal drops. At a small delta the cross band
  * join broadcasts the delta side, so the corpus-side cost is a scan
  * of the persisted signature artifact — compute ∝ delta, the 110×
- * refresh-vs-build row in ScaleSmoke is the measured curve.
+ * refresh-vs-build rows of `SCALESMOKE_r20*.json` are the measured curve.
  *
  * Layout: `<stamped dir>/pairs` + `<stamped dir>/cover`, published by
  * the shared stamped-artifact protocol (per-process staging, one
@@ -201,7 +201,7 @@ object NeardupPairsIndex {
               writeParts(carried.unionByName(fresh), curCover, staging)
             }
           case None =>
-            // two-phase verified fast path (round 13: PairProfile put
+            // two-phase verified fast path (round 13, SCALING.md: profiling put
             // 80% of the full build in the string-array verify; the
             // hashed prefilter + candidate-restricted string pass is
             // output-identical — the spec pins this artifact against

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Time a single query in isolation (repeat N times):
  * runMain graft.tools.OneQuery <name> [sfDir] [reps] */
@@ -10,14 +9,8 @@ object OneQuery {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
     // session warmup
     spark.read.parquet(s"$dir/lineitem.parquet").groupBy("l_returnflag").count().count()
     for (i <- 1 to reps) {

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 object PlanAudit {
@@ -9,8 +8,8 @@ object PlanAudit {
   /** Execute `df` with a row-discarding action and count the scans the
    * EXECUTED plan actually ran — ReusedExchange / reused query stages
    * make a branch's scan disappear from the executed tree, so this is
-   * the truthful count the pre-execution walk overstates. Shared with
-   * ServeScanAudit.
+   * the truthful count the pre-execution walk overstates. PlanAuditSpec
+   * pins its scan counts.
    *
    * The action drives the SHARED QueryExecution's RDD: `df.foreach`
    * would fork a separate rddQueryExecution and leave
@@ -66,12 +65,7 @@ object PlanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession("local[8]", 8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     val names =

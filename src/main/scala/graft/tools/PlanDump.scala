@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Write `.explain("formatted")` for the named gate queries to an output
  * directory — the r21 optimization round's plan-evidence capture
@@ -9,8 +8,8 @@ import org.apache.spark.sql.SparkSession
  *
  * runMain graft.tools.PlanDump <outDir> <suffix> <name>[,<name>...] [sfDir]
  *
- * Session configs mirror graft.Bench so the dumped plan is the plan the
- * bench actually runs. The dump is the PRE-execution plan
+ * The session is Bench's (GraftSession) so the dumped plan is the plan
+ * the bench actually runs. The dump is the PRE-execution plan
  * (AdaptiveSparkPlan isFinalPlan=false) — deterministic and
  * diff-friendly; executed-plan scan/reuse counts are PlanAudit's job.
  */
@@ -20,18 +19,8 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1048576")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {
       val df = SparkEntry.queries(name)(spark, dir)

@@ -229,5 +229,15 @@ class DdlRendererSpec extends AnyFunSuite {
     val thrown = intercept[RuntimeException](
       SchemaGen.parseArgs(Array("--table-name", "t")))
     assert(thrown.getMessage.contains("missing required flag"))
+
+    // only the two mode names parse; a misspelt or mis-cased mode fails
+    // instead of silently rendering lossy Legacy DDL
+    assert(SchemaGen.parseArgs(base ++ Array("--mode", "legacy")).mode ==
+      ClickHouseType.Legacy)
+    for (bad <- Seq("extnded", "Extended")) {
+      val e = intercept[RuntimeException](
+        SchemaGen.parseArgs(base ++ Array("--mode", bad)))
+      assert(e.getMessage.contains(bad), e.getMessage)
+    }
   }
 }

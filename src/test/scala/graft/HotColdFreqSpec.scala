@@ -248,7 +248,7 @@ class HotColdFreqSpec extends AnyFunSuite {
   }
 
   test("freqTable sourcing ≡ withFreq, and the freq side reads bucketed") {
-    // the uncacheable-key-space shape (FreqCardinalityProbe's surviving
+    // the uncacheable-key-space shape (FREQPROBE_r16*.json's surviving
     // arm at 360M keys / 6 GiB): freq written once to a bucketed+sorted
     // table, consumers served from the scan. Values must be identical
     // to the persist shape, and the scan must actually BE bucketed —
@@ -312,7 +312,7 @@ class HotColdFreqSpec extends AnyFunSuite {
   }
 
   test("freqTableRefresh: delta merge ≡ full rebuild, chained, still bucketed") {
-    // the criterion-fired incremental shape (FreqRefreshProbe r17:
+    // the criterion-fired incremental shape (FREQREFRESH_r17.json:
     // full rebuild = 63% of a 110× refresh cycle on the gram stream):
     // additive merge of a delta aggregation into the bucketed table
     // must equal a from-scratch rebuild key-for-key, survive being

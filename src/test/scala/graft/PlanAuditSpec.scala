@@ -796,7 +796,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("routed corpus frequency: no window over a power-law key, " +
       "one persisted freq build, executed scans pinned") {
-    // r15 (ZipfWindowProbe): the r14 window-over-key formulations put
+    // r15 (ZIPFPROBE_r*.json): the r14 window-over-key formulations put
     // every occurrence of a hot key in ONE WindowExec task, so
     // q_substr_dedup / q_tfidf / q_lm_score route frequency through
     // HotColdFreq — groupBy partial-agg (skew-immune), persisted so
@@ -852,10 +852,10 @@ class PlanAuditSpec extends AnyFunSuite {
     // key's per-key row count is bounded by construction (per-doc
     // tokens, per-vector k neighbors, a pre-aggregated frame). The
     // three unbounded corpus-frequency windows were routed through
-    // HotColdFreq in r15 (ZipfWindowProbe measured the straggler);
+    // HotColdFreq in r15 (ZIPFPROBE_r*.json record the straggler);
     // this pin freezes the full inventory of partitionBy key sets so
     // ANY new window fails here and must either show its bound in the
-    // allowlist comment or take the ZipfWindowProbe treatment first.
+    // allowlist comment or take the HotColdFreq treatment first.
     // Key sets are the union of each window's referenced column names
     // ('+'-joined per window) from the OPTIMIZED plan; unpartitioned
     // windows are governed by the aggregation-guard test above.
@@ -934,8 +934,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // edges, nodes, and degrees are cached ONCE and every iteration
     // joins the caches. Before the fix, q_pagerank's per-iteration
     // nodes join re-scanned embeddings every round (1 + iters direct
-    // scans). Pinned here at two depths; IterScanAudit sweeps the
-    // full 1..4 curve as the committed artifact (ITERSCAN_r16.json).
+    // scans). Pinned here at two depths; the committed artifact
+    // ITERSCAN_r16.json records the full 1..4 curve.
     for ((name, build) <- Seq[(String, Int => DataFrame)](
         "q_pagerank" -> (d => graft.queries.LlmOps.pageRankRanks(spark, sf, d)),
         "q_graph_bfs" -> (d => graft.queries.LlmOps.graphBfsDist(spark, sf, d)))) {

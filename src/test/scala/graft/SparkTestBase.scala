@@ -3,21 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared session for all suites (ScalaTest runs them in one forked
- * JVM; see build.sbt Test/fork). Mirrors the Verify/Bench session config
- * so tests see the same semantics (UTC, nanosAsLong, small shuffle). */
+ * JVM; see build.sbt Test/fork). Built by GraftSession like Verify and
+ * Bench, so tests run the same engine; the shuffle width is the tests'
+ * own override (8, not the core count). */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    GraftSession("local[8]", 8,
+      "spark.sql.warehouse.dir" -> "/tmp/graft-test-warehouse")
   val sf = "/root/testdata/sf0.001"
 }

@@ -15,6 +15,7 @@ import sys
 import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import archive_r22_queries  # noqa: E402
 import check_tally  # noqa: E402
 
 n_pass = 0
@@ -134,10 +135,39 @@ def test_tally_min_across_windows_end_to_end():
            "min-pinned claim passes against the round's min despite a noisy window")
 
 
+def test_archive_rejects_mismatched_windows():
+    # a window missing an entry (or run at another core count) must fail
+    # the archive, not be unioned into a min that mixes coverage
+    def window(queries, cpus=32, errors=()):
+        return {"queries": queries, "errors": list(errors),
+                "sf": "/data/sf0.1", "config": {"cpus": cpus}}
+    with tempfile.TemporaryDirectory() as d:
+        a, b, c, e = (os.path.join(d, n) for n in "abce")
+        dump(a, window({"q_x": 1.0, "q_y": 9.0}))
+        dump(b, window({"q_x": 5.0, "q_y": 2.0}))
+        out = archive_r22_queries.archive([a, b])
+        ok(out["queries"] == {"q_x": 1.0, "q_y": 2.0} and out["cpus"] == 32
+           and out["errors"] == [] and out["sf"] == "/data/sf0.1",
+           "archive takes the element-wise min and carries cpus/errors/sf")
+        dump(c, window({"q_x": 0.5}))
+        try:
+            archive_r22_queries.archive([a, c])
+            ok(False, "archive rejects a window with a different keyset")
+        except ValueError:
+            ok(True, "archive rejects a window with a different keyset")
+        dump(e, window({"q_x": 1.0, "q_y": 2.0}, cpus=8))
+        try:
+            archive_r22_queries.archive([a, e])
+            ok(False, "archive rejects windows whose cpus disagree")
+        except ValueError:
+            ok(True, "archive rejects windows whose cpus disagree")
+
+
 if __name__ == "__main__":
     test_default_bench_newest_round_all_windows()
     test_default_bench_fallback()
     test_load_mins_elementwise()
     test_tally_band()
     test_tally_min_across_windows_end_to_end()
+    test_archive_rejects_mismatched_windows()
     print(f"\n{n_pass} pass")
