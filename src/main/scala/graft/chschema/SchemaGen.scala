@@ -72,16 +72,29 @@ object SchemaGen {
                           partitionBy: Option[String], orderBy: Seq[String],
                           warnings: Seq[String])
 
+  /** The flags [[parseArgs]] accepts: the reference CLI's four plus the
+   * extended-mode extras. */
+  private val Flags = Set("parquet-path", "clickhouse-schema-path",
+    "table-name", "primary-key", "mode", "low-cardinality", "partition-by",
+    "order-by")
+
   /** Flag-for-flag parse of the reference CLI plus the extended-mode
    * extras. Fails fast (sys.error) on a missing required flag, matching
    * the reference's clap `required = true` behavior
-   * (reference: src/bin/schemagen.rs:6-21), and on a `--mode` other than
-   * `legacy` or `extended` (a misspelt mode must not render lossy Legacy
-   * DDL). */
+   * (reference: src/bin/schemagen.rs:6-21), on an unknown, repeated or
+   * valueless flag, and on a `--mode` other than `legacy` or `extended`:
+   * input the parse cannot use must not silently drop a clause from the
+   * DDL or render lossy Legacy DDL. */
   def parseArgs(args: Array[String]): Config = {
-    val kv = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+    val kv = args.grouped(2).foldLeft(Map.empty[String, String]) { (m, pair) =>
+      val flag = pair(0)
+      val k = flag.stripPrefix("--")
+      if (!flag.startsWith("--") || !Flags(k)) sys.error(s"unknown flag '$flag'")
+      if (pair.length < 2 || pair(1).startsWith("--"))
+        sys.error(s"flag $flag has no value")
+      if (m.contains(k)) sys.error(s"flag $flag given more than once")
+      m + (k -> pair(1))
+    }
     def req(k: String): String =
       kv.getOrElse(k, sys.error(s"missing required flag --$k"))
     val mode = kv.get("mode") match {

@@ -38,7 +38,7 @@ class HeavyHittersAgg(capacity: Int)
     // a null key carries no frequency mass AND cannot live in the
     // state: Catalyst map keys are non-nullable, so storing it would
     // crash the buffer encoder at the first shuffle (r18 review) —
-    // the same no-null-mass contract as HotColdFreq's builders
+    // the same no-null-mass contract as HotColdFreq's freq frame
     if (key == null) s
     else s.counts.get(key) match {
       case Some(n) => HHState(s.counts.updated(key, n + 1), s.floor)

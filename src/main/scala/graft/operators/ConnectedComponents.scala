@@ -132,7 +132,7 @@ object ConnectedComponents {
    * testing the star-graph property directly — every source has exactly
    * one out-edge and no target is itself a source (no chains) — folded
    * into ONE single-shuffle job per round (per-node (outDegree,
-   * isTarget) via reduceByKey, then a driver-side reduce of two longs);
+   * isTarget) via reduceByKey, then a driver-side sum of violations);
    * that action also materializes the round's cache, so each round is
    * exactly one job. The test is exact and fires on the round that
    * REACHES the fixpoint — no extra confirming round.
@@ -142,9 +142,6 @@ object ConnectedComponents {
    *         min node id of the component; every node appearing in
    *         `edges` (including self-loop-only nodes) gets a row */
   def runStar(edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    def dbg(msg: String): Unit = if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(f"[starcc] $msg t=${System.nanoTime() / 1e9}%.2f")
-    dbg("enter")
     val spark = edges.sparkSession
     import spark.implicits._
     // One Catalyst plan total: the upstream edge pipeline (MinHash/LSH
@@ -154,7 +151,6 @@ object ConnectedComponents {
       .select(col("a").cast("long"), col("b").cast("long"))
       .rdd.map(r => (r.getLong(0), r.getLong(1))).cache()
     val m0 = e0.count()
-    dbg(s"edges materialized m=$m0")
     // size every shuffle to the GRAPH, not the session default (same
     // policy as run()): a duplicate graph is tiny relative to the
     // corpus, and each round's stages pay per-partition scheduling.
@@ -165,7 +161,6 @@ object ConnectedComponents {
     val nodes = e0.flatMap { case (a, b) => Iterator(a, b) }
       .distinct(parts).cache()
     nodes.count()
-    dbg("nodes materialized")
     // canonical down-oriented edge set (u > v); self-loops drop out of
     // the iteration
     var cur = e0.map { case (a, b) => (math.max(a, b), math.min(a, b)) }
@@ -174,22 +169,19 @@ object ConnectedComponents {
     // Exact fixpoint test in ONE job: a down-oriented edge set is the
     // converged star graph iff no source carries two edges and no node
     // is both source and target. Per-node (outDegree, isTarget) via one
-    // reduceByKey, then a two-long driver reduce; the action doubles as
-    // the round's cache materializer.
-    def starTest(r: org.apache.spark.rdd.RDD[(Long, Long)]): (Long, Boolean) = {
+    // reduceByKey, then a driver-side sum of violations; the action
+    // doubles as the round's cache materializer.
+    def starTest(r: org.apache.spark.rdd.RDD[(Long, Long)]): Boolean = {
       val perNode = r
         .flatMap { case (u, v) => Iterator((u, (1L, false)), (v, (0L, true))) }
         .reduceByKey(
           (x: (Long, Boolean), y: (Long, Boolean)) => (x._1 + y._1, x._2 || y._2),
           parts)
-      val (n, violations) = perNode
-        .map { case (_, (c, t)) =>
-          (c, if (c >= 2L || (c >= 1L && t)) 1L else 0L) }
-        .fold((0L, 0L)) { case ((n1, v1), (n2, v2)) => (n1 + n2, v1 + v2) }
-      (n, violations == 0L)
+      perNode
+        .map { case (_, (c, t)) => if (c >= 2L || (c >= 1L && t)) 1L else 0L }
+        .fold(0L)(_ + _) == 0L
     }
-    var (m, converged) = starTest(cur)
-    dbg(s"init startest done m=$m star=$converged")
+    var converged = starTest(cur)
     e0.unpersist(blocking = false)
     var i = 0
     while (!converged && i < maxIter) {
@@ -213,14 +205,11 @@ object ConnectedComponents {
         .map { case (u, (v, mu)) => (if (v == mu) u else v, mu) }
         .filter { case (u, v) => u != v }
         .distinct(parts).cache()
-      val (n, star) = starTest(ss)
-      dbg(s"round $i n=$n star=$star")
+      converged = starTest(ss)
       cur.unpersist(blocking = false)
-      converged = star
       cur = ss
       i += 1
     }
-    dbg("loop done")
     // at the fixpoint `cur` is the star graph (node, component-min);
     // roots and self-loop-only nodes label themselves. cur and nodes
     // stay cached (graph-sized, same residue GraphX leaves) so the

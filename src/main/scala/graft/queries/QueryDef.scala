@@ -43,13 +43,19 @@ object Q {
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 
+  /** The memoized footer schema of one of the ten driver-generated
+   * tables (never a path an entry writes itself); [[rd]] and the
+   * streaming source read through it. */
+  def coreSchema(spark: SparkSession, dir: String,
+                 table: String): org.apache.spark.sql.types.StructType =
+    schemaCache.computeIfAbsent(s"$dir/$table.parquet",
+      path => spark.read.parquet(path).schema)
+
   def rd(spark: SparkSession, dir: String, table: String): DataFrame = {
     val p = s"$dir/$table.parquet"
-    if (coreTables(table)) {
-      val sch = schemaCache.computeIfAbsent(p,
-        path => spark.read.parquet(path).schema)
-      spark.read.schema(sch).parquet(p)
-    } else spark.read.parquet(p)
+    if (coreTables(table))
+      spark.read.schema(coreSchema(spark, dir, table)).parquet(p)
+    else spark.read.parquet(p)
   }
 
   /** The events table's ts encoding has varied across driver testdata

@@ -19,20 +19,14 @@ import Q._
  */
 object StreamingOps {
 
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
   private def streamEvents(s: SparkSession, dir: String): DataFrame = {
     // file stream source needs an explicit schema: read it from the same
     // footer (metadata-only, like the batch path). ts is normalized to a
     // UTC TimestampType whatever the testdata generation encoded —
     // ns-since-epoch long (nanosAsLong) or µs TIMESTAMP_NTZ — because
     // event-time watermarks reject NTZ (see Q.events). The footer read
-    // is cached per path for the JVM: every streaming entry starts
-    // here, and the table's schema is fixed for a testdata generation
-    // (a regenerated corpus arrives in a fresh JVM).
-    val schema = schemaCache.computeIfAbsent(s"$dir/events.parquet",
-      p => s.read.parquet(p).schema)
+    // is Q's per-path memo, shared with the batch reader.
+    val schema = Q.coreSchema(s, dir, "events")
     // the file-stream source wants a directory; glob-filter to the one table
     val raw = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)

@@ -148,7 +148,7 @@ object MinHashSigIndex {
     // pmod(doc_id, N) — a null bucket would publish the
     // __HIVE_DEFAULT_PARTITION__ dir bucketChildren rejects, and no
     // keyed consumer could ever address the row): filtered at the
-    // source, the same no-null-mass contract as HotColdFreq's builders
+    // source, the same no-null-mass contract as HotColdFreq's freq frame
     val docs = Q.rd(s, dir, "documents")
       .filter(col("doc_id").isNotNull)
       .select(col("doc_id"), col("text"),

@@ -239,5 +239,19 @@ class DdlRendererSpec extends AnyFunSuite {
         SchemaGen.parseArgs(base ++ Array("--mode", bad)))
       assert(e.getMessage.contains(bad), e.getMessage)
     }
+
+    // unknown, valueless and repeated flags fail naming the bad token
+    // instead of silently dropping a clause the user asked for
+    for ((extra, bad) <- Seq(
+        Array("--order_by", "id") -> "--order_by",
+        Array("--low-cardinalty", "a") -> "--low-cardinalty",
+        Array("stray", "x") -> "stray",
+        Array("--mode") -> "--mode",
+        Array("--order-by", "--mode", "extended") -> "--order-by",
+        Array("--mode", "extended", "--mode", "legacy") -> "--mode",
+        Array("--table-name", "u") -> "--table-name")) {
+      val e = intercept[RuntimeException](SchemaGen.parseArgs(base ++ extra))
+      assert(e.getMessage.contains(bad), e.getMessage)
+    }
   }
 }

@@ -37,4 +37,22 @@ class GraftSessionSpec extends AnyFunSuite {
       finally walk.close()
     assert(builders == List("graft/GraftSession.scala"), builders)
   }
+
+  test("the benchmark harness builds its session with GraftSession's literal confs") {
+    // perfbench/harness/Harness.scala builds its own session from a
+    // copy of GraftSession's conf set; a conf changed in GraftSession
+    // alone would leave the benchmark measuring a different engine from
+    // Bench, Verify and the tests. Compares the `.config("key", "value")`
+    // calls whose two arguments are both string literals.
+    val literal = """\.config\(\s*"([^"]*)"\s*,\s*"([^"]*)"\s*\)""".r
+    def confs(path: String): Set[(String, String)] = {
+      val p = Paths.get(path)
+      assert(Files.isRegularFile(p), s"run from the repository root: $p")
+      literal.findAllMatchIn(Files.readString(p))
+        .map(m => m.group(1) -> m.group(2)).toSet
+    }
+    val session = confs("src/main/scala/graft/GraftSession.scala")
+    assert(session.nonEmpty)
+    assert(confs("perfbench/harness/Harness.scala") == session)
+  }
 }
