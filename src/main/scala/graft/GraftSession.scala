@@ -4,13 +4,15 @@ import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory: Bench, Verify, the DDL CLI, the tools
  * and the shared test session all build their session here, so they
- * run the same engine. `conf` adds per-caller settings (the test
- * warehouse dir) on top of the shared set. */
+ * run the same engine, with [[GraftExtensions]]' SQL names installed.
+ * `conf` adds per-caller settings (the test warehouse dir) on top of the
+ * shared set. */
 object GraftSession {
   def apply(master: String, shufflePartitions: Int,
             conf: (String, String)*): SparkSession = {
     val builder = SparkSession.builder()
       .master(master)
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

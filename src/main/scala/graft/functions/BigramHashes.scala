@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expr}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -89,12 +89,6 @@ object BigramHashes {
     new GenericArrayData(out)
   }
 
-  /** Idempotent per-session registration ([[GraftFunctions.ensureTemp]]
-   * carries the shared per-name guard). */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.ensureTemp(spark, "word_bigram_hashes")(
-      exprs => WordBigramHashesExpr(exprs(0)))
-
-  /** Hashed bigrams of a token-array column — requires [[register]]. */
-  def of(toks: Column): Column = call_function("word_bigram_hashes", toks)
+  /** Hashed bigrams of a token-array column. */
+  def of(toks: Column): Column = column(WordBigramHashesExpr(expr(toks)))
 }

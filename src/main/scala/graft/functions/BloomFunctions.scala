@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expr}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.functions.{call_function, lit, xxhash64}
+import org.apache.spark.sql.functions.xxhash64
 
 /**
  * Column-level surface for Spark's own runtime-filter kernels
@@ -25,27 +26,18 @@ import org.apache.spark.sql.functions.{call_function, lit, xxhash64}
  */
 object BloomFunctions {
 
-  /** Idempotent per-session registration ([[GraftFunctions.ensureTemp]]
-   * carries the shared per-name guard). */
-  def register(spark: SparkSession): Unit = {
-    GraftFunctions.ensureTemp(spark, "bloom_agg")(
-      exprs => BloomFilterAggregate(exprs(0), exprs(1), exprs(2), 0, 0))
-    GraftFunctions.ensureTemp(spark, "bloom_contains")(
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)))
-  }
-
   /** Aggregate `key` into Bloom-filter bytes sized for `expectedItems`
    * distinct keys at ~10 bits/key (≈1% fpp), capped at 2^26 bits (8 MiB,
-   * the built-in rule's default ceiling) — requires [[register]]. */
+   * the built-in rule's default ceiling). */
   def bloomAgg(key: Column, expectedItems: Long): Column = {
     val items = math.max(expectedItems, 1L)
     val bits = math.min(items * 10L, 1L << 26)
-    call_function("bloom_agg", xxhash64(key), lit(items), lit(bits))
+    column(BloomFilterAggregate(expr(xxhash64(key)), Literal(items), Literal(bits), 0, 0)
+      .toAggregateExpression())
   }
 
   /** Codegen membership probe of `key` against serialized filter bytes
-   * (false positives possible, false negatives never) — requires
-   * [[register]]. */
+   * (false positives possible, false negatives never). */
   def bloomContains(filterBytes: Array[Byte], key: Column): Column =
-    call_function("bloom_contains", lit(filterBytes), xxhash64(key))
+    column(BloomFilterMightContain(Literal(filterBytes), expr(xxhash64(key))))
 }

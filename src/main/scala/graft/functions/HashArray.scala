@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expr}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /**
@@ -148,24 +148,9 @@ object HashArray {
     new GenericArrayData(out)
   }
 
-  /** Idempotent per-session registration. Each name carries its OWN
-   * guard via [[GraftFunctions.ensureTemp]] (ADVICE r13: keying both
-   * on `xxhash64_array` would skip the hi32 registration in a session
-   * where only the base function pre-exists, and the verify prefilter
-   * would then fail at analysis with an unresolved function). */
-  def register(spark: SparkSession): Unit = {
-    GraftFunctions.ensureTemp(spark, "xxhash64_array")(
-      exprs => XxHash64ArrayExpr(exprs(0)))
-    GraftFunctions.ensureTemp(spark, "xxhash64_array_hi32")(
-      exprs => XxHash64ArrayHi32Expr(exprs(0)))
-  }
+  /** Elementwise xxhash64 of a string-array column. */
+  def arrayHash(c: Column): Column = column(XxHash64ArrayExpr(expr(c)))
 
-  /** Elementwise xxhash64 of a string-array column — requires
-   * [[register]] on the column's session. */
-  def arrayHash(c: Column): Column = call_function("xxhash64_array", c)
-
-  /** Elementwise high-32-bit xxhash64 as array<int> — requires
-   * [[register]]. */
-  def arrayHashHi32(c: Column): Column =
-    call_function("xxhash64_array_hi32", c)
+  /** Elementwise high-32-bit xxhash64 as array<int>. */
+  def arrayHashHi32(c: Column): Column = column(XxHash64ArrayHi32Expr(expr(c)))
 }

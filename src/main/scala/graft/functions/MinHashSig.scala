@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expr}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /**
@@ -112,13 +112,6 @@ case class MinHashSigExpr(child: Expression) extends UnaryExpression {
 }
 
 object MinHashSig {
-  /** Idempotent per-session registration ([[GraftFunctions.ensureTemp]]
-   * carries the shared per-name guard). */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.ensureTemp(spark, "minhash_sig")(
-      exprs => MinHashSigExpr(exprs(0)))
-
-  /** 32-long MinHash signature of an array<bigint> column — requires
-   * [[register]]. */
-  def sig(hh: Column): Column = call_function("minhash_sig", hh)
+  /** 32-long MinHash signature of an array<bigint> column. */
+  def sig(hh: Column): Column = column(MinHashSigExpr(expr(hh)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expr}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -100,19 +100,6 @@ object Shingles {
     new GenericArrayData(out)
   }
 
-  /** Idempotent per-session registration ([[GraftFunctions.ensureTemp]]
-   * carries the shared per-name guard). */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.ensureTemp(spark, "word_shingles")(
-      exprs => WordShinglesExpr(exprs(0),
-        exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"word_shingles: n must be an integer literal, got $other")
-        }))
-
-  /** Distinct n-gram shingles of a token-array column — requires
-   * [[register]]. */
-  def of(toks: Column, n: Int): Column =
-    call_function("word_shingles", toks, lit(n))
+  /** Distinct n-gram shingles of a token-array column. */
+  def of(toks: Column, n: Int): Column = column(WordShinglesExpr(expr(toks), n))
 }

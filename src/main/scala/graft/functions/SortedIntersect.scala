@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expr}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /**
@@ -142,14 +142,7 @@ object SortedIntersect {
     c
   }
 
-  /** Idempotent per-session registration ([[GraftFunctions.ensureTemp]]
-   * carries the shared per-name guard). */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.ensureTemp(spark, "sorted_long_intersect")(
-      exprs => SortedLongIntersectExpr(exprs(0), exprs(1)))
-
-  /** Distinct-intersection count of two sorted array<long> columns —
-   * requires [[register]] on the columns' session. */
+  /** Distinct-intersection count of two sorted array<long> columns. */
   def of(a: Column, b: Column): Column =
-    call_function("sorted_long_intersect", a, b)
+    column(SortedLongIntersectExpr(expr(a), expr(b)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expr}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -231,27 +231,11 @@ object SubstrHash {
     new GenericArrayData(out)
   }
 
-  /** Idempotent per-session registration ([[GraftFunctions.ensureTemp]]
-   * carries the shared per-name guard). */
-  def register(spark: SparkSession): Unit = {
-    def kLit(e: Expression, fn: String): Int = e match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"$fn: k must be an integer literal, got $other")
-    }
-    GraftFunctions.ensureTemp(spark, "substr_hash_windows")(
-      exprs => SubstrHashWindowsExpr(exprs(0),
-        kLit(exprs(1), "substr_hash_windows")))
-    GraftFunctions.ensureTemp(spark, "substr_hash_windows_rle")(
-      exprs => SubstrHashWindowsRleExpr(exprs(0),
-        kLit(exprs(1), "substr_hash_windows_rle")))
-  }
-
-  /** All k-char window hashes of a string column — requires [[register]]. */
+  /** All k-char window hashes of a string column. */
   def windows(text: Column, k: Int): Column =
-    call_function("substr_hash_windows", text, lit(k))
+    column(SubstrHashWindowsExpr(expr(text), k))
 
-  /** Per-row sorted-RLE gram multiset — requires [[register]]. */
+  /** Per-row sorted-RLE gram multiset. */
   def windowsRle(text: Column, k: Int): Column =
-    call_function("substr_hash_windows_rle", text, lit(k))
+    column(SubstrHashWindowsRleExpr(expr(text), k))
 }

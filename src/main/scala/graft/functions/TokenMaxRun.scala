@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expr}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -96,13 +96,6 @@ object TokenMaxRun {
     best
   }
 
-  /** Idempotent per-session registration ([[GraftFunctions.ensureTemp]]
-   * carries the shared per-name guard). */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.ensureTemp(spark, "token_max_run")(
-      exprs => TokenMaxRunExpr(exprs(0)))
-
-  /** Most-repeated-element count of a string-array column — requires
-   * [[register]]. */
-  def maxRunCol(toks: Column): Column = call_function("token_max_run", toks)
+  /** Most-repeated-element count of a string-array column. */
+  def maxRunCol(toks: Column): Column = column(TokenMaxRunExpr(expr(toks)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expr}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /**
@@ -88,30 +88,21 @@ case class FloatVecDot(left: Expression, right: Expression)
   override def prettyName: String = "vec_dot"
 }
 
-/** Registration + Column-level API for the graft vector kernels. */
+/** Column-level API for the graft vector kernels (any session; the
+ * SQL names live in [[graft.GraftExtensions]]). */
 object VectorFunctions {
 
-  /** Idempotent per-session registration ([[GraftFunctions.ensureTemp]]
-   * carries the shared per-name guard and its rationale). */
-  def register(spark: SparkSession): Unit = {
-    GraftFunctions.ensureTemp(spark, "vec_dot")(
-      exprs => FloatVecDot(exprs(0), exprs(1)))
-    GraftFunctions.ensureTemp(spark, "vec_cosine")(
-      exprs => FloatVecCosine(exprs(0), exprs(1)))
-    GraftFunctions.ensureTemp(spark, "int8_coarse_cos")(
-      exprs => Int8CoarseCos(exprs(0), exprs(1), exprs(2)))
-  }
+  /** dot(a, b) over array<float> columns. */
+  def vecDot(a: Column, b: Column): Column = column(FloatVecDot(expr(a), expr(b)))
 
-  /** dot(a, b) over array<float> columns — requires [[register]]. */
-  def vecDot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-
-  /** cosine(a, b) over array<float> columns — requires [[register]]. */
-  def vecCosine(a: Column, b: Column): Column = call_function("vec_cosine", a, b)
+  /** cosine(a, b) over array<float> columns. */
+  def vecCosine(a: Column, b: Column): Column =
+    column(FloatVecCosine(expr(a), expr(b)))
 
   /** Quantized coarse cosine: int8-quantize `a`, dot against the
-   * pre-quantized probe `qp` with self-dot `pqq` — requires [[register]]. */
+   * pre-quantized probe `qp` with self-dot `pqq`. */
   def int8CoarseCos(a: Column, qp: Column, pqq: Column): Column =
-    call_function("int8_coarse_cos", a, qp, pqq)
+    column(Int8CoarseCos(expr(a), expr(qp), expr(pqq)))
 }
 
 /**

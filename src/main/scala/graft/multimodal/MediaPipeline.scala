@@ -108,7 +108,7 @@ object MediaPipeline {
    * decoded BMP raster, each patch reduced to the exact integer sum and
    * count of its RGB bytes and their mean — the per-patch feature that
    * feeds the embedding/ANN path (q_media_patchify casts the g² means
-   * to a float vector and runs it through the registered vec_cosine
+   * to a float vector and runs it through the vec_cosine
    * kernel). Pixel p=(x,y) lands in grid cell (⌊x·g/w⌋, ⌊y·g/h⌋) —
    * pure integer arithmetic the SQL oracle replays; sums are exact
    * Longs (≤ 255·3wh), the mean is one well-defined double division.

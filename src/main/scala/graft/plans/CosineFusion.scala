@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Divide, Multiply, Sqrt}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -22,7 +21,7 @@ import graft.functions.{FloatVecCosine, FloatVecDot}
  * the norm product are accepted. This is the pattern-level analog of
  * what a physical fusion pass in a native engine would do — expressed
  * as a ~20-line Catalyst `Rule[LogicalPlan]` on the optimizer, injected
- * via `experimental.extraOptimizations`.
+ * by [[graft.GraftExtensions]].
  */
 object CosineFusionRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
@@ -35,10 +34,4 @@ object CosineFusionRule extends Rule[LogicalPlan] {
               (a.semanticEquals(b1) && b.semanticEquals(a1))) =>
         FloatVecCosine(a, b)
     }
-
-  /** Idempotent per-session injection. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(CosineFusionRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ CosineFusionRule
 }

@@ -277,7 +277,6 @@ object Advanced {
     // cells-only partition pruning on the serve plan.
     QueryDef("q_knn_ivf_kmeans",
       (s, dir) => {
-        graft.functions.VectorFunctions.register(s)
         val e = Q.rd(s, dir, "embeddings")
         val probe = e.filter(col("vec_id") === 0)
           .select(col("embedding").as("pe"))
@@ -337,7 +336,6 @@ object Advanced {
    * cells), so the GATE wraps it in the exact+recall_ok oracle above;
    * AnnRecallSpec and the pruning spec drive this directly. */
   private[graft] def ivfKmeansServe(s: SparkSession, dir: String): DataFrame = {
-        graft.functions.VectorFunctions.register(s)
         // md5 dirTag, not dir.hashCode (r18 ADVICE): a 32-bit tag
         // collision shared this prefix between two corpora, letting
         // each one's post-publish sweep delete the other's index —
@@ -526,7 +524,7 @@ object Advanced {
     // "what's missing" 3): every image doc's decoded BMP raster cut by
     // a fixed 2×2 grid (MediaPipeline.patchify — partition-local, exact
     // integer byte sums per cell), the four patch means assembled into
-    // a float vector, and that vector fed straight into the registered
+    // a float vector, and that vector fed straight into the
     // vec_cosine codegen kernel against the all-ones reference — the
     // "flatness" score (how uniform the patches are), i.e. the decoded
     // pixels genuinely entering the embedding/vector path. NOT
@@ -538,7 +536,6 @@ object Advanced {
     QueryDef("q_media_patchify",
       (s, dir) => {
         import s.implicits._
-        graft.functions.VectorFunctions.register(s)
         val items = graft.multimodal.MediaPipeline
           .itemsFromDocuments(s, dir, onlyKind = Some("image"))
         val ones = typedLit(Array(1f, 1f, 1f, 1f))
@@ -608,7 +605,6 @@ object Advanced {
     QueryDef("q_media_audio_frames",
       (s, dir) => {
         import s.implicits._
-        graft.functions.VectorFunctions.register(s)
         val items = graft.multimodal.MediaPipeline
           .itemsFromDocuments(s, dir, onlyKind = Some("audio"))
         val ones = typedLit(Array(1f, 1f, 1f, 1f))
@@ -733,7 +729,6 @@ object Advanced {
     // count to size the filter, the filter bytes themselves).
     QueryDef("q_bloom_join",
       (s, dir) => {
-        graft.functions.BloomFunctions.register(s)
         val dim = rd(s, dir, "customer")
           .filter(col("c_mktsegment") === "BUILDING")
           .select(col("c_custkey"))
@@ -1067,7 +1062,6 @@ object Advanced {
     QueryDef("q_substr_dedup",
       (s, dir) => {
         val k = 30
-        graft.functions.SubstrHash.register(s)
         // docs shorter than k have no windows (the kernel returns an
         // empty array for them too; the guard keeps intent visible)
         val docs = rd(s, dir, "documents")
@@ -1237,7 +1231,6 @@ object Advanced {
     // the same (cos DESC, vec_id) tie-break.
     QueryDef("q_ann_recall",
       (s, dir) => {
-        graft.functions.VectorFunctions.register(s)
         val bucket = (c: String) =>
           expr(s"""CAST(element_at($c, 1) > 0 AS INT)
                   |+ 2 * CAST(element_at($c, 2) > 0 AS INT)

@@ -40,7 +40,6 @@ object Curation {
     // on the real corpus).
     QueryDef("q_gopher_rules",
       (s, dir) => {
-        graft.functions.TokenMaxRun.register(s)
         rd(s, dir, "documents")
           .withColumn("toks", split(col("text"), " "))
           .withColumn("n_words", size(col("toks")).cast("long"))

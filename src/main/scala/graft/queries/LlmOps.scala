@@ -55,7 +55,6 @@ object LlmOps {
    * measured ~5x slower; see neardupPairs), via the codegen kernel
    * (r16 — the composite lambda ran interpreted per token pair). */
   private def bigramStream(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.BigramHashes.register(s)
     rd(s, dir, "documents")
       .select(col("doc_id"), toks(col("text")).as("ts"))
       .select(col("doc_id"),
@@ -206,7 +205,6 @@ object LlmOps {
    * this projection keeps the expensive tokenize+shingle off
    * non-candidate rows; placed after, every corpus row would pay it). */
   private[graft] def shingled(docs: DataFrame): DataFrame = {
-    graft.functions.Shingles.register(docs.sparkSession)
     docs.withColumn("toks", toks(col("text")))
       .withColumn("sh", graft.functions.Shingles.of(col("toks"), 3))
       .select("doc_id", "sh")
@@ -218,7 +216,6 @@ object LlmOps {
    * permutation minima into one state. Shared by neardupPairs (LSH
    * banding) and q_minhash_est (estimator accuracy pin). */
   private def minhashSigs(docs: DataFrame): DataFrame = {
-    graft.functions.HashArray.register(docs.sparkSession)
     // n_sh rides the same aggregation: explode emits one row per
     // shingle (sh is distinct), so count(1) is EXACTLY |sh| — the
     // length-filter bound travels with the signature and no consumer
@@ -247,8 +244,6 @@ object LlmOps {
    * text_hash rides the groupBy key (functionally dependent on doc_id,
    * so cardinality is unchanged) rather than a post-hoc join. */
   private[graft] def sigsPlanFor(docs: DataFrame): DataFrame = {
-    graft.functions.HashArray.register(docs.sparkSession)
-    graft.functions.Shingles.register(docs.sparkSession)
     docs
       .withColumn("toks", toks(col("text")))
       .withColumn("sh", graft.functions.Shingles.of(col("toks"), 3))
@@ -479,9 +474,6 @@ object LlmOps {
   private def verifyCandidates[T](cand0: DataFrame, threshold: Double,
                                   docsFor: DataFrame => DataFrame)
                                  (use: DataFrame => T): T = {
-    val s = cand0.sparkSession
-    graft.functions.HashArray.register(s)
-    graft.functions.SortedIntersect.register(s)
     val cand = cand0.cache()
     val ids = cand.select(col("a_id").as("doc_id"))
       .union(cand.select(col("b_id").as("doc_id"))).distinct()
@@ -534,8 +526,7 @@ object LlmOps {
   /** Sequential-fold double dot product over two float arrays, via the
    * codegen [[graft.functions.FloatVecDot]] kernel (bit-identical to the
    * zip_with/aggregate HOF fold and to the oracle's list_dot_product
-   * over double-cast lists, ~20x faster). Callers register the function
-   * per session via [[vecReady]]. */
+   * over double-cast lists, ~20x faster). */
   private def dot(a: String, b: String): Column =
     graft.functions.VectorFunctions.vecDot(col(a), col(b))
 
@@ -546,10 +537,6 @@ object LlmOps {
    * traffic (one fused loop instead of three). */
   private def cosine(a: String, b: String): Column =
     graft.functions.VectorFunctions.vecCosine(col(a), col(b))
-
-  /** register the vec_dot kernel in this session (idempotent) */
-  private def vecReady(s: SparkSession): Unit =
-    graft.functions.VectorFunctions.register(s)
 
   /** q_semdedup's hot-cluster split threshold: clusters past this many
    * rows subdivide through [[graft.plans.Salting.saltedSelfSides]]
@@ -851,8 +838,6 @@ object LlmOps {
         // instead of array_intersect's per-row hash-set build.
         // 64-bit collisions across a corpus's distinct shingles are
         // ~1e-9-probability; the sf0.01 oracle pass pins the actual data.
-        graft.functions.HashArray.register(s)
-        graft.functions.SortedIntersect.register(s)
         // cached: feeds the maxK driver scalar's own action plus three
         // branches of the final plan (ex derivation + both verify
         // sides) — uncached, the scan + shingle + hash prefix re-ran
@@ -1129,7 +1114,6 @@ object LlmOps {
     // ---- vector sanity: dims, norms ----------------------------------
     QueryDef("q_vec_norm",
       (s, dir) => {
-        vecReady(s)
         rd(s, dir, "embeddings")
           .select(col("vec_id"),
             size(col("embedding")).cast("int").as("dim"),
@@ -1193,7 +1177,6 @@ object LlmOps {
     // One scan, map-side scoring, TakeOrdered(10): no shuffle of vectors.
     QueryDef("q_knn_cosine",
       (s, dir) => {
-        vecReady(s)
         val e = rd(s, dir, "embeddings")
         val probe = e.filter(col("vec_id") === 0)
           .select(col("embedding").as("pe"))
@@ -1216,7 +1199,6 @@ object LlmOps {
     // once no matter how many probes ride along.
     QueryDef("q_knn_batch",
       (s, dir) => {
-        vecReady(s)
         val e = rd(s, dir, "embeddings")
         val probes = e.filter(col("vec_id") < 5)
           .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
@@ -1251,7 +1233,6 @@ object LlmOps {
     // ---- IVF-style bucketed ANN: probe only the matching LSH cell ----
     QueryDef("q_knn_ivf",
       (s, dir) => {
-        vecReady(s)
         val e = rd(s, dir, "embeddings").withColumn("bucket", signBucket("embedding"))
         val probe = e.filter(col("vec_id") === 0)
           .select(col("embedding").as("pe"), col("bucket").as("pb"))
@@ -1276,7 +1257,6 @@ object LlmOps {
     // bucket count, never global N².
     QueryDef("q_cosine_pairs",
       (s, dir) => {
-        vecReady(s)
         val e = rd(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"), signBucket("embedding").as("bucket"))
         // hot-bucket split + merge pin, the semdedupDropped posture
@@ -1698,7 +1678,6 @@ object LlmOps {
         val docs = docsWithShingles(s, dir).cache()
         val fresh = docs.filter(col("doc_id") % 10 === 0)
         val corpus = docs.filter(col("doc_id") % 10 =!= 0)
-        graft.functions.HashArray.register(s)
         val sig = (d: DataFrame) => {
           val ex = d.select(col("doc_id"),
             explode(graft.functions.HashArray.arrayHash(col("sh"))).as("h"))
@@ -1762,8 +1741,6 @@ object LlmOps {
         // the real shape — the eval set is a separate small table
         // hash inside the array, explode longs (see neardupPairs: string
         // Generate output measured ~5x slower than 8-byte longs)
-        graft.functions.HashArray.register(s)
-        graft.functions.Shingles.register(s)
         def shingleHashes(pred: org.apache.spark.sql.Column) =
           rd(s, dir, "documents").filter(pred)
             .withColumn("toks", toks(col("text")))
@@ -1807,7 +1784,6 @@ object LlmOps {
     // hit counts, and max similarities all hash-compare.
     QueryDef("q_semantic_decon",
       (s, dir) => {
-        vecReady(s)
         val e = rd(s, dir, "embeddings")
         val eval_ = e.filter(col("vec_id") % 100 === 0)
           .select(col("vec_id").as("eval_id"), col("embedding").as("pe"))
@@ -2112,7 +2088,6 @@ object LlmOps {
     // TakeOrdered pass with the codegen cosine kernel.
     QueryDef("q_knn_filtered",
       (s, dir) => {
-        vecReady(s)
         val e = rd(s, dir, "embeddings")
         val probe = e.filter(col("vec_id") === 0)
           .select(col("embedding").as("pe"))
@@ -2147,7 +2122,6 @@ object LlmOps {
     // once for the pin.
     QueryDef("q_hard_negatives",
       (s, dir) => {
-        vecReady(s)
         val e = rd(s, dir, "embeddings")
         val anchors = e.filter(col("vec_id") < 5)
           .select(col("vec_id").as("probe_id"), col("label").as("plabel"),
@@ -2204,7 +2178,6 @@ object LlmOps {
     // id sum).
     QueryDef("q_semdedup",
       (s, dir) => {
-        vecReady(s)
         val e = rd(s, dir, "embeddings").select("vec_id", "label", "embedding")
         val dropped = semdedupDropped(e, SEMDEDUP_SPLIT)
         e.groupBy("label").agg(count(lit(1)).as("n_vecs"))
@@ -2397,7 +2370,6 @@ object LlmOps {
     // pins the end-to-end recall@10 vs the brute-force path.
     QueryDef("q_knn_rerank",
       (s, dir) => {
-        vecReady(s)
         val quantize = expr(
           """transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) *
             |  (CASE WHEN max_abs = 0.0 THEN 0.0 ELSE 127.0 / max_abs END))
@@ -2481,7 +2453,6 @@ object LlmOps {
     // smaller vec_id); ROUND touches only display columns.
     QueryDef("q_mmr_rerank",
       (s, dir) => {
-        vecReady(s)
         import s.implicits._
         val e = rd(s, dir, "embeddings")
         val probe = e.filter(col("vec_id") === 0).select(col("embedding").as("pe"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import graft.chschema.{ClickHouseType, DdlRenderer}
 
@@ -18,6 +18,20 @@ object SchemaQueries {
     case ArrayType(et, _) => s"Nested(${chTypeName(et)})"
     case MapType(k, v, _) => s"Map(${chTypeName(k)}, ${chTypeName(v)})"
     case scalar => ClickHouseType.fromSpark(scalar, ClickHouseType.Legacy).name
+  }
+
+  /** The footer schema of `row` written as one parquet file. The file goes
+   * to a fresh temp dir per call (a fixed path could be read mid-write by
+   * a concurrent session: tests + Verify; the fixture is one row, so the
+   * rewrite costs nothing), deleted once the footer is read. */
+  private def footerSchema(s: SparkSession, prefix: String,
+                           schema: StructType, row: Row): StructType = {
+    val out = java.nio.file.Files.createTempDirectory(prefix)
+    try {
+      s.createDataFrame(java.util.List.of(row), schema)
+        .coalesce(1).write.mode("overwrite").parquet(out.toString)
+      s.read.parquet(out.toString).schema
+    } finally Q.deleteRecursively(out)
   }
 
   val defs: Vector[QueryDef] = Vector(
@@ -56,7 +70,6 @@ object SchemaQueries {
     QueryDef("ddl_nested",
       (s, dir) => {
         import s.implicits._
-        import org.apache.spark.sql.Row
         val fixtureSchema = StructType(Seq(
           StructField("a", IntegerType),
           StructField("b", StringType),
@@ -68,16 +81,7 @@ object SchemaQueries {
             StructField("a", StringType), StructField("b", StringType)))))))
         val row = Row(42, "ahmed", Row("foo", "bar"), Seq(Row("foo")),
           Map("x" -> Row("foo", "bar")))
-        // fresh temp dir per call: a fixed path could be read mid-write
-        // by a concurrent session (tests + Verify); the fixture is one
-        // row, so the rewrite costs nothing
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_nested_fixture").toString
-        val rows = new java.util.ArrayList[Row]()
-        rows.add(row)
-        s.createDataFrame(rows, fixtureSchema)
-          .coalesce(1).write.mode("overwrite").parquet(out)
-        val schema = s.read.parquet(out).schema
+        val schema = footerSchema(s, "graft_nested_fixture", fixtureSchema, row)
         val ddl = DdlRenderer.render(schema, "T", "foo")
         Seq(("arrow_nested", ddl)).toDF("table_name", "ddl")
       },
@@ -98,7 +102,6 @@ object SchemaQueries {
     QueryDef("ddl_extended",
       (s, dir) => {
         import s.implicits._
-        import org.apache.spark.sql.Row
         val fixtureSchema = StructType(Seq(
           StructField("id", LongType),
           StructField("event_date", DateType),
@@ -112,13 +115,7 @@ object SchemaQueries {
           java.time.LocalDateTime.of(2024, 3, 15, 12, 30, 45),
           new java.math.BigDecimal("1234.56"), 7.toByte, 300.toShort,
           Seq(1.5f, 2.5f), "news")
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_extended_fixture").toString
-        val rows = new java.util.ArrayList[Row]()
-        rows.add(row)
-        s.createDataFrame(rows, fixtureSchema)
-          .coalesce(1).write.mode("overwrite").parquet(out)
-        val schema = s.read.parquet(out).schema
+        val schema = footerSchema(s, "graft_extended_fixture", fixtureSchema, row)
         val ddl = DdlRenderer.render(schema, "events_ext", "id",
           mode = ClickHouseType.Extended,
           lowCardinality = Set("category"),

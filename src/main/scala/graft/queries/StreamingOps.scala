@@ -709,7 +709,6 @@ object StreamingOps {
     // streaming and batch implementations are pinned to each other.
     QueryDef("s_incr_dedup",
       (s, dir) => {
-        graft.functions.Shingles.register(s)
         val shingles = (df: DataFrame) => df
           .withColumn("toks", split(col("text"), " "))
           .withColumn("sh", graft.functions.Shingles.of(col("toks"), 3))
@@ -718,9 +717,7 @@ object StreamingOps {
         // transform+array_min rounds otherwise), banded 16x2 — band
         // values need only agree between the two sides, both of which
         // run THIS function
-        graft.functions.MinHashSig.register(s)
         val banded = (df: DataFrame) => {
-          graft.functions.HashArray.register(s)
           val sig = df.withColumn("sig", graft.functions.MinHashSig.sig(
             graft.functions.HashArray.arrayHash(col("sh"))))
           val bandCols = (0 until 16).map { b =>
@@ -812,7 +809,6 @@ object StreamingOps {
     // other through the same IEEE cosine replay.
     QueryDef("s_semantic_decon",
       (s, dir) => {
-        graft.functions.VectorFunctions.register(s)
         val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
         val fresh = s.readStream.schema(schema)
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)

@@ -217,10 +217,8 @@ object KnnGraphIndex {
    * PlanAuditSpec pins the build shape (TopKPerKey present, no
    * cartesian) on the plan that actually pays the cost, and so specs
    * can compare a k-filtered serve against a fresh compute. */
-  def buildPlan(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+  def buildPlan(s: SparkSession, dir: String): DataFrame =
     edgesFor(corpusVecs(s, dir))
-  }
 
   /** Write one published segment: `df` keeps its full data schema;
    * `pb` is a DIRECTORY copy of the bucket used only for layout.
@@ -268,7 +266,6 @@ object KnnGraphIndex {
   def edges(s: SparkSession, dir: String, k: Int = 2): DataFrame = {
     require(k >= 1 && k <= KMAX,
       s"edge index serves k in [1, $KMAX], got $k — raise KMAX to widen")
-    graft.functions.VectorFunctions.register(s)
     ManifestStore.sweepLegacyPrefixes(LEGACY)
     val st = store(dir)
     val stamp = Q.contentStamp(dir, "embeddings")

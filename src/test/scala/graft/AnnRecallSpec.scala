@@ -84,7 +84,6 @@ class AnnRecallSpec extends AnyFunSuite {
     // the probe's bucket — are verified by value here (and by the DuckDB
     // oracle row, which computes the same bucketed ranking in SQL).
     import org.apache.spark.sql.functions._
-    graft.functions.VectorFunctions.register(spark)
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
       .withColumn("bucket", expr(
         """CAST(element_at(embedding, 1) > 0 AS INT)

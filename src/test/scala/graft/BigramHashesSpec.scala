@@ -14,7 +14,6 @@ class BigramHashesSpec extends AnyFunSuite {
   import SparkTestBase.spark
 
   test("value parity with the composite expression on the real corpus") {
-    BigramHashes.register(spark)
     val n = spark.read.parquet(s"${SparkTestBase.sf}/documents.parquet")
       .withColumn("ts", split(col("text"), " "))
       .withColumn("k", BigramHashes.of(col("ts")))
@@ -25,7 +24,6 @@ class BigramHashesSpec extends AnyFunSuite {
   }
 
   test("short inputs yield empty; null array yields null; null token → seed") {
-    BigramHashes.register(spark)
     val r = spark.sql(
       """SELECT word_bigram_hashes(array('a')) AS a,
         |  word_bigram_hashes(CAST(NULL AS ARRAY<STRING>)) AS b,
@@ -43,7 +41,6 @@ class BigramHashesSpec extends AnyFunSuite {
   }
 
   test("kernel compiles under CODEGEN_ONLY (no silent fallback)") {
-    BigramHashes.register(spark)
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       val r = spark.sql(
@@ -54,7 +51,6 @@ class BigramHashesSpec extends AnyFunSuite {
   }
 
   test("non-array input is rejected") {
-    BigramHashes.register(spark)
     val ex = intercept[Exception] {
       spark.sql("SELECT word_bigram_hashes('abc')").collect()
     }

@@ -17,7 +17,6 @@ class BloomJoinSpec extends AnyFunSuite {
   import SparkTestBase.{spark, sf}
 
   test("bloom filter has zero false negatives and rejects most non-keys") {
-    graft.functions.BloomFunctions.register(spark)
     import spark.implicits._
     val keys = (1L to 1000L).toDF("k")
     val bytes = keys

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.VectorFunctions
-import graft.plans.CosineFusionRule
 
 /** The optimizer rule must turn the textbook composed cosine into the
  * fused kernel (plan-level), without changing a single output bit. */
@@ -11,8 +10,6 @@ class CosineFusionSpec extends AnyFunSuite {
   import SparkTestBase.{spark, sf}
 
   private def composed = {
-    VectorFunctions.register(spark)
-    CosineFusionRule.install(spark)
     val e = spark.read.parquet(s"$sf/embeddings.parquet").limit(50)
     val probe = e.filter(col("vec_id") === 0).select(col("embedding").as("pe"))
     def d(a: String, b: String) = VectorFunctions.vecDot(col(a), col(b))

@@ -12,7 +12,6 @@ class HashArraySpec extends AnyFunSuite {
   import SparkTestBase.spark
 
   test("elementwise parity with xxhash64, incl. multi-byte UTF-8 and empty string") {
-    HashArray.register(spark)
     val r = spark.sql(
       """SELECT xxhash64_array(array('a', 'bc', '', 'añejo', '日本語', 'the quick brown fox')) AS k,
         |  array(xxhash64('a'), xxhash64('bc'), xxhash64(''), xxhash64('añejo'),
@@ -23,7 +22,6 @@ class HashArraySpec extends AnyFunSuite {
   }
 
   test("parity against the transform-HOF formulation it replaced, on real shingles") {
-    HashArray.register(spark)
     val docs = spark.read.parquet(s"${SparkTestBase.sf}/documents.parquet")
       .withColumn("toks", split(col("text"), " "))
       .withColumn("sh", expr(graft.queries.LlmOps.shingleExpr))
@@ -37,7 +35,6 @@ class HashArraySpec extends AnyFunSuite {
   }
 
   test("null element hashes to the seed; empty array stays empty; null array is null") {
-    HashArray.register(spark)
     val r = spark.sql(
       """SELECT xxhash64_array(array('x', CAST(NULL AS STRING))) AS a,
         |  xxhash64_array(CAST(array() AS ARRAY<STRING>)) AS b,
@@ -48,7 +45,6 @@ class HashArraySpec extends AnyFunSuite {
   }
 
   test("hi32 variant: elementwise high word of xxhash64, null element from the seed") {
-    HashArray.register(spark)
     val r = spark.sql(
       """SELECT xxhash64_array_hi32(array('a', '', '日本語', CAST(NULL AS STRING))) AS k,
         |  array(xxhash64('a'), xxhash64(''), xxhash64('日本語')) AS w""".stripMargin)
@@ -61,7 +57,6 @@ class HashArraySpec extends AnyFunSuite {
   }
 
   test("kernel compiles under CODEGEN_ONLY (no silent fallback)") {
-    HashArray.register(spark)
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       val r = spark.sql(
@@ -71,29 +66,10 @@ class HashArraySpec extends AnyFunSuite {
   }
 
   test("non-array input is rejected") {
-    HashArray.register(spark)
     val ex = intercept[Exception] {
       spark.sql("SELECT xxhash64_array('abc')").collect()
     }
     assert(ex.getMessage.contains("xxhash64_array") ||
       ex.getMessage.toLowerCase.contains("datatype_mismatch"))
-  }
-
-  test("register repairs a session where only the base function pre-exists") {
-    // ADVICE r13: a registration keyed solely on xxhash64_array's
-    // existence would silently skip hi32 in a session that already
-    // carries the base name — each name must guard itself
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    HashArray.register(spark)
-    val reg = spark.sessionState.functionRegistry
-    reg.dropFunction(FunctionIdentifier("xxhash64_array_hi32"))
-    assert(!reg.functionExists(FunctionIdentifier("xxhash64_array_hi32")))
-    assert(reg.functionExists(FunctionIdentifier("xxhash64_array")))
-    HashArray.register(spark)
-    assert(reg.functionExists(FunctionIdentifier("xxhash64_array_hi32")),
-      "hi32 registration must not be keyed on the base function's existence")
-    val r = spark.sql(
-      "SELECT xxhash64_array_hi32(array('a')) AS k").head().getSeq[Int](0)
-    assert(r.length == 1)
   }
 }

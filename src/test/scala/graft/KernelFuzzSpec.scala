@@ -18,9 +18,6 @@ import org.apache.spark.sql.functions._
 class KernelFuzzSpec extends AnyFunSuite {
   import SparkTestBase.spark
 
-  graft.functions.Shingles.register(spark)
-  graft.functions.HashArray.register(spark)
-
   private def check(prop: Prop): Unit = {
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(40), prop)
@@ -68,7 +65,6 @@ class KernelFuzzSpec extends AnyFunSuite {
   }
 
   test("substr_hash_windows rolling algebra matches independent window hashes on unicode") {
-    graft.functions.SubstrHash.register(spark)
     val strGen: Gen[String] = Gen.choose(0, 12)
       .flatMap(n => Gen.listOfN(n, tokGen)).map(_.mkString)
     check(Prop.forAll(strGen, strGen) { (s1, s2) =>
@@ -96,7 +92,6 @@ class KernelFuzzSpec extends AnyFunSuite {
   }
 
   test("substr_hash_windows_rle ≡ sorted multiset of substr_hash_windows on generated unicode") {
-    graft.functions.SubstrHash.register(spark)
     val strGen: Gen[String] = Gen.choose(0, 12)
       .flatMap(n => Gen.listOfN(n, tokGen)).map(_.mkString)
     check(Prop.forAll(strGen) { s =>
@@ -117,7 +112,6 @@ class KernelFuzzSpec extends AnyFunSuite {
   }
 
   test("token_max_run ≡ the Gopher lambda on generated arrays with nulls") {
-    graft.functions.TokenMaxRun.register(spark)
     // the lambda's null contract is subtle (x = t never true for null;
     // array_max ignores the null transform slots) — fuzz it alongside
     // the unicode/collision pool the other kernels use
@@ -143,7 +137,6 @@ class KernelFuzzSpec extends AnyFunSuite {
   }
 
   test("word_bigram_hashes ≡ the composite lambda on generated arrays with nulls") {
-    graft.functions.BigramHashes.register(spark)
     // the r16 kernel's null contract: a null-adjacent pair hashes to
     // xxhash64's seed (concat → null, xxhash64(null) passes the seed
     // through), a null ARRAY yields null, < 2 tokens an empty array —

@@ -252,7 +252,6 @@ class KnnGraphIndexSpec extends AnyFunSuite {
           |+ 8 * CAST(element_at(embedding, 4) > 0 AS INT) AS bucket""".stripMargin)
       .cache()
     try {
-      graft.functions.VectorFunctions.register(spark)
       val hotN = corpus.filter(col("bucket") === 15).count()
       assert(hotN >= 300L, s"plant failed: bucket 15 has $hotN rows")
       // the contract: the edge set is ROW-identical with and without

@@ -35,8 +35,7 @@ class MinHashAggSpec extends AnyFunSuite {
     assert(agree(sig(1L), sig(3L)) <= 5)  // disjoint sets → few/no collisions
   }
 
-  test("registerAll exposes the aggregators to pure SQL") {
-    graft.functions.GraftFunctions.registerAll(spark)
+  test("the session exposes the aggregators to pure SQL") {
     val df = spark.read.parquet(s"$sf/documents.parquet").limit(20)
     df.createOrReplaceTempView("gf_docs")
     val r = spark.sql(
@@ -50,11 +49,10 @@ class MinHashAggSpec extends AnyFunSuite {
     assert(r.forall(_.getSeq[Long](1).length == 32))
   }
 
-  test("registerAll exposes the WHOLE kit, as its doc promises") {
-    // six modules with a register(spark) were missing until the r18
+  test("the session exposes the WHOLE kit to pure SQL") {
+    // six modules were missing from the SQL surface until the r18
     // review — a pure-SQL user got 'Undefined function' for functions
     // the scaladoc promised
-    graft.functions.GraftFunctions.registerAll(spark)
     val r = spark.sql(
       """SELECT
         |  size(word_shingles(array('a','b','c','d'), 3)) AS sh,
@@ -71,7 +69,6 @@ class MinHashAggSpec extends AnyFunSuite {
     // pre-r18: a null key crashed HeavyHittersAgg's buffer encoder
     // (Catalyst map keys are non-nullable) and simhash32 NPE'd on
     // md5(NULL); both now skip null like the expressions they replace
-    graft.functions.GraftFunctions.registerAll(spark)
     val r = spark.sql(
       """SELECT simhash32(md5(tok)) AS sh
         |FROM VALUES ('a'), (CAST(NULL AS STRING)), ('a') AS t(tok)"""

@@ -14,7 +14,6 @@ class MinHashSigSpec extends AnyFunSuite {
     expr(s"array_min(transform(hh, h -> xxhash64(h, ${k}L)))")
 
   test("kernel equals the 32 HOF slots on every corpus document") {
-    MinHashSig.register(spark)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .withColumn("toks", split(col("text"), " "))
       .withColumn("sh", expr(graft.queries.LlmOps.shingleExpr))
@@ -27,7 +26,6 @@ class MinHashSigSpec extends AnyFunSuite {
   }
 
   test("empty and null shingle arrays give a null signature") {
-    MinHashSig.register(spark)
     val r = spark.sql(
       """SELECT minhash_sig(CAST(array() AS ARRAY<BIGINT>)) AS a,
         |       minhash_sig(CAST(NULL AS ARRAY<BIGINT>)) AS b""".stripMargin)
@@ -36,7 +34,6 @@ class MinHashSigSpec extends AnyFunSuite {
   }
 
   test("kernel compiles under CODEGEN_ONLY (no silent fallback)") {
-    MinHashSig.register(spark)
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       val r = spark.sql(
@@ -46,7 +43,6 @@ class MinHashSigSpec extends AnyFunSuite {
   }
 
   test("non-long input is rejected at analysis") {
-    MinHashSig.register(spark)
     val ex = intercept[Exception] {
       spark.sql("SELECT minhash_sig(array('a', 'b'))").collect()
     }

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -40,5 +41,22 @@ class NestedDdlGateSpec extends AnyFunSuite {
         |) engine = MergeTree() primary key (foo);
         |""".stripMargin
     assert(rows(0).getString(1) == expected)
+  }
+
+  test("ddl_nested and ddl_extended leave no fixture dir in java.io.tmpdir") {
+    // each call writes its one-row fixture to a fresh temp dir; the
+    // benchmark counts every file under its tmpdir as artifact size
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def fixtures(): Set[String] = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("graft_") && n.contains("_fixture")).toSet
+      finally ls.close()
+    }
+    val before = fixtures()
+    for (_ <- 1 to 2; name <- Seq("ddl_nested", "ddl_extended"))
+      assert(SparkEntry.queries(name)(spark, sf).collect().length == 1)
+    val added = fixtures() -- before
+    assert(added.isEmpty, s"fixture dirs left behind: $added")
   }
 }

@@ -27,7 +27,6 @@ class SaltingSpec extends AnyFunSuite {
     .cache()
 
   test("hot-cluster split: semdedup dropped set ≡ unsplit; sub-tasks bounded; cold clusters whole") {
-    graft.functions.VectorFunctions.register(spark)
     val hotN = corpus.filter(col("label") === 7).count()
     assert(hotN == 300L, s"plant failed: cluster 7 has $hotN rows")
 
@@ -107,7 +106,6 @@ class SaltingSpec extends AnyFunSuite {
     // and the downstream semantics are unchanged: the semdedup join
     // shape (ai < bi orientation + distinct) over the grid sides
     // equals the unsplit join's output
-    graft.functions.VectorFunctions.register(spark)
     def dropped(a0: org.apache.spark.sql.DataFrame,
                 b0: org.apache.spark.sql.DataFrame): Seq[String] = {
       val a = a0.select(col("label"), col("sub"), col("vec_id").as("ai"),

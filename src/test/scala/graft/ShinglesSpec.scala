@@ -13,7 +13,6 @@ class ShinglesSpec extends AnyFunSuite {
   import SparkTestBase.spark
 
   test("value and order parity with the composite expression on the real corpus") {
-    Shingles.register(spark)
     val n = spark.read.parquet(s"${SparkTestBase.sf}/documents.parquet")
       .withColumn("toks", split(col("text"), " "))
       .withColumn("k", Shingles.of(col("toks"), 3))
@@ -24,7 +23,6 @@ class ShinglesSpec extends AnyFunSuite {
   }
 
   test("short inputs yield empty; null array yields null; null token joins as absent") {
-    Shingles.register(spark)
     val r = spark.sql(
       """SELECT word_shingles(array('a', 'b'), 3) AS a,
         |  word_shingles(CAST(NULL AS ARRAY<STRING>), 3) AS b,
@@ -39,14 +37,12 @@ class ShinglesSpec extends AnyFunSuite {
   }
 
   test("duplicate grams dedup in first-occurrence order") {
-    Shingles.register(spark)
     val r = spark.sql(
       "SELECT word_shingles(array('a','b','a','b','a','b'), 3) AS s").head()
     assert(r.getSeq[String](0) == Seq("a b a", "b a b"))
   }
 
   test("kernel compiles under CODEGEN_ONLY (no silent fallback)") {
-    Shingles.register(spark)
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       val r = spark.sql(
@@ -57,7 +53,6 @@ class ShinglesSpec extends AnyFunSuite {
   }
 
   test("non-array input and non-literal n are rejected") {
-    Shingles.register(spark)
     val ex = intercept[Exception] {
       spark.sql("SELECT word_shingles('abc', 3)").collect()
     }

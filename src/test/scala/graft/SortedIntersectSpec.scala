@@ -18,7 +18,6 @@ class SortedIntersectSpec extends AnyFunSuite {
   import SparkTestBase.spark
 
   test("parity with size(array_intersect) on sorted arrays, incl. duplicate runs") {
-    SortedIntersect.register(spark)
     val cases = Seq(
       // (a, b) — both sorted ascending; duplicates allowed
       (Seq(1L, 2L, 3L), Seq(2L, 3L, 4L)),
@@ -41,7 +40,6 @@ class SortedIntersectSpec extends AnyFunSuite {
   }
 
   test("int-array variant: parity with size(array_intersect), incl. negatives and dups") {
-    SortedIntersect.register(spark)
     val cases = Seq(
       (Seq(1, 2, 3), Seq(2, 3, 4)),
       (Seq.empty[Int], Seq(1, 2)),
@@ -64,9 +62,6 @@ class SortedIntersectSpec extends AnyFunSuite {
   }
 
   test("parity on real hashed shingle arrays across the corpus") {
-    SortedIntersect.register(spark)
-    graft.functions.HashArray.register(spark)
-    graft.functions.Shingles.register(spark)
     val docs = spark.read.parquet(s"${SparkTestBase.sf}/documents.parquet")
       .withColumn("toks", split(col("text"), " "))
       .withColumn("sh", graft.functions.Shingles.of(col("toks"), 3))
@@ -85,7 +80,6 @@ class SortedIntersectSpec extends AnyFunSuite {
   }
 
   test("kernel compiles under CODEGEN_ONLY (no silent fallback)") {
-    SortedIntersect.register(spark)
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       val r = spark.sql(
@@ -96,7 +90,6 @@ class SortedIntersectSpec extends AnyFunSuite {
   }
 
   test("non-long-array input is rejected") {
-    SortedIntersect.register(spark)
     val ex = intercept[Exception] {
       spark.sql("SELECT sorted_long_intersect(array('a'), array('b'))").collect()
     }
@@ -108,7 +101,6 @@ class SortedIntersectSpec extends AnyFunSuite {
     import spark.implicits._
     // (na, da, nb, db, expected-keep) at threshold 0.5; ih is computed
     // by the kernel inside the frame, as in the real phase-1 plan
-    SortedIntersect.register(spark)
     val rows = Seq(
       // injective both (na == |da|), jacc_h = 1/5 well below 0.5 →
       // dropped (1·1.5 + 0.5 = 2 ≯ 0.5·6 = 3)
@@ -138,7 +130,6 @@ class SortedIntersectSpec extends AnyFunSuite {
   }
 
   test("two-phase fast build ≡ single-stage plan on a planted corpus") {
-    graft.functions.Shingles.register(spark)
     import spark.implicits._
     // unique bodies + exact clones + one-token near-dups + short docs
     // (empty shingle sets) — every routing class the prefilter sees

@@ -12,7 +12,6 @@ class SubstrHashSpec extends AnyFunSuite {
   import SparkTestBase.{spark, sf}
 
   test("window count and per-window grouping match raw substrings on the corpus") {
-    SubstrHash.register(spark)
     val k = 30
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .filter(length(col("text")) >= k)
@@ -49,7 +48,6 @@ class SubstrHashSpec extends AnyFunSuite {
   }
 
   test("multi-byte UTF-8 windows hash by character, equal windows collide") {
-    SubstrHash.register(spark)
     // "añañ" k=2 → windows añ, ña, añ: positions 1 and 3 must hash equal,
     // position 2 different; byte-length-aware windows (ñ is 2 bytes)
     val r = spark.sql(
@@ -68,7 +66,6 @@ class SubstrHashSpec extends AnyFunSuite {
   }
 
   test("short and empty strings give an empty array; null gives null") {
-    SubstrHash.register(spark)
     val r = spark.sql(
       """SELECT substr_hash_windows('abc', 4) AS a,
         |       substr_hash_windows('', 4) AS b,
@@ -81,7 +78,6 @@ class SubstrHashSpec extends AnyFunSuite {
   }
 
   test("kernel compiles under CODEGEN_ONLY (no silent fallback)") {
-    SubstrHash.register(spark)
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       val r = spark.sql(
@@ -91,7 +87,6 @@ class SubstrHashSpec extends AnyFunSuite {
   }
 
   test("RLE kernel: multiset parity with the explode+groupBy formulation on the corpus") {
-    SubstrHash.register(spark)
     val k = 30
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .filter(length(col("text")) >= k)
@@ -121,7 +116,6 @@ class SubstrHashSpec extends AnyFunSuite {
   }
 
   test("RLE kernel: edges (short/empty/null) and CODEGEN_ONLY compile") {
-    SubstrHash.register(spark)
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       val r = spark.sql(
@@ -139,7 +133,6 @@ class SubstrHashSpec extends AnyFunSuite {
   }
 
   test("non-string input and non-literal k are rejected") {
-    SubstrHash.register(spark)
     val ex = intercept[Exception] {
       spark.sql("SELECT substr_hash_windows(array(1), 3)").collect()
     }

@@ -15,7 +15,6 @@ class TokenMaxRunSpec extends AnyFunSuite {
     "array_max(transform(array_distinct(ts), t -> size(filter(ts, x -> x = t))))"
 
   test("value parity with the lambda form on the real corpus") {
-    TokenMaxRun.register(spark)
     val mismatch = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), split(col("text"), " ").as("ts"))
       .withColumn("viaKernel", TokenMaxRun.maxRunCol(col("ts")))
@@ -26,7 +25,6 @@ class TokenMaxRunSpec extends AnyFunSuite {
   }
 
   test("null contract: empty → null, null elements count 0, multi-byte exact") {
-    TokenMaxRun.register(spark)
     val r = spark.sql(
       """SELECT token_max_run(CAST(array() AS array<string>)) AS empty,
         |       token_max_run(CAST(NULL AS array<string>)) AS nullArr,
@@ -44,7 +42,6 @@ class TokenMaxRunSpec extends AnyFunSuite {
   }
 
   test("kernel compiles under CODEGEN_ONLY (no silent fallback)") {
-    TokenMaxRun.register(spark)
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       // two instances in ONE projection: with a non-nullable child the
@@ -59,7 +56,6 @@ class TokenMaxRunSpec extends AnyFunSuite {
   }
 
   test("non-array input is rejected") {
-    TokenMaxRun.register(spark)
     val ex = intercept[Exception] {
       spark.sql("SELECT token_max_run('abc')").collect()
     }

@@ -10,7 +10,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   import SparkTestBase.{spark, sf}
 
   private lazy val emb = {
-    VectorFunctions.register(spark)
     spark.read.parquet(s"$sf/embeddings.parquet")
   }
 
@@ -45,7 +44,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("non-float input is rejected at analysis") {
-    VectorFunctions.register(spark)
     val ex = intercept[Exception] {
       spark.range(1).select(VectorFunctions.vecDot(col("id"), col("id"))).collect()
     }
@@ -171,7 +169,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   test("vector kernels compile under CODEGEN_ONLY (no silent fallback)") {
     // a doGenCode bug would otherwise silently drop the whole stage to
     // the interpreted path and only show up as a perf regression
-    VectorFunctions.register(spark)
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       val r = emb.limit(8)
