@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.VectorFunctions
+import graft.functions.{FloatVecDot, VectorFunctions}
+import graft.plans.CosineFusionRule
 
 /** FloatVecDot must be bit-identical to the HOF fold it replaced —
  * that equivalence is what keeps the DuckDB oracle matching. */
@@ -57,11 +58,23 @@ class VectorExpressionsSpec extends AnyFunSuite {
     val composed = VectorFunctions.vecDot(col("ea"), col("eb")) /
       (sqrt(VectorFunctions.vecDot(col("ea"), col("ea"))) *
         sqrt(VectorFunctions.vecDot(col("eb"), col("eb"))))
-    val diff = a.crossJoin(b)
-      .select(VectorFunctions.vecCosine(col("ea"), col("eb")).as("k"), composed.as("c"))
-      .filter(col("k") =!= col("c"))
-      .count()
-    assert(diff == 0)
+    // The session's CosineFusionRule would rewrite `composed` into
+    // vec_cosine itself, and the filter would compare the kernel with
+    // itself; keep the rule out so the reference stays unfused.
+    val excluded = "spark.sql.optimizer.excludedRules"
+    val prior = spark.conf.getOption(excluded)
+    spark.conf.set(excluded, CosineFusionRule.ruleName)
+    try {
+      val pairs = a.crossJoin(b)
+        .select(VectorFunctions.vecCosine(col("ea"), col("eb")).as("k"), composed.as("c"))
+        .filter(col("k") =!= col("c"))
+      val dots = pairs.queryExecution.optimizedPlan.flatMap(_.expressions)
+        .flatMap(_.collect { case d: FloatVecDot => d })
+      assert(dots.size >= 3, "the composed reference was fused")
+      assert(pairs.count() == 0)
+    } finally {
+      prior.fold(spark.conf.unset(excluded))(spark.conf.set(excluded, _))
+    }
   }
 
   test("vec_cosine null semantics match vec_dot composition") {
