@@ -336,21 +336,12 @@ object Advanced {
    * cells), so the GATE wraps it in the exact+recall_ok oracle above;
    * AnnRecallSpec and the pruning spec drive this directly. */
   private[graft] def ivfKmeansServe(s: SparkSession, dir: String): DataFrame = {
-        // md5 dirTag, not dir.hashCode (r18 ADVICE): a 32-bit tag
-        // collision shared this prefix between two corpora, letting
-        // each one's post-publish sweep delete the other's index —
-        // rebuild ping-pong, not wrongness, but the same cross-wiring
-        // class the stores closed. idx2 = the tag-layout bump; the old
-        // generation is swept once per JVM.
-        graft.sources.ManifestStore.sweepLegacyPrefixes(
-          Seq("graft_ivf_idx_"))
-        val tag = graft.sources.ManifestStore.dirTag(dir)
         // build-once via the shared stamped-artifact protocol (atomic
         // publish — the whole two-part index appears in one rename, so
         // a concurrent reader can never see cells without centroids);
         // the marker is the LAST-written component's _SUCCESS
-        val idx = Q.ensureStamped(s"graft_ivf_idx2_${tag}_",
-          Q.contentStamp(dir, "embeddings"),
+        val idx = Q.ensureStamped(graft.sources.ManifestStore.stamped(
+            "graft_ivf_idx2_", dir, "embeddings"),
           marker = "centroids/_SUCCESS") { staging =>
           import org.apache.spark.ml.clustering.KMeans
           import org.apache.spark.ml.functions.array_to_vector

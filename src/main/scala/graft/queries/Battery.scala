@@ -819,11 +819,11 @@ object Battery {
     // every bench rep).
     QueryDef("q_bucketed_join",
       (s, dir) => {
-        // md5 dirTag, not dir.hashCode (r18 ADVICE): table names must
-        // key the corpus collision-free like the tmp artifacts do
-        val tag = graft.sources.ManifestStore.dirTag(dir)
-        val ot = s"graft_bkt_orders_${tag}_${Q.contentStamp(dir, "orders")}"
-        val ct = s"graft_bkt_customer_${tag}_${Q.contentStamp(dir, "customer")}"
+        // named like the tmp artifacts, so a table keys its corpus
+        // collision-free and its source content
+        import graft.sources.ManifestStore.stamped
+        val ot = stamped("graft_bkt_orders_", dir, "orders").name
+        val ct = stamped("graft_bkt_customer_", dir, "customer").name
         if (!s.catalog.tableExists(ot))
           graft.operators.Joins.writeBucketed(
             rd(s, dir, "orders").select(col("o_orderkey"),
@@ -1635,16 +1635,10 @@ object Battery {
     // double cast would let decimal errors below ~1e-12 slip through).
     QueryDef("q_decimal_agg",
       (s, dir) => {
-        // decfix2 = the md5-dirTag layout bump (r18 ADVICE — hashCode
-        // tags cross-wire colliding corpora); the move to ensureStamped
-        // also retires this site's bare exists(dir) guard, which would
-        // have served a crashed half-write forever (the protocol's
-        // marker probe + atomic publish close that)
-        graft.sources.ManifestStore.sweepLegacyPrefixes(
-          Seq("graft_decfix_"))
-        val out = Q.ensureStamped(
-          s"graft_decfix2_${graft.sources.ManifestStore.dirTag(dir)}_",
-          Q.contentStamp(dir, "orders")) { staging =>
+        // the stamped protocol's marker probe + atomic publish: a
+        // crashed half-write is rebuilt, never served
+        val out = Q.ensureStamped(graft.sources.ManifestStore.stamped(
+          "graft_decfix2_", dir, "orders")) { staging =>
           rd(s, dir, "orders")
             .select(col("o_orderkey"), col("o_orderstatus"),
               col("o_totalprice").cast(DecimalType(12, 2)).as("price"))

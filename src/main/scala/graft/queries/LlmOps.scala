@@ -754,17 +754,10 @@ object LlmOps {
     // both and sweeps the stale twins.
     QueryDef("q_incr_sigs",
       (s, dir) => {
-        import java.nio.file.{Files, Paths}
-        // md5 dirTag, not dir.hashCode (r18 ADVICE): a 32-bit tag
-        // collision shared this prefix between two corpora, so one's
-        // sweepStaleSiblings deleted the other's scenario. incrscn2 =
-        // the tag-layout bump; the old generation sweeps once per JVM.
-        graft.sources.ManifestStore.sweepLegacyPrefixes(
-          Seq("graft_incrscn_"))
-        val tag = graft.sources.ManifestStore.dirTag(dir)
-        val prefix = s"graft_incrscn2_${tag}_"
-        val scn = Paths.get(System.getProperty("java.io.tmpdir"),
-          prefix + Q.contentStamp(dir, "documents"))
+        import java.nio.file.Files
+        val scenario = graft.sources.ManifestStore.stamped(
+          "graft_incrscn2_", dir, "documents")
+        val scn = scenario.path
         val ready = scn.resolve("_READY")
         if (!Files.exists(ready)) {
           // single-writer scenario construction (the driver runs one
@@ -783,7 +776,7 @@ object LlmOps {
           // runs the incremental path and republishes
           graft.sources.MinHashSigIndex.sigs(s, scn.toString).count()
           Files.createFile(ready)
-          Q.sweepStaleSiblings(prefix, scn)
+          Q.sweepStaleSiblings(scenario)
         }
         val art = graft.sources.MinHashSigIndex.sigs(s, scn.toString)
         val full = graft.queries.LlmOps.sigsPlan(s, scn.toString)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.sources.ManifestStore.Stamped
+
 /**
  * One declared engine query (SURVEY.md §2.C): a Spark implementation plus,
  * where SQL-expressible, an equivalent DuckDB oracle the driver
@@ -208,15 +210,14 @@ object Q {
   }
 
   /** The build-once / content-stamped artifact protocol in one place —
-   * the persisted artifacts (kNN edge index, MinHash signature table,
-   * IVF index, streaming corpus index, CDC feed) go through this
-   * instead of hand-rolling the steps (the one bespoke holdout is the
-   * late-data feed, which must NOT publish on an empty corpus and
-   * stages explicit mtimes): resolve `tmpdir/<prefix><stamp>`; if
-   * `<dir>/<marker>` is absent, run `build` against a per-invocation
-   * staging dir, publish it by ONE atomic rename, then sweep stale
-   * stamps of the same prefix (post-publish, so an incremental build
-   * can read the previous artifact — see [[ensureStampedIncr]]).
+   * every artifact published as one whole dir (q_decimal_agg's decimal
+   * table, the IVF index, the streaming corpus index, the CDC and
+   * late-data feeds, the near-dup pair table) goes through this instead
+   * of hand-rolling the steps: resolve `art.path`; if `<dir>/<marker>`
+   * is absent, run `build` against a per-invocation staging dir,
+   * publish it by ONE atomic rename, then sweep stale stamps of the
+   * same family (post-publish, so an incremental build can read the
+   * previous artifact — see [[ensureStampedIncr]]).
    * Existence of the published marker therefore
    * always means a COMPLETE artifact — a crashed build leaves only an
    * unpublished `.stage_<pid>` dir (swept by the pid's next attempt),
@@ -225,13 +226,12 @@ object Q {
    * ("_SUCCESS" for single parquet writes; the last-written
    * component's marker for multi-part artifacts like the IVF index).
    * Returns the published dir. */
-  def ensureStamped(prefix: String, stamp: String,
-                    marker: String = "_SUCCESS")
+  def ensureStamped(art: Stamped, marker: String = "_SUCCESS")
                    (build: java.nio.file.Path => Unit): java.nio.file.Path =
-    ensureStampedIncr(prefix, stamp, marker)((staging, _) => build(staging))
+    ensureStampedIncr(art, marker)((staging, _) => build(staging))
 
   /** [[ensureStamped]] with INCREMENTAL maintenance: when the stamp is
-   * absent but a COMPLETE sibling of the same prefix exists (the
+   * absent but a COMPLETE sibling of the same family exists (the
    * artifact of a previous corpus state), `build` receives it as an
    * incremental base — sign/score only the delta, union, republish.
    * The stale sweep therefore runs AFTER the new artifact publishes
@@ -240,17 +240,16 @@ object Q {
    * fails THIS build loudly (propagated after staging cleanup) rather
    * than corrupting anything — the retry then serves the winner's
    * artifact. The equivalence contract (incremental result ≡ full
-   * rebuild) is the builder's to uphold and is oracle-pinned per
-   * artifact (q_incr_sigs; KnnGraphIndexSpec). */
-  def ensureStampedIncr(prefix: String, stamp: String,
-                        marker: String = "_SUCCESS")
+   * rebuild) is the builder's to uphold (NeardupPairsIndexSpec pins
+   * the one incremental user). */
+  def ensureStampedIncr(art: Stamped, marker: String = "_SUCCESS")
                        (build: (java.nio.file.Path,
                                 Option[java.nio.file.Path]) => Unit)
       : java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
-    val idx = Paths.get(System.getProperty("java.io.tmpdir"), prefix + stamp)
+    import java.nio.file.Files
+    val idx = art.path
     if (!Files.exists(idx.resolve(marker))) {
-      val prev = newestCompleteSibling(prefix, idx, marker)
+      val prev = newestCompleteSibling(art, marker)
       // A target dir WITHOUT its marker is a pre-protocol or foreign
       // half-artifact (the protocol only publishes complete dirs) —
       // replace it, or the atomic publish below would lose to it and
@@ -284,52 +283,41 @@ object Q {
       if (!Files.exists(idx.resolve(marker)))
         throw new IllegalStateException(
           s"stamped publish of $idx produced no $marker")
-      sweepStaleSiblings(prefix, idx)
+      sweepStaleSiblings(art)
     }
     idx
   }
 
-  /** The newest COMPLETE (marker-bearing) stamped sibling of `idx`
-   * under the same `prefix` — the incremental base for
-   * [[ensureStampedIncr]]; None when no previous artifact survives. */
-  private def newestCompleteSibling(prefix: String,
-                                    idx: java.nio.file.Path,
-                                    marker: String)
+  /** The newest COMPLETE (marker-bearing) stamped sibling of `art`
+   * in its family — the incremental base for [[ensureStampedIncr]];
+   * None when no previous artifact survives. */
+  private def newestCompleteSibling(art: Stamped, marker: String)
       : Option[java.nio.file.Path] = {
     import java.nio.file.Files
+    siblings(art).filter(p => Files.exists(p.resolve(marker)))
+      .sortBy(p => Files.getLastModifiedTime(p).toMillis)
+      .lastOption
+  }
+
+  /** Sweep stale stamped siblings of `keep` (same family, different
+   * stamp): a regenerated source must not leak dead artifact dirs into
+   * tmp forever. In-flight `.stage_` copies are skipped. */
+  def sweepStaleSiblings(keep: Stamped): Unit =
+    siblings(keep).foreach(deleteRecursively)
+
+  /** The published dirs of `art`'s family other than `art` itself. */
+  private def siblings(art: Stamped): Vector[java.nio.file.Path] = {
+    import java.nio.file.Files
     import scala.jdk.CollectionConverters._
-    val parent = idx.getParent
-    if (parent == null || !Files.isDirectory(parent)) return None
+    val parent = art.path.getParent
+    if (parent == null || !Files.isDirectory(parent)) return Vector.empty
     val listing = Files.list(parent)
     try listing.iterator().asScala
       .filter { p =>
         val n = p.getFileName.toString
-        n.startsWith(prefix) && !n.contains(".stage_") &&
-          n != idx.getFileName.toString && Files.exists(p.resolve(marker))
+        n.startsWith(art.family) && !n.contains(".stage_") && n != art.name
       }
       .toVector
-      .sortBy(p => Files.getLastModifiedTime(p).toMillis)
-      .lastOption
     finally listing.close()
-  }
-
-  /** Sweep stale stamped siblings of `keep` (same dir, same `prefix`,
-   * different name): a regenerated source must not leak dead artifact
-   * dirs into tmp forever. In-flight `.stage_` copies are skipped. */
-  def sweepStaleSiblings(prefix: String, keep: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    val parent = keep.getParent
-    if (parent != null && Files.isDirectory(parent)) {
-      val listing = Files.list(parent)
-      try listing.iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith(prefix) && !n.contains(".stage_") &&
-            n != keep.getFileName.toString
-        }
-        .toVector.foreach(deleteRecursively)
-      finally listing.close()
-    }
   }
 }

@@ -33,25 +33,8 @@ object SourceOps {
    * previous content's bytes across JVMs (VERDICT r2 finding 3 — the
    * old key was `dir.hashCode` alone). */
   private def roundTripDir(fmt: String, dir: String,
-                           table: String): java.nio.file.Path = {
-    // md5 dirTag, not dir.hashCode (r18 ADVICE): the 32-bit tag let two
-    // colliding corpus dirs share an export name when stamps also
-    // matched. src2 = the tag-layout bump; old-generation dirs are
-    // swept once per JVM (they were never swept per-stamp anyway).
-    graft.sources.ManifestStore.sweepLegacyPrefixes(Seq("graft_src_"))
-    val stamp = Q.contentStamp(dir, table)
-    val tag = graft.sources.ManifestStore.dirTag(dir)
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_src2_${fmt}_${tag}_$stamp")
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => java.nio.file.Files.deleteIfExists(q))
-      finally s.close()
-    }
+                           table: String): java.nio.file.Path =
+    graft.sources.ManifestStore.stamped(s"graft_src2_${fmt}_", dir, table).path
 
   /** Crash-safe fixture-chain build: a complete chain is EXACTLY
    * versions 1..want. Guarding on "any version exists" would let a

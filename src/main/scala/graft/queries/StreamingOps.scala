@@ -87,7 +87,7 @@ object StreamingOps {
   }
 
   /** Temp root for streaming checkpoints and file-sink output: tmpfs
-   * (/dev/shm) when present, else java.io.tmpdir. The offset/commit
+   * (/dev/shm) when present, else the artifact root. The offset/commit
    * metadata logs fsync once per microbatch and the state store
    * checkpoints per partition per batch — on a disk-backed /tmp those
    * synchronous writes are the bulk of each bounded query's fixed
@@ -98,17 +98,9 @@ object StreamingOps {
     val root =
       if (java.nio.file.Files.isDirectory(shm) &&
         java.nio.file.Files.isWritable(shm)) shm
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+      else graft.sources.ManifestStore.root
     java.nio.file.Files.createTempDirectory(root, s"graft_$name")
   }
-
-  private def deleteRec(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => java.nio.file.Files.deleteIfExists(q))
-      finally s.close()
-    }
 
   /** tmpfs is RAM: anything on /dev/shm that outlives its use is a
    * memory leak across sessions. Checkpoints are deleted as soon as the
@@ -118,7 +110,7 @@ object StreamingOps {
   private val exitCleanup = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   private lazy val cleanupHook: Unit = Runtime.getRuntime.addShutdownHook(
     new Thread(() => exitCleanup.forEach(p =>
-      try deleteRec(p) catch { case _: Throwable => () })))
+      try deleteRecursively(p) catch { case _: Throwable => () })))
   private def cleanupOnExit(p: java.nio.file.Path): Unit = {
     cleanupHook
     exitCleanup.add(p)
@@ -156,7 +148,7 @@ object StreamingOps {
         // the memory sink holds the result; the checkpoint is disposable
         // the moment the bounded query stops
         try { try q.processAllAvailable() finally q.stop() }
-        finally deleteRec(base)
+        finally deleteRecursively(base)
         (s.table(qn), qn)
       }
       // Append-mode WINDOWED AGG emission NEEDS the trailing no-data
@@ -197,7 +189,7 @@ object StreamingOps {
       // (between drain and stop) — s_late_data asserts its drop counter
       // there.
       try { try { q.processAllAvailable(); onComplete(q) } finally q.stop() }
-      finally { deleteRec(chk); cleanupOnExit(base) }
+      finally { deleteRecursively(chk); cleanupOnExit(base) }
       s.read.parquet(out)
     }
 
@@ -742,20 +734,13 @@ object StreamingOps {
         // streams join a precomputed read-only index, they do not
         // re-shingle the corpus per batch. Content-stamped like
         // SourceOps.roundTripDir so a testdata regen rebuilds it.
-        // md5 dirTag, not dir.hashCode (r18 ADVICE): a 32-bit tag
-        // collision shared this prefix between two corpora, so one's
-        // post-publish sweep deleted the other's index. incr_idx2 =
-        // the tag-layout bump; old generation swept once per JVM.
-        graft.sources.ManifestStore.sweepLegacyPrefixes(
-          Seq("graft_incr_idx_"))
-        val tag = graft.sources.ManifestStore.dirTag(dir)
         // shared stamped-artifact protocol (round 8): the two-part index
         // (bands + shingles) publishes in ONE atomic rename — the old
         // bare exists(idx) check could serve a half-built index forever
         // if a build died between the two writes. Marker = the
         // LAST-written component's _SUCCESS.
-        val idx = Q.ensureStamped(s"graft_incr_idx2_${tag}_",
-          Q.contentStamp(dir, "documents"),
+        val idx = Q.ensureStamped(graft.sources.ManifestStore.stamped(
+            "graft_incr_idx2_", dir, "documents"),
           marker = "sh/_SUCCESS") { staging =>
           val corpus = shingles(
             rd(s, dir, "documents").filter(col("doc_id") % 10 =!= 0))
@@ -873,8 +858,8 @@ object StreamingOps {
         // stamped-artifact protocol: staged per-process, published by
         // one atomic rename, stale stamps swept — a concurrent driver
         // can never consume a half-staged feed.
-        val feedDir = Q.ensureStamped("graft_cdc_feed_f2_",
-          Q.contentStamp(dir, "events")) { staging =>
+        val feedDir = Q.ensureStamped(graft.sources.ManifestStore.stamped(
+          "graft_cdc_feed_f2_", dir, "events")) { staging =>
           events(s, dir)
             .select("event_id", "ts", "user_id", "event_type", "value")
             .repartitionByRange(4, col("ts"))
@@ -924,7 +909,7 @@ object StreamingOps {
             .foreachBatch(applyBatch _)
             .start()
           try { try q.processAllAvailable() finally q.stop() }
-          finally { deleteRec(base.resolve("chk")); cleanupOnExit(base) }
+          finally { deleteRecursively(base.resolve("chk")); cleanupOnExit(base) }
         }
         s.read.parquet(cur.getOrElse(
           sys.error("cdc apply emitted no state version")))
@@ -966,27 +951,20 @@ object StreamingOps {
     // pipeline alarms on.
     QueryDef("s_late_data",
       (s, dir) => {
-        import java.nio.file.{Files, Paths}
-        val stamp = Q.contentStamp(dir, "events")
-        val feedDir = Paths.get(System.getProperty("java.io.tmpdir"),
-          s"graft_late_feed_f2_$stamp")
-        val staged: Boolean = Files.exists(feedDir.resolve("_STAGED")) || {
-          // build the whole feed in a per-process staging dir and
-          // publish by atomic rename (Q.publishDirAtomic doc): a
-          // concurrent driver either sees the complete published feed
-          // or none at all. The explicit mtimes (= microbatch order)
-          // survive the rename. Stale stamps are swept.
-          Q.sweepStaleSiblings("graft_late_feed_f2_", feedDir)
-          val stagingDir = Q.stagingFor(feedDir)
-          deleteRec(stagingDir)
+        import java.nio.file.Files
+        // the whole feed is built in staging and published by one
+        // atomic rename (Q.ensureStamped): a concurrent driver sees the
+        // complete feed or none. The explicit mtimes (= microbatch
+        // order) survive the rename. An empty corpus publishes the
+        // marker alone: no feed to stage, no windows to emit.
+        val feedDir = Q.ensureStamped(graft.sources.ManifestStore.stamped(
+            "graft_late_feed_f2_", dir, "events"),
+          marker = "_STAGED") { stagingDir =>
           Files.createDirectories(stagingDir)
           val ev = events(s, dir)
           val r = ev.agg(expr("min(unix_micros(ts))"),
             expr("max(unix_micros(ts))")).head()
-          // empty corpus: no feed to stage, no windows to emit — fall
-          // through to the empty result below, never NPE on null min/max
-          if (r.isNullAt(0)) { deleteRec(stagingDir); false }
-          else {
+          if (!r.isNullAt(0)) {
             val (mn, mx) = (r.getLong(0), r.getLong(1))
             // floor quartile boundaries of the µs range — positive
             // operands, so Long division matches the oracle's // floor
@@ -1005,18 +983,17 @@ object StreamingOps {
               val dst = stagingDir.resolve(name)
               Files.move(part, dst)
               dst.toFile.setLastModified(mtime)
-              deleteRec(tmp)
+              deleteRecursively(tmp)
             }
             // processing order = ascending modification time
             stage(s"unix_micros(ts) >= ${q2}L", "00_newest.parquet", 1000000L)
             stage(s"unix_micros(ts) >= ${q1}L AND unix_micros(ts) < ${q2}L",
               "01_mid.parquet", 2000000L)
             stage(s"unix_micros(ts) < ${q1}L", "02_old.parquet", 3000000L)
-            Files.createFile(stagingDir.resolve("_STAGED"))
-            Q.publishDirAtomic(stagingDir, feedDir)
-            Files.exists(feedDir.resolve("_STAGED"))
           }
+          Files.createFile(stagingDir.resolve("_STAGED"))
         }
+        val staged = Files.exists(feedDir.resolve("00_newest.parquet"))
         if (!staged) {
           events(s, dir).filter(lit(false))
             .groupBy(window(col("ts"), "1 hour"), col("event_type"))

@@ -74,12 +74,8 @@ object KnnGraphIndex {
    * [[ManifestStore.dirTag]]. */
   private val PREFIX = s"graft_knn_store_k${KMAX}_v3_"
 
-  /** Superseded layouts swept on sight (ADVICE r9: pre-manifest
-   * per-stamp dirs leaked across prefix bumps). */
-  private val LEGACY = Seq("graft_knn_edges_", s"graft_knn_store_k${KMAX}_v2_")
-
   private[graft] def store(dir: String): Path =
-    ManifestStore.storeDir(PREFIX, ManifestStore.dirTag(dir))
+    ManifestStore.storeDir(PREFIX, dir)
 
   /** 16-way LSH sign bucket from the first 4 embedding components —
    * the blocking key (same definition as LlmOps's pairwise family, and
@@ -266,7 +262,6 @@ object KnnGraphIndex {
   def edges(s: SparkSession, dir: String, k: Int = 2): DataFrame = {
     require(k >= 1 && k <= KMAX,
       s"edge index serves k in [1, $KMAX], got $k — raise KMAX to widen")
-    ManifestStore.sweepLegacyPrefixes(LEGACY)
     val st = store(dir)
     val stamp = Q.contentStamp(dir, "embeddings")
     ManifestStore.memoFrame[DataFrame](s, st, stamp) {

@@ -9,19 +9,27 @@ import org.apache.spark.sql.types.StructType
 import graft.queries.Q
 
 /**
- * Per-partition manifest protocol for the two corpus-scale persisted
- * artifacts (MinHash signature table, kNN edge index) — the round-10
- * upgrade that makes incremental refresh I/O DELTA-sized (VERDICT r9
- * item 1). The r9 layout republished the whole artifact dir through one
- * atomic rename on every refresh: compute was delta-proportional, but
- * the write side stayed corpus-sized. This store is the SnapshotStore
- * posture applied at partition granularity:
+ * Where every persisted artifact lives, and the per-partition manifest
+ * protocol of the two corpus-scale ones.
  *
- *  - One long-lived store dir per (artifact, source path):
- *    `tmpdir/<prefix><tag>/`. Inside it, `segs/` holds IMMUTABLE
- *    parquet segment dirs, each laid out `bucket=<b>/...` by the
- *    artifact's stable partition key (doc_id bucket for signatures,
- *    LSH sign bucket for edges).
+ * Location: every artifact dir sits directly under [[root]]
+ * (`java.io.tmpdir`, read per call) and is named here, nowhere else. A
+ * content-stamped artifact is `<prefix><dirTag(dir)>_<contentStamp>`
+ * ([[stamped]]), so one corpus's artifact is rebuilt exactly when its
+ * source content changes, and its stale-stamp sweep never touches
+ * another corpus's. A manifest store is `<prefix><dirTag(dir)>`
+ * ([[storeDir]]); its manifests carry the stamp instead.
+ *
+ * The manifest protocol (MinHash signature table, kNN edge index)
+ * makes incremental refresh I/O delta-sized: publishing the whole
+ * artifact dir through one atomic rename on every refresh would keep
+ * the write side corpus-sized. It is the SnapshotStore posture applied
+ * at partition granularity:
+ *
+ *  - One long-lived store dir per (artifact, source path). Inside it,
+ *    `segs/` holds IMMUTABLE parquet segment dirs, each laid out
+ *    `bucket=<b>/...` by the artifact's stable partition key (doc_id
+ *    bucket for signatures, LSH sign bucket for edges).
  *  - A MANIFEST FILE per corpus content stamp (`manifest_<stamp>`)
  *    lists, per bucket, which segment dirs serve it. A refresh writes
  *    ONLY the delta's segment dirs and a new manifest referencing
@@ -47,7 +55,7 @@ import graft.queries.Q
  * process; in-process threads must not interleave refreshes of one
  * artifact). The SEMANTIC contract — what a segment holds, how
  * tombstones reconcile, when to compact — belongs to each index; this
- * object owns only layout, atomicity, and GC.
+ * object owns only location, layout, atomicity, and GC.
  */
 object ManifestStore {
 
@@ -71,20 +79,34 @@ object ManifestStore {
   def lockFor(store: Path): Object =
     locks.computeIfAbsent(store.toString, _ => new Object)
 
-  /** Resolve (and create) the long-lived store dir for an artifact. */
-  def storeDir(prefix: String, tag: String): Path = {
-    val d = Paths.get(System.getProperty("java.io.tmpdir"), prefix + tag)
+  /** The artifact root, read per call so a JVM started with its own
+   * `java.io.tmpdir` keeps its artifacts to itself. */
+  def root: Path = Paths.get(System.getProperty("java.io.tmpdir"))
+
+  /** A content-stamped artifact: `family` = `<prefix><dirTag(dir)>_`
+   * names every state of one corpus's artifact (the stale-stamp sweep
+   * and the incremental-base lookup stay inside it), `stamp` the one
+   * state. */
+  final case class Stamped(family: String, stamp: String) {
+    def name: String = family + stamp
+    def path: Path = root.resolve(name)
+  }
+
+  /** The artifact `prefix` derives from `dir`'s `table`. */
+  def stamped(prefix: String, dir: String, table: String): Stamped =
+    Stamped(prefix + dirTag(dir) + "_", Q.contentStamp(dir, table))
+
+  /** Resolve (and create) the long-lived store dir for `dir`'s artifact. */
+  def storeDir(prefix: String, dir: String): Path = {
+    val d = root.resolve(prefix + dirTag(dir))
     Files.createDirectories(d.resolve("segs"))
     d
   }
 
-  /** Collision-safe store tag for a corpus dir: md5 prefix, NOT the
-   * 32-bit String.hashCode the indexes originally used — two distinct
-   * dirs colliding on hashCode shared one store, and each serve's gc
-   * deleted the other's manifest out from under its memoized frame
-   * (r18 review; latent at 2^-32 per pair, but silent cross-deletion
-   * is the worst failure class this protocol has). One definition so
-   * every index addresses stores identically. */
+  /** Collision-safe corpus tag: md5 prefix, not the 32-bit
+   * String.hashCode — two distinct dirs colliding on hashCode would
+   * share one store, and each serve's gc would delete the other's
+   * manifest out from under its memoized frame. */
   def dirTag(dir: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(6)
@@ -592,26 +614,6 @@ object ManifestStore {
           Q.deleteRecursively(seg)
         }
       }
-    }
-  }
-
-  private val sweptLegacy =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** One-time cleanup of artifacts published under SUPERSEDED layout
-   * prefixes (ADVICE r9: the per-stamp dirs of the pre-manifest
-   * protocol were swept only within their own prefix, so a prefix bump
-   * leaked the old generation in tmp forever). Dead layouts cannot
-   * reappear within a process, so each prefix sweeps ONCE per JVM —
-   * repeat serve calls must not pay a full tmpdir listing (the same
-   * hot-path argument as [[memoFrame]]). */
-  def sweepLegacyPrefixes(prefixes: Seq[String]): Unit = {
-    val todo = prefixes.filter(sweptLegacy.add)
-    if (todo.isEmpty) return
-    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
-    listDir(tmp).foreach { p =>
-      val n = p.getFileName.toString
-      if (todo.exists(n.startsWith)) Q.deleteRecursively(p)
     }
   }
 

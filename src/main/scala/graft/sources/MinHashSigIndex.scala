@@ -81,12 +81,8 @@ object MinHashSigIndex {
    * [[ManifestStore.dirTag]]. */
   private val PREFIX = s"graft_minhash_store_v6_b${NBUCKETS}_"
 
-  /** Superseded layouts this store sweeps on sight (ADVICE r9: the old
-   * per-stamp dirs leaked in tmp across prefix bumps). */
-  private val LEGACY = Seq("graft_minhash_sigs_", "graft_minhash_store_v5_")
-
   private[graft] def store(dir: String): Path =
-    ManifestStore.storeDir(PREFIX, ManifestStore.dirTag(dir))
+    ManifestStore.storeDir(PREFIX, dir)
 
   /** The full-corpus signature-build plan (unpersisted) — exposed for
    * spec pins. */
@@ -126,7 +122,6 @@ object MinHashSigIndex {
    * build-if-absent — delta-segment refresh against the previous
    * manifest when one survives — then the reconciled serve. */
   def sigs(s: SparkSession, dir: String): DataFrame = {
-    ManifestStore.sweepLegacyPrefixes(LEGACY)
     val st = store(dir)
     val stamp = Q.contentStamp(dir, "documents")
     ManifestStore.memoFrame[DataFrame](s, st, stamp) {

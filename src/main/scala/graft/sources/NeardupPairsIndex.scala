@@ -91,25 +91,14 @@ object NeardupPairsIndex {
    * served silently), and the rounded replacement still collided past
    * two decimals (0.585 → t58) AND made post-fix 0.57 resolve to a
    * PRE-fix 0.58 artifact published under the truncated t57 — hence
-   * the v3 layout bump with v2 swept as legacy. The v4 bump moves the
-   * corpus tag from 32-bit `dir.hashCode` to [[ManifestStore.dirTag]]
-   * (r18 ADVICE): under the old tag, two corpus dirs colliding on
-   * hashCode shared a prefix, so `ensureStampedIncr` could adopt the
-   * OTHER corpus's pair table as its incremental base and silently
-   * carry its pairs — the same silent cross-wiring class the sig/knn
-   * stores already closed with their own layout bumps. */
+   * the v3 layout bump. The v4 bump moved the corpus tag from 32-bit
+   * `dir.hashCode` to [[ManifestStore.dirTag]]: under the old tag, two
+   * corpus dirs colliding on hashCode shared a prefix, so
+   * `ensureStampedIncr` could adopt the OTHER corpus's pair table as
+   * its incremental base and silently carry its pairs. */
   private def prefix(threshold: Double) =
     s"graft_neardup_pairs_v4_t${java.lang.Double.toString(threshold)
       .replace(".", "p").replace("-", "m")}_"
-
-  /** Superseded layouts, swept on sight (their stamp-sweeps never fire
-   * again once no caller addresses them): v1 single-parquet dirs (no
-   * cover), v2's integer-truncated threshold labels whose dirs
-   * must not be resolvable by (or leak behind) the lossless labels,
-   * and v3's hashCode-tagged dirs superseded by the md5 dirTag. */
-  private val LEGACY =
-    Seq("graft_neardup_pairs_t", "graft_neardup_pairs_v2_",
-      "graft_neardup_pairs_v3_")
 
   /** The full candidates+verify build plan (unpersisted) — exposed for
    * the equivalence spec pin. Signatures come from the persisted
@@ -126,12 +115,14 @@ object NeardupPairsIndex {
     graft.queries.LlmOps.neardupPairs(docs, threshold,
       Some(MinHashSigIndex.sigs(s, dir)))
 
+  /** The artifact the current corpus state publishes to. */
+  private def artifact(dir: String, threshold: Double) =
+    ManifestStore.stamped(prefix(threshold), dir, "documents")
+
   /** The artifact dir the current corpus state publishes to — exposed
    * for the spec's tamper probe. */
   private[graft] def artifactDir(dir: String, threshold: Double = 0.5): Path =
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix(threshold) + ManifestStore.dirTag(dir) +
-        "_" + Q.contentStamp(dir, "documents"))
+    artifact(dir, threshold).path
 
   /** Graph-sized single-file write: one file, one listing at every
    * serve. repartition, NOT coalesce — coalesce(1) would collapse the
@@ -155,9 +146,7 @@ object NeardupPairsIndex {
    * the other artifacts' serve frames). */
   def pairs(s: SparkSession, dir: String,
             threshold: Double = 0.5): DataFrame = {
-    ManifestStore.sweepLegacyPrefixes(LEGACY)
-    val stamp = Q.contentStamp(dir, "documents")
-    val tag = ManifestStore.dirTag(dir)
+    val art = artifact(dir, threshold)
     // serialize same-artifact builders within the JVM (the same
     // lockFor REGISTRY MinHashSigIndex's refresh uses, keyed by THIS
     // artifact's store path — a distinct monitor from the sig store's;
@@ -165,15 +154,13 @@ object NeardupPairsIndex {
     // build takes the sig lock through sigs()): ensureStampedIncr is
     // CORRECT under a concurrent duplicate (the loser's rename fails
     // benignly) but both pay the corpus-scale candidates+verify job;
-    // keyed by prefix+tag, not stamp, so refreshes across corpus
-    // states serialize too instead of racing the base sweep (r18
-    // review finding)
-    val idx = ManifestStore.lockFor(java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), prefix(threshold) + tag))
+    // keyed by the artifact's family, not its stamp, so refreshes
+    // across corpus states serialize too instead of racing the base
+    // sweep
+    val idx = ManifestStore.lockFor(ManifestStore.root.resolve(art.family))
       .synchronized {
       // cover is written LAST, so its marker is the completeness marker
-      Q.ensureStampedIncr(prefix(threshold) + tag + "_", stamp,
-        marker = "cover/_SUCCESS") { (staging, baseOpt) =>
+      Q.ensureStampedIncr(art, marker = "cover/_SUCCESS") { (staging, baseOpt) =>
         val sigs = MinHashSigIndex.sigs(s, dir) // itself incremental
         val curCover = sigs.select("doc_id", "text_hash")
         baseOpt match {
@@ -211,7 +198,7 @@ object NeardupPairsIndex {
         }
       }
     }
-    ManifestStore.memoFrame[DataFrame](s, idx, stamp) {
+    ManifestStore.memoFrame[DataFrame](s, idx, art.stamp) {
       s.read.schema(schema).parquet(idx.resolve("pairs").toString)
     }
   }

@@ -215,6 +215,42 @@ class CurationSpec extends AnyFunSuite {
       s"eigenvalue $lambda vs ||A·v|| $nAv")
   }
 
+  test("s_cdc_apply and s_late_data: one corpus's feed publish keeps another corpus's feeds") {
+    // a feed is named per corpus, so a publish sweeps only its own
+    // corpus's stale stamps: sweeping the other corpus's feed would
+    // make two corpora rebuild in turn, and could delete a feed another
+    // process is reading
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def feeds(): Set[String] = {
+      val l = Files.list(tmp)
+      try l.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => (n.startsWith("graft_cdc_feed_") ||
+          n.startsWith("graft_late_feed_")) && !n.contains(".stage_"))
+        .toSet
+      finally l.close()
+    }
+    def build(dir: String): Unit =
+      for (q <- Seq("s_cdc_apply", "s_late_data"))
+        SparkEntry.queries(q)(spark, dir).collect()
+    // the same events under another dir, with their own mtime
+    val other = Files.createTempDirectory("graft_feed_corpus")
+    Files.copy(Paths.get(sf, "events.parquet"), other.resolve("events.parquet"))
+    var mine = Set.empty[String]
+    try {
+      build(sf)
+      mine = feeds()
+      build(other.toString)
+      val after = feeds()
+      assert(mine.subsetOf(after), s"swept: ${mine -- after}")
+      assert((after -- mine).size == 2, after -- mine)
+    } finally {
+      (feeds() -- mine).foreach(n => graft.queries.Q.deleteRecursively(tmp.resolve(n)))
+      graft.queries.Q.deleteRecursively(other)
+    }
+  }
+
   test("s_late_data: oldest-quarter rows are genuinely dropped") {
     val out = SparkEntry.queries("s_late_data")(spark, sf).collect()
     assert(out.nonEmpty)

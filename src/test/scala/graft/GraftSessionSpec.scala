@@ -53,6 +53,22 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits)
   }
 
+  test("only ManifestStore.scala names the artifact root or a corpus tag") {
+    // every persisted artifact's dir is rooted and named in one place;
+    // a hand-built path elsewhere can drift from the names the stores
+    // sweep and reuse
+    val hits = mainSourcesWith("java.io.tmpdir", "dirTag(")
+    assert(hits == List("graft/sources/ManifestStore.scala"), hits)
+  }
+
+  test("without a warehouse conf, managed tables live under the artifact root") {
+    // q_bucketed_join's graft_bkt_* tables, not the working directory
+    val t = SparkTestBase.spark.sessionState.catalog.defaultTablePath(
+      org.apache.spark.sql.catalyst.TableIdentifier("graft_bkt_probe"))
+    assert(Paths.get(t).getParent ==
+      Paths.get(System.getProperty("java.io.tmpdir"), "graft_warehouse"), t)
+  }
+
   test("the benchmark harness builds its session with GraftSession's literal confs") {
     // perfbench/harness/Harness.scala builds its own session from a
     // copy of GraftSession's conf set; a conf changed in GraftSession

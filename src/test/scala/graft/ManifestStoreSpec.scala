@@ -19,10 +19,9 @@ import graft.sources.ManifestStore.{Entry, Manifest}
  * writes); these pins cover the protocol layer itself. */
 class ManifestStoreSpec extends AnyFunSuite {
 
-  private def freshStore(): Path = {
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    ManifestStore.storeDir("graft_test_mstore_", tag)
-  }
+  private def freshStore(): Path =
+    ManifestStore.storeDir("graft_test_mstore_",
+      java.util.UUID.randomUUID().toString)
 
   private def mkSeg(store: Path, buckets: Seq[Int]): Path = {
     val staging = ManifestStore.newSegStaging(store)

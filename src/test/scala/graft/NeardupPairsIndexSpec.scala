@@ -64,8 +64,7 @@ class NeardupPairsIndexSpec extends AnyFunSuite {
     // 0.585 with 0.58) — the wrong pair set served silently; and a
     // rounded v2 label would have let post-fix 0.57 resolve a PRE-fix
     // 0.58 artifact published under the truncated t57, hence the v3
-    // bump with v2 in the legacy sweep (r18 review, both passes); v4
-    // moved the corpus tag to the md5 dirTag (r18 ADVICE)
+    // bump; v4 moved the corpus tag to the md5 dirTag
     def label(t: Double) = NeardupPairsIndex.artifactDir("x", t)
       .getFileName.toString
     assert(label(0.5).contains("_v4_t0p5_"), label(0.5))

@@ -7,8 +7,6 @@ import org.apache.spark.sql.SparkSession
  * Bench, so tests run the same engine; the shuffle width is the tests'
  * own override (8, not the core count). */
 object SparkTestBase {
-  lazy val spark: SparkSession =
-    GraftSession("local[8]", 8,
-      "spark.sql.warehouse.dir" -> "/tmp/graft-test-warehouse")
+  lazy val spark: SparkSession = GraftSession("local[8]", 8)
   val sf = "/root/testdata/sf0.001"
 }

@@ -3,12 +3,14 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Q
+import graft.sources.ManifestStore.Stamped
 
 /** Q.ensureStamped is the ONE implementation of the build-once
- * artifact protocol (kNN edges, MinHash signatures, IVF index,
- * s_incr_dedup corpus index, CDC feed all route through it) — these
- * pins cover the protocol itself: build-once reuse, half-artifact
- * replacement, stale-stamp sweep, and in-flight staging respect. */
+ * artifact protocol for whole-dir artifacts (IVF index, s_incr_dedup
+ * corpus index, the CDC and late-data feeds, the near-dup pair table
+ * all route through it) — these pins cover the protocol itself:
+ * build-once reuse, half-artifact replacement, stale-stamp sweep, and
+ * in-flight staging respect. */
 class StampedArtifactSpec extends AnyFunSuite {
 
   private val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
@@ -35,8 +37,8 @@ class StampedArtifactSpec extends AnyFunSuite {
   test("builds once, then every ensure reuses the published artifact") {
     withPrefix { prefix =>
       val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val a = Q.ensureStamped(prefix, "s1")(buildInto(n))
-      val b = Q.ensureStamped(prefix, "s1")(buildInto(n))
+      val a = Q.ensureStamped(Stamped(prefix, "s1"))(buildInto(n))
+      val b = Q.ensureStamped(Stamped(prefix, "s1"))(buildInto(n))
       assert(n.get() == 1 && a == b)
       assert(Files.readString(a.resolve("data")) == "payload")
       // no staging residue after a successful publish
@@ -55,7 +57,7 @@ class StampedArtifactSpec extends AnyFunSuite {
       Files.createDirectories(half)
       Files.writeString(half.resolve("data"), "HALF")
       val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val a = Q.ensureStamped(prefix, "s1")(buildInto(n))
+      val a = Q.ensureStamped(Stamped(prefix, "s1"))(buildInto(n))
       assert(n.get() == 1)
       assert(Files.exists(a.resolve("_SUCCESS")))
       assert(Files.readString(a.resolve("data")) == "payload")
@@ -71,7 +73,7 @@ class StampedArtifactSpec extends AnyFunSuite {
       val inflight = tmp.resolve(prefix + "s2.stage_99999999")
       Files.createDirectories(inflight)
       val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      Q.ensureStamped(prefix, "s2")(buildInto(n))
+      Q.ensureStamped(Stamped(prefix, "s2"))(buildInto(n))
       assert(!Files.exists(old), "stale stamp must be swept")
       assert(Files.exists(inflight), "another pid's staging must survive")
     }
@@ -82,7 +84,7 @@ class StampedArtifactSpec extends AnyFunSuite {
       val builds = new java.util.concurrent.atomic.AtomicInteger(0)
       val gate = new java.util.concurrent.CountDownLatch(2)
       def ensure(): java.nio.file.Path =
-        Q.ensureStamped(prefix, "s4") { staging =>
+        Q.ensureStamped(Stamped(prefix, "s4")) { staging =>
           builds.incrementAndGet()
           gate.countDown()
           gate.await(10, java.util.concurrent.TimeUnit.SECONDS)
@@ -121,7 +123,7 @@ class StampedArtifactSpec extends AnyFunSuite {
       var sawPrev: Option[java.nio.file.Path] = None
       val n = new java.util.concurrent.atomic.AtomicInteger(0)
       def ensure(stamp: String): java.nio.file.Path =
-        Q.ensureStampedIncr(prefix, stamp) { (staging, prev) =>
+        Q.ensureStampedIncr(Stamped(prefix, stamp)) { (staging, prev) =>
           sawPrev = prev
           buildInto(n)(staging)
         }
@@ -153,8 +155,8 @@ class StampedArtifactSpec extends AnyFunSuite {
         Files.createDirectories(staging.resolve("part2"))
         Files.createFile(staging.resolve("part2").resolve("_SUCCESS"))
       }
-      val a = Q.ensureStamped(prefix, "s3", marker = "part2/_SUCCESS")(build)
-      Q.ensureStamped(prefix, "s3", marker = "part2/_SUCCESS")(build)
+      val a = Q.ensureStamped(Stamped(prefix, "s3"), marker = "part2/_SUCCESS")(build)
+      Q.ensureStamped(Stamped(prefix, "s3"), marker = "part2/_SUCCESS")(build)
       assert(n.get() == 1)
       assert(Files.exists(a.resolve("part2").resolve("_SUCCESS")))
     }
