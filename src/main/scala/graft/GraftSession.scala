@@ -5,14 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** The one SparkSession factory: Bench, Verify, the DDL CLI, the tools
  * and the shared test session all build their session here, so they
  * run the same engine, with [[GraftExtensions]]' SQL names installed.
- * `conf` adds per-caller settings on top of the shared set. The
- * warehouse (q_bucketed_join's managed tables) defaults to
+ * The warehouse (q_bucketed_join's managed tables) is
  * `graft_warehouse` under the artifact root, not the working
  * directory. */
 object GraftSession {
-  def apply(master: String, shufflePartitions: Int,
-            conf: (String, String)*): SparkSession = {
-    val builder = SparkSession.builder()
+  def apply(master: String, shufflePartitions: Int): SparkSession = {
+    val spark = SparkSession.builder()
       .master(master)
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -36,10 +34,8 @@ object GraftSession {
       // shuffle width. Interleaved 16-query A/B: 15.84 → 13.85 s,
       // q_triangles −0.90, q_graph_bfs −0.52 (OPTIMIZATION_r21.md).
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    val warehouse = "spark.sql.warehouse.dir" ->
-      graft.sources.ManifestStore.root.resolve("graft_warehouse").toString
-    val spark = (warehouse +: conf)
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+      .config("spark.sql.warehouse.dir",
+        graft.sources.ManifestStore.root.resolve("graft_warehouse").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

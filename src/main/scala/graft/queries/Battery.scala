@@ -820,7 +820,9 @@ object Battery {
     QueryDef("q_bucketed_join",
       (s, dir) => {
         // named like the tmp artifacts, so a table keys its corpus
-        // collision-free and its source content
+        // collision-free and its source content. Catalog tables, not
+        // Q.ensureStamped dirs: the catalog owns their location, so
+        // there is no dir to stage and rename
         import graft.sources.ManifestStore.stamped
         val ot = stamped("graft_bkt_orders_", dir, "orders").name
         val ct = stamped("graft_bkt_customer_", dir, "customer").name

@@ -761,7 +761,10 @@ object LlmOps {
         val ready = scn.resolve("_READY")
         if (!Files.exists(ready)) {
           // single-writer scenario construction (the driver runs one
-          // process; a crashed half-scenario is rebuilt from scratch)
+          // process; a crashed half-scenario is rebuilt from scratch).
+          // Built in place, not through Q.ensureStamped: its signature
+          // store is tagged by the scenario's own path, so a build in
+          // staging would orphan that store at publish
           Q.deleteRecursively(scn)
           val docs = rd(s, dir, "documents")
             .filter(col("doc_id") % 2 === 0)

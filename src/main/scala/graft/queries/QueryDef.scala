@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.sources.ManifestStore
 import graft.sources.ManifestStore.Stamped
 
 /**
@@ -151,19 +152,13 @@ object Q {
           .iterator().asScala.foreach(Files.deleteIfExists(_))
         finally walk.close()
       }
-    def isVanish(t: Throwable): Boolean = t match {
-      case _: java.nio.file.NoSuchFileException => true
-      case e: java.io.UncheckedIOException =>
-        e.getCause.isInstanceOf[java.nio.file.NoSuchFileException]
-      case _ => false
-    }
     var done = false
     var tries = 0
     while (!done) {
       tries += 1
       try { attempt(); done = true }
       catch {
-        case t if isVanish(t) =>
+        case t if ManifestStore.isVanish(t) =>
           if (!Files.exists(p)) done = true // root gone: success
           else if (tries >= 3) throw t // persistent partial: loud
         // else: a child vanished under a live root — walk again
@@ -171,23 +166,16 @@ object Q {
     }
   }
 
-  /** Monotone per-JVM counter making every staging dir unique to its
-   * INVOCATION, not just its process: two threads of one JVM building
-   * the same artifact must not share a staging path, or one thread's
-   * publish/cleanup can yank the dir out from under the other's
-   * in-flight writes. */
-  private val stagingSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Per-invocation staging sibling for an atomically-published
-   * artifact dir: `<target>.stage_<pid>_<seq>`. The `.stage_` infix is
-   * the marker [[sweepStaleSiblings]] respects, so a concurrent
-   * builder's in-flight copy is never swept; the pid+seq suffix gives
-   * in-process racers the same win-or-discard semantics as
-   * cross-process ones. */
+   * artifact dir: `<target>.stage_<pid>_<jvmToken>_<n>`
+   * ([[ManifestStore.stageName]]). Unique per invocation, so two
+   * threads of one JVM building the same artifact never share a
+   * staging path, and in-process racers get the same win-or-discard
+   * semantics as cross-process ones. [[sweepStaleSiblings]] keeps the
+   * copy while its builder is live. */
   def stagingFor(target: java.nio.file.Path): java.nio.file.Path =
     target.resolveSibling(
-      target.getFileName.toString + ".stage_" +
-        ProcessHandle.current().pid() + "_" + stagingSeq.incrementAndGet())
+      target.getFileName.toString + ManifestStore.stageName())
 
   /** Publish a fully-built staging dir as `target` by ATOMIC RENAME —
    * the check-then-act fix for content-stamped tmp artifacts (a reader
@@ -210,22 +198,25 @@ object Q {
   }
 
   /** The build-once / content-stamped artifact protocol in one place —
-   * every artifact published as one whole dir (q_decimal_agg's decimal
-   * table, the IVF index, the streaming corpus index, the CDC and
-   * late-data feeds, the near-dup pair table) goes through this instead
-   * of hand-rolling the steps: resolve `art.path`; if `<dir>/<marker>`
-   * is absent, run `build` against a per-invocation staging dir,
-   * publish it by ONE atomic rename, then sweep stale stamps of the
-   * same family (post-publish, so an incremental build can read the
-   * previous artifact — see [[ensureStampedIncr]]).
-   * Existence of the published marker therefore
-   * always means a COMPLETE artifact — a crashed build leaves only an
-   * unpublished `.stage_<pid>` dir (swept by the pid's next attempt),
+   * every stamped artifact published as one whole dir goes through
+   * this: q_decimal_agg's table, the IVF and streaming corpus indexes,
+   * the CDC and late-data feeds, the near-dup pair table, and
+   * SourceOps' eight exports and three snapshot chains. Resolve
+   * `art.path`; if `<dir>/<marker>` is absent, run `build` against a
+   * per-invocation staging dir, publish it by ONE atomic rename, then
+   * sweep stale stamps of the same family (post-publish, so an
+   * incremental build can read the previous artifact — see
+   * [[ensureStampedIncr]]). Existence of the published marker
+   * therefore always means a COMPLETE artifact: a crashed build leaves
+   * only an unpublished `.stage_` dir, reclaimed by the family's next
+   * publish once its builder is dead or idle ([[sweepStaleSiblings]]),
    * and a concurrent builder either wins the rename or discards its
-   * identical copy. `marker` is a path RELATIVE to the artifact dir
-   * ("_SUCCESS" for single parquet writes; the last-written
-   * component's marker for multi-part artifacts like the IVF index).
-   * Returns the published dir. */
+   * identical copy. `marker` is a path RELATIVE to the artifact dir:
+   * "_SUCCESS" for single parquet writes, the last-written part's
+   * marker for multi-part artifacts (`v=<last>/_SUCCESS` for a
+   * snapshot chain). Not through here, each for the reason at its
+   * site: the manifest stores, q_incr_sigs' scenario and
+   * q_bucketed_join's tables. Returns the published dir. */
   def ensureStamped(art: Stamped, marker: String = "_SUCCESS")
                    (build: java.nio.file.Path => Unit): java.nio.file.Path =
     ensureStampedIncr(art, marker)((staging, _) => build(staging))
@@ -294,18 +285,28 @@ object Q {
   private def newestCompleteSibling(art: Stamped, marker: String)
       : Option[java.nio.file.Path] = {
     import java.nio.file.Files
-    siblings(art).filter(p => Files.exists(p.resolve(marker)))
-      .sortBy(p => Files.getLastModifiedTime(p).toMillis)
+    siblings(art).filterNot(isStaging)
+      .filter(p => Files.exists(p.resolve(marker)))
+      .sortBy(ManifestStore.mtimeOrZero)
       .lastOption
   }
 
   /** Sweep stale stamped siblings of `keep` (same family, different
    * stamp): a regenerated source must not leak dead artifact dirs into
-   * tmp forever. In-flight `.stage_` copies are skipped. */
-  def sweepStaleSiblings(keep: Stamped): Unit =
-    siblings(keep).foreach(deleteRecursively)
+   * tmp forever. A `.stage_` copy of any stamp survives while its
+   * builder is live ([[ManifestStore.stageLive]]); a crashed or idle
+   * builder's is reclaimed. */
+  def sweepStaleSiblings(keep: Stamped): Unit = {
+    val (staging, stale) = siblings(keep).partition(isStaging)
+    stale.foreach(deleteRecursively)
+    staging.filterNot(ManifestStore.stageLive).foreach(deleteRecursively)
+  }
 
-  /** The published dirs of `art`'s family other than `art` itself. */
+  private def isStaging(p: java.nio.file.Path): Boolean =
+    p.getFileName.toString.contains(".stage_")
+
+  /** The dirs of `art`'s family, published or staging, other than `art`
+   * itself. */
   private def siblings(art: Stamped): Vector[java.nio.file.Path] = {
     import java.nio.file.Files
     import scala.jdk.CollectionConverters._
@@ -315,7 +316,7 @@ object Q {
     try listing.iterator().asScala
       .filter { p =>
         val n = p.getFileName.toString
-        n.startsWith(art.family) && !n.contains(".stage_") && n != art.name
+        n.startsWith(art.family) && n != art.name
       }
       .toVector
     finally listing.close()

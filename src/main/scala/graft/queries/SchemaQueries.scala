@@ -21,12 +21,14 @@ object SchemaQueries {
   }
 
   /** The footer schema of `row` written as one parquet file. The file goes
-   * to a fresh temp dir per call (a fixed path could be read mid-write by
-   * a concurrent session: tests + Verify; the fixture is one row, so the
-   * rewrite costs nothing), deleted once the footer is read. */
+   * to a fresh temp dir under the artifact root per call (a fixed path
+   * could be read mid-write by a concurrent session: tests + Verify; the
+   * fixture is one row, so the rewrite costs nothing), deleted once the
+   * footer is read. */
   private def footerSchema(s: SparkSession, prefix: String,
                            schema: StructType, row: Row): StructType = {
-    val out = java.nio.file.Files.createTempDirectory(prefix)
+    val out = java.nio.file.Files.createTempDirectory(
+      graft.sources.ManifestStore.root, prefix)
     try {
       s.createDataFrame(java.util.List.of(row), schema)
         .coalesce(1).write.mode("overwrite").parquet(out.toString)

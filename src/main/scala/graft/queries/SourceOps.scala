@@ -26,31 +26,21 @@ import Q._
  */
 object SourceOps {
 
-  /** Temp round-trip dir, written once per SOURCE CONTENT. The dir name
-   * carries a content stamp of the source parquet (size ⊕ mtime, summed
-   * over files if it's a directory), so regenerating the testdata in
-   * place yields a fresh export dir instead of silently serving the
-   * previous content's bytes across JVMs (VERDICT r2 finding 3 — the
-   * old key was `dir.hashCode` alone). */
-  private def roundTripDir(fmt: String, dir: String,
-                           table: String): java.nio.file.Path =
-    graft.sources.ManifestStore.stamped(s"graft_src2_${fmt}_", dir, table).path
-
-  /** Crash-safe fixture-chain build: a complete chain is EXACTLY
-   * versions 1..want. Guarding on "any version exists" would let a
-   * build that crashed mid-chain (e.g. after v1 of 3) skip the build
-   * forever and serve a wrong or missing chain out of the reused
-   * content-stamped dir — so anything other than the full chain is
-   * wiped and rebuilt (version dirs are immutable; delete+rebuild is
-   * the only safe recovery). Same discipline as the IVF index's
-   * last-written-_SUCCESS guard. */
-  private def ensureChain(tbl: String, want: Int)(build: => Unit): String = {
-    if (graft.sources.SnapshotStore.versions(tbl).toList != (1 to want).toList) {
-      deleteRecursively(java.nio.file.Paths.get(tbl))
-      build
-    }
-    tbl
-  }
+  /** The round-trip artifact `fmt` of `dir`'s `table`, written once per
+   * SOURCE CONTENT through [[Q.ensureStamped]]: the dir name carries a
+   * content stamp of the source parquet, so regenerating the testdata
+   * in place yields a fresh dir (and sweeps the stale one) instead of
+   * serving the previous content's bytes across JVMs. `build` writes
+   * into a staging dir that is published by one atomic rename only
+   * once `marker`, the last-written part's `_SUCCESS`, exists: a killed
+   * or overlapping run never leaves a dir that is served half-built
+   * (Spark creates `_temporary` as soon as a write starts). Returns
+   * the published dir. */
+  private def roundTripDir(fmt: String, dir: String, table: String,
+                           marker: String = "_SUCCESS")
+                          (build: java.nio.file.Path => Unit): String =
+    ensureStamped(graft.sources.ManifestStore.stamped(
+      s"graft_src2_${fmt}_", dir, table), marker)(build).toString
 
   /** The two-version chain shared by q_snapshot_diff and
    * q_snapshot_incr_agg (read-only consumers — neither appends, so the
@@ -63,8 +53,8 @@ object SourceOps {
   private def snapDiffTable(s: org.apache.spark.sql.SparkSession,
                             dir: String): String = {
     import graft.sources.SnapshotStore
-    ensureChain(roundTripDir("snapdiff", dir, "orders").toString, 2) {
-      val tbl = roundTripDir("snapdiff", dir, "orders").toString
+    roundTripDir("snapdiff", dir, "orders", "v=2/_SUCCESS") { staging =>
+      val tbl = staging.toString
       val base = rd(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       SnapshotStore.writeVersion(base, tbl)
@@ -85,17 +75,16 @@ object SourceOps {
     // ---- CSV source: customer keys/segments through csv ---------------
     QueryDef("q_csv_source",
       (s, dir) => {
-        val out = roundTripDir("csv", dir, "customer")
-        if (!java.nio.file.Files.exists(out))
+        val out = roundTripDir("csv", dir, "customer") { staging =>
           rd(s, dir, "customer")
             .select("c_custkey", "c_nationkey", "c_mktsegment")
-            .write.mode("overwrite").option("header", "true")
-            .csv(out.toString)
+            .write.option("header", "true").csv(staging.toString)
+        }
         val schema = StructType(Seq(
           StructField("c_custkey", LongType),
           StructField("c_nationkey", LongType),
           StructField("c_mktsegment", StringType)))
-        s.read.schema(schema).option("header", "true").csv(out.toString)
+        s.read.schema(schema).option("header", "true").csv(out)
           .groupBy("c_mktsegment")
           .agg(count(lit(1)).as("n_cust"),
             sum(col("c_custkey")).as("sum_key"),
@@ -111,17 +100,17 @@ object SourceOps {
     // ---- JSON-lines source: order keys/status through json -------------
     QueryDef("q_json_source",
       (s, dir) => {
-        val out = roundTripDir("json", dir, "orders")
-        if (!java.nio.file.Files.exists(out))
+        val out = roundTripDir("json", dir, "orders") { staging =>
           rd(s, dir, "orders")
             .select("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
-            .write.mode("overwrite").json(out.toString)
+            .write.json(staging.toString)
+        }
         val schema = StructType(Seq(
           StructField("o_orderkey", LongType),
           StructField("o_custkey", LongType),
           StructField("o_orderstatus", StringType),
           StructField("o_orderpriority", StringType)))
-        s.read.schema(schema).json(out.toString)
+        s.read.schema(schema).json(out)
           .groupBy("o_orderstatus", "o_orderpriority")
           .agg(count(lit(1)).as("n_orders"),
             min(col("o_orderkey")).as("min_key"),
@@ -140,12 +129,12 @@ object SourceOps {
     // acctbal can ride along here.
     QueryDef("q_orc_source",
       (s, dir) => {
-        val out = roundTripDir("orc", dir, "supplier")
-        if (!java.nio.file.Files.exists(out))
+        val out = roundTripDir("orc", dir, "supplier") { staging =>
           rd(s, dir, "supplier")
             .select("s_suppkey", "s_nationkey", "s_acctbal")
-            .write.mode("overwrite").orc(out.toString)
-        s.read.orc(out.toString)
+            .write.orc(staging.toString)
+        }
+        s.read.orc(out)
           .groupBy("s_nationkey")
           .agg(count(lit(1)).as("n_supp"),
             dsum(col("s_acctbal")).as("sum_bal"),
@@ -168,14 +157,13 @@ object SourceOps {
     // equivalent WHERE.
     QueryDef("q_partitioned_write",
       (s, dir) => {
-        val out = roundTripDir("hivepart", dir, "orders")
-        if (!java.nio.file.Files.exists(out))
+        val out = roundTripDir("hivepart", dir, "orders") { staging =>
           rd(s, dir, "orders")
             .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
               col("o_orderpriority"), col("o_orderstatus"))
-            .write.mode("overwrite").partitionBy("o_orderstatus")
-            .parquet(out.toString)
-        s.read.parquet(out.toString)
+            .write.partitionBy("o_orderstatus").parquet(staging.toString)
+        }
+        s.read.parquet(out)
           .filter(col("o_orderstatus") === "F")
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n_orders"),
@@ -198,14 +186,14 @@ object SourceOps {
     // for this exact filter shape at 100 TB.
     QueryDef("q_zorder_layout",
       (s, dir) => {
-        val out = roundTripDir("zorder", dir, "orders")
-        if (!java.nio.file.Files.exists(out))
+        val out = roundTripDir("zorder", dir, "orders") { staging =>
           graft.operators.ZOrder.writeZOrdered(
             rd(s, dir, "orders")
               .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
                 expr("unix_date(CAST(o_orderdate AS DATE))").as("o_day")),
-            "o_custkey", "o_day", out.toString, numFiles = 8)
-        s.read.parquet(out.toString)
+            "o_custkey", "o_day", staging.toString, numFiles = 8)
+        }
+        s.read.parquet(out)
           .filter(col("o_custkey").between(10, 60) &&
             col("o_day").between(9500, 10000))
           .groupBy("o_custkey")
@@ -308,17 +296,16 @@ object SourceOps {
     // generation split directly from the parquet table.
     QueryDef("q_schema_evolution",
       (s, dir) => {
-        val out = roundTripDir("evo", dir, "orders")
-        if (!java.nio.file.Files.exists(out)) {
+        val out = roundTripDir("evo", dir, "orders", "gen=2/_SUCCESS") { staging =>
           val orders = rd(s, dir, "orders")
           orders.filter(col("o_orderkey") % 2 === 0)
             .select("o_orderkey", "o_custkey", "o_totalprice")
-            .write.mode("overwrite").parquet(s"$out/gen=1")
+            .write.parquet(s"$staging/gen=1")
           orders.filter(col("o_orderkey") % 2 === 1)
             .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-            .write.mode("overwrite").parquet(s"$out/gen=2")
+            .write.parquet(s"$staging/gen=2")
         }
-        s.read.option("mergeSchema", "true").parquet(out.toString)
+        s.read.option("mergeSchema", "true").parquet(out)
           .withColumn("status",
             coalesce(col("o_orderstatus"), lit("(pre-evolution)")))
           .groupBy("status")
@@ -345,15 +332,13 @@ object SourceOps {
     // bytes/128 MB.
     QueryDef("q_compact_files",
       (s, dir) => {
-        val frag = roundTripDir("frag", dir, "orders")
-        if (!java.nio.file.Files.exists(frag))
-          rd(s, dir, "orders").repartition(64)
-            .write.mode("overwrite").parquet(frag.toString)
-        val compacted = roundTripDir("compacted", dir, "orders")
-        if (!java.nio.file.Files.exists(compacted))
-          s.read.parquet(frag.toString).coalesce(4)
-            .write.mode("overwrite").parquet(compacted.toString)
-        s.read.parquet(compacted.toString)
+        val frag = roundTripDir("frag", dir, "orders") { staging =>
+          rd(s, dir, "orders").repartition(64).write.parquet(staging.toString)
+        }
+        val compacted = roundTripDir("compacted", dir, "orders") { staging =>
+          s.read.parquet(frag).coalesce(4).write.parquet(staging.toString)
+        }
+        s.read.parquet(compacted)
           .groupBy("o_orderstatus")
           .agg(count(lit(1)).as("n_orders"),
             dsum(col("o_totalprice")).as("sum_total"))
@@ -381,8 +366,8 @@ object SourceOps {
     QueryDef("q_snapshot_asof",
       (s, dir) => {
         import graft.sources.SnapshotStore
-        val tbl = ensureChain(roundTripDir("snap", dir, "orders").toString, 3) {
-          val t = roundTripDir("snap", dir, "orders").toString
+        val tbl = roundTripDir("snap", dir, "orders", "v=3/_SUCCESS") { staging =>
+          val t = staging.toString
           val base = rd(s, dir, "orders")
             .select("o_orderkey", "o_custkey", "o_totalprice")
           SnapshotStore.writeVersion(base, t)
@@ -435,8 +420,8 @@ object SourceOps {
     QueryDef("q_snapshot_pruned",
       (s, dir) => {
         import graft.sources.SnapshotStore
-        val tbl = ensureChain(roundTripDir("snapm", dir, "orders").toString, 2) {
-          val t = roundTripDir("snapm", dir, "orders").toString
+        val tbl = roundTripDir("snapm", dir, "orders", "v=2/_SUCCESS") { staging =>
+          val t = staging.toString
           val base = rd(s, dir, "orders")
             .select("o_orderkey", "o_custkey", "o_totalprice")
             .repartitionByRange(8, col("o_totalprice"))

@@ -96,7 +96,9 @@ object ManifestStore {
   def stamped(prefix: String, dir: String, table: String): Stamped =
     Stamped(prefix + dirTag(dir) + "_", Q.contentStamp(dir, table))
 
-  /** Resolve (and create) the long-lived store dir for `dir`'s artifact. */
+  /** Resolve (and create) the long-lived store dir for `dir`'s artifact.
+   * Not a [[Stamped]] dir built through `Q.ensureStamped`: a refresh
+   * writes only its delta into the store (see above). */
   def storeDir(prefix: String, dir: String): Path = {
     val d = root.resolve(prefix + dirTag(dir))
     Files.createDirectories(d.resolve("segs"))
@@ -129,15 +131,6 @@ object ManifestStore {
    * does: empty only if the dir is actually gone, retry while it
    * lives, propagate a persistent partial loudly. */
   private def listDir(p: Path): Vector[Path] = {
-    def isVanish(t: Throwable): Boolean = t match {
-      case _: java.nio.file.NoSuchFileException => true
-      // Files.list wraps IO errors DURING iteration (an entry vanishing
-      // mid-listing) in UncheckedIOException — same reading as the
-      // bare form (the Q.deleteRecursively precedent)
-      case e: java.io.UncheckedIOException =>
-        e.getCause.isInstanceOf[java.nio.file.NoSuchFileException]
-      case _ => false
-    }
     var tries = 0
     while (true) {
       tries += 1
@@ -153,6 +146,16 @@ object ManifestStore {
       }
     }
     Vector.empty // unreachable
+  }
+
+  /** A concurrent deleter removed something under a walk or listing:
+   * the bare NoSuchFileException, or the UncheckedIOException that
+   * `Files.list`/`Files.walk` wrap it in during iteration. */
+  private[graft] def isVanish(t: Throwable): Boolean = t match {
+    case _: java.nio.file.NoSuchFileException => true
+    case e: java.io.UncheckedIOException =>
+      e.getCause.isInstanceOf[java.nio.file.NoSuchFileException]
+    case _ => false
   }
 
   /** All published manifest files in the store. */
@@ -219,7 +222,7 @@ object ManifestStore {
     }
 
   /** Last-modified millis, with a vanished file sorting oldest. */
-  private def mtimeOrZero(p: Path): Long =
+  private[graft] def mtimeOrZero(p: Path): Long =
     try Files.getLastModifiedTime(p).toMillis
     catch { case _: java.nio.file.NoSuchFileException => 0L }
 
@@ -309,17 +312,24 @@ object ManifestStore {
    * NOT unique across PID recycling — a crashed builder's leftover
    * `seg_<pid>_<n>` plus a new process recycling that pid (counter
    * restarting at 1) would collide in [[finalizeSeg]]'s rename (r18
-   * review finding). [[ownerAlive]] still finds the pid: it takes the
-   * FIRST all-digit underscore token, and the pid precedes this. */
-  private val jvmToken: String =
+   * review finding). [[ownerAlive]] reads the pid as the token right
+   * after `.stage_`, which precedes this one. */
+  private[graft] val jvmToken: String =
     java.lang.Long.toUnsignedString(System.nanoTime(), 36)
+
+  /** A fresh `.stage_<pid>_<jvmToken>_<n>` name, unique per invocation
+   * (two threads of one JVM never share one) and across pid recycling.
+   * Segment staging and every stamped artifact's staging
+   * ([[graft.queries.Q.stagingFor]]) are named here, so [[stageLive]]
+   * can judge either. */
+  private[graft] def stageName(): String =
+    ".stage_" + ProcessHandle.current().pid() + "_" + jvmToken + "_" +
+      segSeq.incrementAndGet()
 
   /** A fresh staging dir under `segs/` — invisible to GC until
    * [[finalizeSeg]] renames it to its published name. */
   def newSegStaging(store: Path): Path =
-    store.resolve("segs").resolve(
-      ".stage_" + ProcessHandle.current().pid() + "_" + jvmToken +
-        "_" + segSeq.incrementAndGet())
+    store.resolve("segs").resolve(stageName())
 
   /** Publish a fully-written staged segment (one rename; the name is
    * unique per invocation — pid + per-JVM token + counter — so this
@@ -476,14 +486,19 @@ object ManifestStore {
     currentManifest(store, built.stamp).getOrElse(built)
   }
 
-  /** Is this `.stage_<pid>_<n>` / `.manifest_tmp_<pid>_<n>` name owned
-   * by a process that is still alive? A crashed builder's staging must
-   * not leak forever (the very tmp-leak class this protocol exists to
-   * fix); a LIVE concurrent builder's must never be swept. */
+  /** Is this `.stage_<pid>_…` / `.manifest_tmp_<pid>_<n>` /
+   * `.heal_<pid>_<n>` name owned by a process that is still alive? A
+   * crashed builder's staging must not leak forever (the very tmp-leak
+   * class this protocol exists to fix); a LIVE concurrent builder's
+   * must never be swept. The pid is the token right after the infix:
+   * a stamped artifact's staging name starts with its family, whose
+   * corpus tag or stamp can itself be all digits. */
   private def ownerAlive(name: String): Boolean = {
-    val pid = name.split('_').collectFirst {
-      case t if t.nonEmpty && t.forall(_.isDigit) => t.toLong
-    }
+    val pid = Seq(".stage_", ".manifest_tmp_", ".heal_").collectFirst {
+      case m if name.contains(m) =>
+        name.substring(name.lastIndexOf(m) + m.length).takeWhile(_ != '_')
+    }.filter(t => t.nonEmpty && t.forall(c => c >= '0' && c <= '9'))
+      .flatMap(_.toLongOption)
     pid.flatMap(p =>
         scala.jdk.OptionConverters.RichOptional(ProcessHandle.of(p)).toScala)
       .exists(_.isAlive)
@@ -530,12 +545,6 @@ object ManifestStore {
    * to the age check (its owner being dead or recycled is already
    * required for reclaim). */
   private def newestMtime(p: Path): Long = {
-    def isVanish(e: Throwable): Boolean = e match {
-      case _: java.nio.file.NoSuchFileException => true
-      case u: java.io.UncheckedIOException =>
-        u.getCause.isInstanceOf[java.nio.file.NoSuchFileException]
-      case _ => false
-    }
     // accumulate as we iterate: a mid-walk failure of the NON-vanish
     // class (e.g. AccessDeniedException surfaced by a live owner's
     // concurrent renames on a non-POSIX fs) must not discard the deep
@@ -565,7 +574,7 @@ object ManifestStore {
   /** In-flight staging survives GC only while its owner is alive AND
    * the tree saw write activity within [[STAGE_MAX_AGE_MS]] — bare
    * liveness is not proof of ownership after PID recycling. */
-  private def stageLive(p: Path): Boolean =
+  private[graft] def stageLive(p: Path): Boolean =
     ownerAlive(p.getFileName.toString) &&
       System.currentTimeMillis() - newestMtime(p) < STAGE_MAX_AGE_MS
 
@@ -778,12 +787,7 @@ object ManifestStore {
           try w.iterator().asScala
             .filter(Files.isRegularFile(_)).map(Files.size).sum
           finally w.close()
-        } catch {
-          case _: java.nio.file.NoSuchFileException => 0L
-          case ex: java.io.UncheckedIOException
-              if ex.getCause.isInstanceOf[java.nio.file.NoSuchFileException] =>
-            0L
-        }
+        } catch { case e: Throwable if isVanish(e) => 0L }
       }
     }.sum
 }

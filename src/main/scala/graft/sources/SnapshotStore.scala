@@ -33,7 +33,7 @@ object SnapshotStore {
 
   /** Every `v=N` directory number, committed or not. Only BOUNDED
    * pure-ASCII-integer suffixes parse: [[writeVersionWithManifest]]
-   * stages in a sibling named `v=N.stage_<pid>_<seq>` inside the table
+   * stages in a sibling named `v=N.stage_<pid>_<token>_<n>` inside the table
    * dir, and a crashed or concurrent writer's staging must read as
    * debris to skip — the old bare `toInt` threw NumberFormatException
    * on it, making the WHOLE table unlistable after one mid-write crash

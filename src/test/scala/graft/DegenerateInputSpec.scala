@@ -14,8 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
 class DegenerateInputSpec extends AnyFunSuite {
   import SparkTestBase.spark
 
+  private def tmpDir(name: String): String =
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), name).toString
+
   private lazy val emptyDir: String = {
-    val dir = s"/tmp/graft-test-empty-${ProcessHandle.current().pid()}"
+    val dir = tmpDir(s"graft-test-empty-${ProcessHandle.current().pid()}")
     def write(table: String, schema: StructType): Unit =
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -140,7 +143,7 @@ class DegenerateInputSpec extends AnyFunSuite {
     // null-source rows the flat window (and the oracle) keep. The gate
     // corpus has no nulls; this corpus plants them.
     import org.apache.spark.sql.Row
-    val dir = s"/tmp/graft-test-nullsrc-${ProcessHandle.current().pid()}"
+    val dir = tmpDir(s"graft-test-nullsrc-${ProcessHandle.current().pid()}")
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),

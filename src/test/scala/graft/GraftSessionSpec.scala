@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftSessionSpec extends AnyFunSuite {
 
   test("the factory's session carries the engine confs, master and shuffle width") {
-    // SparkTestBase builds its session with GraftSession("local[8]", 8, …);
+    // SparkTestBase builds its session with GraftSession("local[8]", 8);
     // a new session reads the confs it was built with, not the runtime
     // edits other suites make to the shared one
     val s = SparkTestBase.spark.newSession()
@@ -27,13 +27,16 @@ class GraftSessionSpec extends AnyFunSuite {
 
   /** The main sources (relative to src/main/scala) whose text contains
    * any of `needles`. */
-  private def mainSourcesWith(needles: String*): List[String] = {
+  private def mainSourcesWith(needles: String*): List[String] =
+    mainSourcesWhere(text => needles.exists(text.contains))
+
+  private def mainSourcesWhere(hit: String => Boolean): List[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root: $root")
     val walk = Files.walk(root)
     try walk.iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filter { p => val text = Files.readString(p); needles.exists(text.contains) }
+      .filter(p => hit(Files.readString(p)))
       .map(p => root.relativize(p).toString).toList.sorted
     finally walk.close()
   }
@@ -59,6 +62,14 @@ class GraftSessionSpec extends AnyFunSuite {
     // sweep and reuse
     val hits = mainSourcesWith("java.io.tmpdir", "dirTag(")
     assert(hits == List("graft/sources/ManifestStore.scala"), hits)
+    // a one-argument createTempDirectory reads java.io.tmpdir implicitly
+    // (an argument list without a top-level comma)
+    val oneArg = """createTempDirectory\((?:[^(),]|\([^()]*\))*\)""".r
+    assert(oneArg.findFirstIn("Files.createTempDirectory(s\"graft_$n\")").nonEmpty)
+    assert(oneArg.findFirstIn("createTempDirectory(f(a, b))").nonEmpty)
+    assert(oneArg.findFirstIn("createTempDirectory(root, s\"graft_$n\")").isEmpty)
+    val implicitRoot = mainSourcesWhere(oneArg.findFirstIn(_).nonEmpty)
+    assert(implicitRoot.isEmpty, implicitRoot)
   }
 
   test("without a warehouse conf, managed tables live under the artifact root") {

@@ -13,6 +13,19 @@ class SourcesSpec extends AnyFunSuite {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  /** A private copy of sf0.001's `tables`: artifacts planted for it
+   * cannot meet the shared corpus's. */
+  private def corpusCopy(tables: String*): String = {
+    val d = Files.createTempDirectory("graft-corpus")
+    for (t <- tables) {
+      val src = java.nio.file.Paths.get(sf, s"$t.parquet")
+      val w = Files.walk(src)
+      try w.forEach(p => Files.copy(p, d.resolve(src.getParent.relativize(p))))
+      finally w.close()
+    }
+    d.toString
+  }
+
   test("csv sink/source round-trip preserves events rows") {
     val e = graft.queries.Q.events(spark, sf)
       .select("event_id", "user_id", "event_type", "value")
@@ -115,5 +128,29 @@ class SourcesSpec extends AnyFunSuite {
       .filter(col("o_orderstatus").isNotNull).count() == 0)
     assert(merged.filter(col("o_orderkey") % 2 === 1)
       .filter(col("o_orderstatus").isNull).count() == 0)
+  }
+
+  test("a half-built export is replaced, not served") {
+    // a run killed between q_schema_evolution's two writes leaves its
+    // dir holding gen=1 only
+    val half = corpusCopy("orders")
+    val evo = graft.sources.ManifestStore.stamped("graft_src2_evo_", half, "orders").path
+    spark.read.parquet(s"$half/orders.parquet")
+      .filter(col("o_orderkey") % 2 === 0)
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+      .write.parquet(evo.resolve("gen=1").toString)
+    val q = SparkEntry.queries("q_schema_evolution")
+    assert(q(spark, half).collect().toSeq == q(spark, corpusCopy("orders")).collect().toSeq)
+  }
+
+  test("a regenerated source's stale export is swept") {
+    val d = corpusCopy("supplier")
+    val art = graft.sources.ManifestStore.stamped("graft_src2_orc_", d, "supplier")
+    val stale = art.path.resolveSibling(art.family + "0ldstamp")
+    Files.createDirectories(stale)
+    Files.createFile(stale.resolve("_SUCCESS"))
+    SparkEntry.queries("q_orc_source")(spark, d).collect()
+    assert(!Files.exists(stale), "stale stamp must be swept")
+    assert(Files.exists(art.path.resolve("_SUCCESS")))
   }
 }

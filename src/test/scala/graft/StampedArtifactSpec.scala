@@ -3,14 +3,15 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Q
+import graft.sources.ManifestStore
 import graft.sources.ManifestStore.Stamped
 
 /** Q.ensureStamped is the ONE implementation of the build-once
  * artifact protocol for whole-dir artifacts (IVF index, s_incr_dedup
- * corpus index, the CDC and late-data feeds, the near-dup pair table
- * all route through it) — these pins cover the protocol itself:
- * build-once reuse, half-artifact replacement, stale-stamp sweep, and
- * in-flight staging respect. */
+ * corpus index, the CDC and late-data feeds, the near-dup pair table,
+ * SourceOps' exports and snapshot chains all route through it) — these
+ * pins cover the protocol itself: build-once reuse, half-artifact
+ * replacement, stale-stamp sweep, and in-flight staging respect. */
 class StampedArtifactSpec extends AnyFunSuite {
 
   private val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
@@ -69,14 +70,51 @@ class StampedArtifactSpec extends AnyFunSuite {
       val old = tmp.resolve(prefix + "oldstamp")
       Files.createDirectories(old)
       Files.createFile(old.resolve("_SUCCESS"))
-      // a concurrent builder's in-flight staging copy (different pid)
-      val inflight = tmp.resolve(prefix + "s2.stage_99999999")
+      // a concurrent builder's in-flight staging copy (a live pid)
+      val pid = ProcessHandle.current().pid()
+      val inflight = tmp.resolve(prefix + s"s2.stage_${pid}_tok_1")
       Files.createDirectories(inflight)
+      // a crashed builder's copy (no process has this pid)
+      val crashed = tmp.resolve(prefix + "s2.stage_99999999_tok_1")
+      Files.createDirectories(crashed)
       val n = new java.util.concurrent.atomic.AtomicInteger(0)
       Q.ensureStamped(Stamped(prefix, "s2"))(buildInto(n))
       assert(!Files.exists(old), "stale stamp must be swept")
-      assert(Files.exists(inflight), "another pid's staging must survive")
+      assert(Files.exists(inflight), "a live builder's staging must survive")
+      assert(!Files.exists(crashed), "a dead builder's staging must be reclaimed")
     }
+  }
+
+  test("staging is reclaimed by its owner token, not by digits in the family, and when idle") {
+    withPrefix { prefix =>
+      // an all-digit token in the family that names a live pid must not
+      // be read as the staging's owner
+      val pid = ProcessHandle.current().pid()
+      val family = s"$prefix${pid}_"
+      val crashed = tmp.resolve(family + "s5.stage_99999999_tok_1")
+      Files.createDirectories(crashed)
+      // a live pid whose copy saw no write for longer than the lease
+      val idle = tmp.resolve(family + s"s4.stage_${pid}_tok_2")
+      Files.createDirectories(idle)
+      Files.setLastModifiedTime(idle, java.nio.file.attribute.FileTime
+        .fromMillis(System.currentTimeMillis() - ManifestStore.STAGE_MAX_AGE_MS - 60000L))
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      Q.ensureStamped(Stamped(family, "s5"))(buildInto(n))
+      assert(!Files.exists(crashed), "a dead builder's staging must be reclaimed")
+      assert(!Files.exists(idle), "an idle builder's staging must be reclaimed")
+    }
+  }
+
+  test("stamped staging names carry the pid and the JVM token") {
+    val pid = ProcessHandle.current().pid()
+    val a = Q.stagingFor(tmp.resolve("graft_x_s1")).getFileName.toString
+    val b = Q.stagingFor(tmp.resolve("graft_x_s1")).getFileName.toString
+    val want = s"graft_x_s1.stage_${pid}_${ManifestStore.jvmToken}_"
+    assert(a.startsWith(want) && b.startsWith(want), a)
+    assert(a != b, "one name per invocation")
+    // the same generator names the manifest stores' segment staging
+    assert(ManifestStore.newSegStaging(tmp.resolve("unused")).getFileName
+      .toString.startsWith(s".stage_${pid}_${ManifestStore.jvmToken}_"))
   }
 
   test("concurrent builders: loser discards its copy, both serve one artifact") {
