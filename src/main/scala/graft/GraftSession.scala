@@ -35,7 +35,7 @@ object GraftSession {
       // q_triangles −0.90, q_graph_bfs −0.52 (OPTIMIZATION_r21.md).
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.warehouse.dir",
-        graft.sources.ManifestStore.root.resolve("graft_warehouse").toString)
+        graft.sources.ArtifactStore.root.resolve("graft_warehouse").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
  * "of the", a boilerplate 30-gram) lands in ONE WindowExec task, which
  * buffers and sorts the whole partition. At lake scale that task holds
  * ~n_docs rows and serializes the stage on one straggler.
- * `ZIPFPROBE_r*.json` record the knee; this helper is the routed shape
+ * `archive/ZIPFPROBE_r*.json` record the knee; this helper is the routed shape
  * that removes it:
  *
  *  1. `freq = stream.groupBy(key).agg(sum(weight))` — a hash aggregate
@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
  *     4-scan reading was a counter artifact, see
  *     PlanAudit.executedScans), but each consumer still re-runs the
  *     final aggregation over the reused map output, and the three-arm
- *     interleave (`ZIPFPROBE_r15_3arm.json`) read persist at 2.9–3.6 s
+ *     interleave (`archive/ZIPFPROBE_r15_3arm.json`) read persist at 2.9–3.6 s
  *     vs no-persist 4.5–5.5 s on the planted 110× corpus (every rep,
  *     both corpora) — materializing the distinct-keys-sized frame
  *     (8+8 bytes per key, MEMORY_AND_DISK, never corpus-sized) once
@@ -49,9 +49,9 @@ import org.apache.spark.sql.functions._
  * never its value.
  *
  * The persisted frame costs ~9 B per distinct key as compressed
- * columnar (`FREQPROBE_r16.json`: 120M keys cached at 1.08 GB). A key
+ * columnar (`archive/FREQPROBE_r16.json`: 120M keys cached at 1.08 GB). A key
  * space past the executor storage pool does not fit this shape:
- * `FREQPROBE_r16_360m_table.json` records 360M keys under a 6 GiB heap,
+ * `archive/FREQPROBE_r16_360m_table.json` records 360M keys under a 6 GiB heap,
  * where persist OOMs and a bucketed parquet freq table survives.
  */
 object HotColdFreq {

@@ -340,7 +340,7 @@ object Advanced {
         // publish — the whole two-part index appears in one rename, so
         // a concurrent reader can never see cells without centroids);
         // the marker is the LAST-written component's _SUCCESS
-        val idx = Q.ensureStamped(graft.sources.ManifestStore.stamped(
+        val idx = Q.ensureStamped(graft.sources.ArtifactStore.stamped(
             "graft_ivf_idx2_", dir, "embeddings"),
           marker = "centroids/_SUCCESS") { staging =>
           import org.apache.spark.ml.clustering.KMeans
@@ -1066,7 +1066,7 @@ object Advanced {
         // HotColdFreq pays a second kernel pass in the frequency
         // branch but partial-aggregates map-side, broadcasts hot
         // grams around the exchange, and shuffles the cold tail
-        // skew-bounded (`ZIPFPROBE_r*.json`: routed ≥ window at 110× in
+        // skew-bounded (`archive/ZIPFPROBE_r*.json`: routed ≥ window at 110× in
         // both skew regimes, identical checksums).
         val g1 = docs
           .select(col("doc_id"),

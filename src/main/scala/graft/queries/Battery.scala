@@ -823,7 +823,7 @@ object Battery {
         // collision-free and its source content. Catalog tables, not
         // Q.ensureStamped dirs: the catalog owns their location, so
         // there is no dir to stage and rename
-        import graft.sources.ManifestStore.stamped
+        import graft.sources.ArtifactStore.stamped
         val ot = stamped("graft_bkt_orders_", dir, "orders").name
         val ct = stamped("graft_bkt_customer_", dir, "customer").name
         if (!s.catalog.tableExists(ot))
@@ -1639,7 +1639,7 @@ object Battery {
       (s, dir) => {
         // the stamped protocol's marker probe + atomic publish: a
         // crashed half-write is rebuilt, never served
-        val out = Q.ensureStamped(graft.sources.ManifestStore.stamped(
+        val out = Q.ensureStamped(graft.sources.ArtifactStore.stamped(
           "graft_decfix2_", dir, "orders")) { staging =>
           rd(s, dir, "orders")
             .select(col("o_orderkey"), col("o_orderstatus"),

@@ -23,8 +23,8 @@ import Q._
 object LlmOps {
 
   /** BFS lineage-truncation interval (r16: localCheckpoint every N
-   * rounds kills the exponential plan-tree wall; `ITERSCAN_r16*.json`
-   * and `ITERSCAN_r17.json` record the sweep). */
+   * rounds kills the exponential plan-tree wall; `archive/ITERSCAN_r16*.json`
+   * and `archive/ITERSCAN_r17.json` record the sweep). */
   private val BfsTruncateEvery = 5
 
   /** tokens of the space-separated document text */
@@ -138,7 +138,7 @@ object LlmOps {
     // BFS references dist TWICE per round (frontier extraction + the
     // min-merge union), so the LOGICAL tree doubles per iteration even
     // though executed scans stay O(1) — the r16 wall sweep
-    // (`ITERSCAN_r16_wall.json`) measured the knee: 0.78 s at depth 2
+    // (`archive/ITERSCAN_r16_wall.json`) measured the knee: 0.78 s at depth 2
     // growing ~1.6× per added depth to 20.5 s of mostly plan analysis
     // at depth 12
     // (pagerank references ranks once per round and stays linear).
@@ -734,28 +734,29 @@ object LlmOps {
              |ORDER BY a_id, b_id""".stripMargin)),
 
     // ---- incremental signature maintenance ≡ full rebuild ------------
-    // The oracle pin for the round-9 incremental artifact path
-    // (MinHashSigIndex): a scenario corpus (the even-doc_id half of
-    // documents, for bench economy) is grown in two steps inside a
-    // content-stamped tmp twin — base slice (doc_id % 14 != 0) written
-    // and signed, then the delta appended and the artifact refreshed
-    // through the INCREMENTAL path (keep still-covered rows, sign only
-    // the delta, union, atomic republish). The entry then full-outer
-    // joins the served artifact against a from-scratch sigsPlan over
-    // the grown corpus and emits the three disagreement counts, which
-    // the oracle pins to ZERO — rows only the artifact has, rows only
-    // the rebuild has, and doc_ids where signatures or text hashes
-    // differ. n_docs (= the scenario's row count) comes from the same
-    // deterministic filter in both engines, so a scenario-construction
-    // bug cannot hide behind vacuous zero counts. Scenario and
-    // artifact are both stamped by the SOURCE corpus content: reruns
-    // serve the incrementally-built artifact and re-verify equivalence
-    // without re-paying construction; a regenerated corpus rebuilds
-    // both and sweeps the stale twins.
+    // The oracle pin for the signature index's incremental refresh
+    // (MinHashSigIndex through Q.ensureStampedIncr): a scenario corpus
+    // (the even-doc_id half of documents, for bench economy) is grown
+    // in two steps inside a content-stamped tmp twin — base slice
+    // (doc_id % 14 != 0) written and signed, then the delta appended
+    // and the artifact refreshed through the INCREMENTAL path (keep
+    // still-covered rows, sign only the delta, union, atomic
+    // republish). The entry then full-outer joins the served artifact
+    // against a from-scratch sigsPlan over the grown corpus and emits
+    // the three disagreement counts, which the oracle pins to ZERO —
+    // rows only the artifact has, rows only the rebuild has, and
+    // doc_ids where signatures or text hashes differ. n_docs (= the
+    // scenario's row count) comes from the same deterministic filter in
+    // both engines, so a scenario-construction bug cannot hide behind
+    // vacuous zero counts. Scenario and artifact are both stamped by
+    // the SOURCE corpus content: reruns serve the incrementally-built
+    // artifact and re-verify equivalence without re-paying
+    // construction; a regenerated corpus rebuilds both and sweeps the
+    // stale twins.
     QueryDef("q_incr_sigs",
       (s, dir) => {
         import java.nio.file.Files
-        val scenario = graft.sources.ManifestStore.stamped(
+        val scenario = graft.sources.ArtifactStore.stamped(
           "graft_incrscn2_", dir, "documents")
         val scn = scenario.path
         val ready = scn.resolve("_READY")
@@ -763,8 +764,8 @@ object LlmOps {
           // single-writer scenario construction (the driver runs one
           // process; a crashed half-scenario is rebuilt from scratch).
           // Built in place, not through Q.ensureStamped: its signature
-          // store is tagged by the scenario's own path, so a build in
-          // staging would orphan that store at publish
+          // index is tagged by the scenario's own path, so a build in
+          // staging would orphan that index at publish
           Q.deleteRecursively(scn)
           val docs = rd(s, dir, "documents")
             .filter(col("doc_id") % 2 === 0)
@@ -1906,7 +1907,7 @@ object LlmOps {
         // lake scale ("the" appears in ~every doc). HotColdFreq's
         // groupBy partial-aggregates map-side (skew-immune), hot toks
         // broadcast around the exchange, cold tail shuffles bounded
-        // (`ZIPFPROBE_r*.json`: routed ≥ window at 110× in both skew
+        // (`archive/ZIPFPROBE_r*.json`: routed ≥ window at 110× in both skew
         // regimes, checksums identical).
         val withDf = graft.plans.HotColdFreq.withFreq(
           tf, "tok", "df", lit(1L), col("doc_id"))

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.ManifestStore
-import graft.sources.ManifestStore.Stamped
+import graft.sources.ArtifactStore
+import graft.sources.ArtifactStore.Stamped
 
 /**
  * One declared engine query (SURVEY.md §2.C): a Spark implementation plus,
@@ -158,7 +158,7 @@ object Q {
       tries += 1
       try { attempt(); done = true }
       catch {
-        case t if ManifestStore.isVanish(t) =>
+        case t if ArtifactStore.isVanish(t) =>
           if (!Files.exists(p)) done = true // root gone: success
           else if (tries >= 3) throw t // persistent partial: loud
         // else: a child vanished under a live root — walk again
@@ -168,14 +168,14 @@ object Q {
 
   /** Per-invocation staging sibling for an atomically-published
    * artifact dir: `<target>.stage_<pid>_<jvmToken>_<n>`
-   * ([[ManifestStore.stageName]]). Unique per invocation, so two
+   * ([[ArtifactStore.stageName]]). Unique per invocation, so two
    * threads of one JVM building the same artifact never share a
    * staging path, and in-process racers get the same win-or-discard
    * semantics as cross-process ones. [[sweepStaleSiblings]] keeps the
    * copy while its builder is live. */
   def stagingFor(target: java.nio.file.Path): java.nio.file.Path =
     target.resolveSibling(
-      target.getFileName.toString + ManifestStore.stageName())
+      target.getFileName.toString + ArtifactStore.stageName())
 
   /** Publish a fully-built staging dir as `target` by ATOMIC RENAME —
    * the check-then-act fix for content-stamped tmp artifacts (a reader
@@ -198,9 +198,9 @@ object Q {
   }
 
   /** The build-once / content-stamped artifact protocol in one place —
-   * every stamped artifact published as one whole dir goes through
-   * this: q_decimal_agg's table, the IVF and streaming corpus indexes,
-   * the CDC and late-data feeds, the near-dup pair table, and
+   * every stamped artifact goes through this: q_decimal_agg's table,
+   * the IVF and streaming corpus indexes, the CDC and late-data feeds,
+   * the MinHash signature, kNN edge and near-dup pair indexes, and
    * SourceOps' eight exports and three snapshot chains. Resolve
    * `art.path`; if `<dir>/<marker>` is absent, run `build` against a
    * per-invocation staging dir, publish it by ONE atomic rename, then
@@ -215,8 +215,8 @@ object Q {
    * "_SUCCESS" for single parquet writes, the last-written part's
    * marker for multi-part artifacts (`v=<last>/_SUCCESS` for a
    * snapshot chain). Not through here, each for the reason at its
-   * site: the manifest stores, q_incr_sigs' scenario and
-   * q_bucketed_join's tables. Returns the published dir. */
+   * site: q_incr_sigs' scenario and q_bucketed_join's tables. Returns
+   * the published dir. */
   def ensureStamped(art: Stamped, marker: String = "_SUCCESS")
                    (build: java.nio.file.Path => Unit): java.nio.file.Path =
     ensureStampedIncr(art, marker)((staging, _) => build(staging))
@@ -231,8 +231,8 @@ object Q {
    * fails THIS build loudly (propagated after staging cleanup) rather
    * than corrupting anything — the retry then serves the winner's
    * artifact. The equivalence contract (incremental result ≡ full
-   * rebuild) is the builder's to uphold (NeardupPairsIndexSpec pins
-   * the one incremental user). */
+   * rebuild) is the builder's to uphold (MinHashSigIndexSpec,
+   * KnnGraphIndexSpec and NeardupPairsIndexSpec pin its three users). */
   def ensureStampedIncr(art: Stamped, marker: String = "_SUCCESS")
                        (build: (java.nio.file.Path,
                                 Option[java.nio.file.Path]) => Unit)
@@ -287,19 +287,19 @@ object Q {
     import java.nio.file.Files
     siblings(art).filterNot(isStaging)
       .filter(p => Files.exists(p.resolve(marker)))
-      .sortBy(ManifestStore.mtimeOrZero)
+      .sortBy(ArtifactStore.mtimeOrZero)
       .lastOption
   }
 
   /** Sweep stale stamped siblings of `keep` (same family, different
    * stamp): a regenerated source must not leak dead artifact dirs into
    * tmp forever. A `.stage_` copy of any stamp survives while its
-   * builder is live ([[ManifestStore.stageLive]]); a crashed or idle
+   * builder is live ([[ArtifactStore.stageLive]]); a crashed or idle
    * builder's is reclaimed. */
   def sweepStaleSiblings(keep: Stamped): Unit = {
     val (staging, stale) = siblings(keep).partition(isStaging)
     stale.foreach(deleteRecursively)
-    staging.filterNot(ManifestStore.stageLive).foreach(deleteRecursively)
+    staging.filterNot(ArtifactStore.stageLive).foreach(deleteRecursively)
   }
 
   private def isStaging(p: java.nio.file.Path): Boolean =

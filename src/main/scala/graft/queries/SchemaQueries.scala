@@ -28,7 +28,7 @@ object SchemaQueries {
   private def footerSchema(s: SparkSession, prefix: String,
                            schema: StructType, row: Row): StructType = {
     val out = java.nio.file.Files.createTempDirectory(
-      graft.sources.ManifestStore.root, prefix)
+      graft.sources.ArtifactStore.root, prefix)
     try {
       s.createDataFrame(java.util.List.of(row), schema)
         .coalesce(1).write.mode("overwrite").parquet(out.toString)

@@ -39,7 +39,7 @@ object SourceOps {
   private def roundTripDir(fmt: String, dir: String, table: String,
                            marker: String = "_SUCCESS")
                           (build: java.nio.file.Path => Unit): String =
-    ensureStamped(graft.sources.ManifestStore.stamped(
+    ensureStamped(graft.sources.ArtifactStore.stamped(
       s"graft_src2_${fmt}_", dir, table), marker)(build).toString
 
   /** The two-version chain shared by q_snapshot_diff and

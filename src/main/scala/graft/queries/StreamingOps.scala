@@ -98,7 +98,7 @@ object StreamingOps {
     val root =
       if (java.nio.file.Files.isDirectory(shm) &&
         java.nio.file.Files.isWritable(shm)) shm
-      else graft.sources.ManifestStore.root
+      else graft.sources.ArtifactStore.root
     java.nio.file.Files.createTempDirectory(root, s"graft_$name")
   }
 
@@ -216,7 +216,7 @@ object StreamingOps {
    * empirically for all three shared shapes). The memo is the same
    * weak-valued serve-frame memo the persisted artifacts use (memory-
    * sink tables are session-lived; a corpus change moves the stamp). */
-  /** Strong memo for the shared runs — NOT ManifestStore.memoFrame:
+  /** Strong memo for the shared runs — NOT ArtifactStore.memoFrame:
    * that memo's WeakReference values are sized for a ~50 ms artifact
    * relation re-resolve, where a cleared entry is a cheap rebuild.
    * Here the value is a memory-sink-backed result whose rebuild is a
@@ -739,7 +739,7 @@ object StreamingOps {
         // bare exists(idx) check could serve a half-built index forever
         // if a build died between the two writes. Marker = the
         // LAST-written component's _SUCCESS.
-        val idx = Q.ensureStamped(graft.sources.ManifestStore.stamped(
+        val idx = Q.ensureStamped(graft.sources.ArtifactStore.stamped(
             "graft_incr_idx2_", dir, "documents"),
           marker = "sh/_SUCCESS") { staging =>
           val corpus = shingles(
@@ -858,7 +858,7 @@ object StreamingOps {
         // stamped-artifact protocol: staged per-process, published by
         // one atomic rename, stale stamps swept — a concurrent driver
         // can never consume a half-staged feed.
-        val feedDir = Q.ensureStamped(graft.sources.ManifestStore.stamped(
+        val feedDir = Q.ensureStamped(graft.sources.ArtifactStore.stamped(
           "graft_cdc_feed_f2_", dir, "events")) { staging =>
           events(s, dir)
             .select("event_id", "ts", "user_id", "event_type", "value")
@@ -957,7 +957,7 @@ object StreamingOps {
         // complete feed or none. The explicit mtimes (= microbatch
         // order) survive the rename. An empty corpus publishes the
         // marker alone: no feed to stage, no windows to emit.
-        val feedDir = Q.ensureStamped(graft.sources.ManifestStore.stamped(
+        val feedDir = Q.ensureStamped(graft.sources.ArtifactStore.stamped(
             "graft_late_feed_f2_", dir, "events"),
           marker = "_STAGED") { stagingDir =>
           Files.createDirectories(stagingDir)

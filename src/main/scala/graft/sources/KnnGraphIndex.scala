@@ -15,36 +15,25 @@ import graft.queries.Q
  * serves from; each vector's top-[[KMAX]] in-bucket cosine neighbors,
  * rn-labelled, any `k <= KMAX` served as an `rn <= k` filter.
  *
- * Round 10 (VERDICT r9 item 1) moves the artifact onto the
- * [[ManifestStore]] per-partition manifest layout so refresh WRITE I/O
- * is delta-sized. An edge depends ONLY on vectors in its own LSH sign
- * bucket, so the bucket is the exact refresh unit in BOTH directions:
- *
- *  - `edges` segments are laid out one `pb_<bucket>` dir per sign
- *    bucket (the manifest partition), files inside range-clustered on
- *    (bucket, rn) — a small-k serve skips the top-k tail's files via
- *    pushed parquet min/max stats (manifest roots cannot nest k=v
- *    partition dirs; multi-root discovery rejects them — see
- *    [[writeSeg]]).
- *  - `vecs` segments (`pb_<bucket>/`) carry the coverage manifest
- *    (vec_id, bucket, vec_hash) for delta detection.
- *  - A refresh rebuilds ONLY buckets whose membership changed (any
- *    vector added, removed, or re-embedded — anti-joins on (vec_id,
- *    vec_hash)) and writes only those buckets' edge + vecs dirs; every
- *    unchanged bucket is carried over by manifest REFERENCE — zero
- *    data I/O, where the r9 layout rewrote the whole edge set through
- *    one atomic dir rename.
+ * One stamped dir per corpus state, published through
+ * [[Q.ensureStampedIncr]]: `edges/` holds the edge set, `vecs/` the
+ * coverage table (vec_id, bucket, vec_hash) it was built from, written
+ * LAST so `vecs/_SUCCESS` marks a complete artifact. An edge depends
+ * ONLY on vectors in its own LSH sign bucket, so the bucket is the
+ * exact refresh unit in BOTH directions: a refresh rebuilds only the
+ * buckets whose membership changed (any vector added, removed, or
+ * re-embedded — anti-joins on (vec_id, vec_hash) against the base's
+ * `vecs/`) and carries every other bucket's edges from the base as
+ * written. Refresh COMPUTE is therefore ∝ the changed buckets' pair
+ * mass; the write is the graph-sized edge set.
  *
  * Incremental ≡ full rebuild unconditionally (KnnGraphIndexSpec pins
- * carry-over actually happening, equivalence, and delta-sized write
- * bytes): a rebuilt bucket runs the same deterministic plan on the
- * same in-bucket vector set. Atomicity/GC/visibility are
- * [[ManifestStore]]'s manifest contract (segments complete before the
- * manifest referencing them appears; one atomic manifest publish).
+ * carry-over actually happening and equivalence): a rebuilt bucket
+ * runs the same deterministic plan on the same in-bucket vector set.
  *
  * At 100 TB this is exactly a materialized edge table in the lake with
  * a table-format commit: the build is the one Σ|bucket|²-bounded job,
- * refresh touches only changed partitions' files, and every downstream
+ * a refresh recomputes only changed buckets, and every downstream
  * graph algorithm joins against graph-sized parquet.
  */
 object KnnGraphIndex {
@@ -61,21 +50,24 @@ object KnnGraphIndex {
     StructField("cos", DoubleType),
     StructField("rn", IntegerType)))
 
-  /** Coverage-manifest schema (`vecs` entries): which (vec_id, content)
-   * each published bucket's edges were built from. */
+  /** Coverage schema (`vecs/`): which (vec_id, content) each bucket's
+   * edges were built from. */
   val vecsSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("bucket", IntegerType),
     StructField("vec_hash", LongType)))
 
   /** KMAX is part of the layout: a width change must address a fresh
-   * store, or a serve would silently return old-width neighbors. v3
-   * switches the dir tag to the collision-safe
-   * [[ManifestStore.dirTag]]. */
-  private val PREFIX = s"graft_knn_store_k${KMAX}_v3_"
+   * artifact, or a serve would silently return old-width neighbors.
+   * v4: one stamped dir per corpus state (v3 was a segment store). */
+  private val PREFIX = s"graft_knn_edges_k${KMAX}_v4_"
 
-  private[graft] def store(dir: String): Path =
-    ManifestStore.storeDir(PREFIX, dir)
+  private def artifact(dir: String) =
+    ArtifactStore.stamped(PREFIX, dir, "embeddings")
+
+  /** The artifact dir the current corpus state publishes to — exposed
+   * for the spec's tamper probe. */
+  private[graft] def artifactDir(dir: String): Path = artifact(dir).path
 
   /** 16-way LSH sign bucket from the first 4 embedding components —
    * the blocking key (same definition as LlmOps's pairwise family, and
@@ -88,16 +80,15 @@ object KnnGraphIndex {
             |+ 4 * CAST(element_at($a, 3) > 0 AS INT)
             |+ 8 * CAST(element_at($a, 4) > 0 AS INT)""".stripMargin)
 
-  /** The corpus as the manifest sees it: (vec_id, bucket, vec_hash,
-   * embedding). vec_hash is xxhash64 over the float array — a
+  /** The corpus as the coverage table sees it: (vec_id, bucket,
+   * vec_hash, embedding). vec_hash is xxhash64 over the float array — a
    * re-embedded vector changes its hash, so delta detection needs no
    * append-only assumption. */
   private def corpusVecs(s: SparkSession, dir: String): DataFrame =
     Q.rd(s, dir, "embeddings")
       // null and <4-dim embeddings are UNINDEXABLE: the sign-bucket
       // blocking key is undefined (element_at past the end is null →
-      // bucket null), so such a row could publish the
-      // __HIVE_DEFAULT_PARTITION__ dir bucketChildren rejects — or,
+      // bucket null), so such a row would land in a null `pb` dir — or,
       // pre-r18, NPE the refresh's changed-bucket collect. No cosine
       // consumer can ever return them (cosine with null is null), so
       // filtering at the source is the coherent contract — the same
@@ -125,7 +116,7 @@ object KnnGraphIndex {
    * price of parallelizing the quadratic term. Cold buckets get
    * nsub = 1 (sub ≡ 0), the pre-split plan. Gate corpora peak at 137
    * rows/bucket — far under threshold; the split engages only at scale
-   * (`SCALESMOKE_r*.json` time both variants on a planted hot bucket).
+   * (`archive/SCALESMOKE_r*.json` time both variants on a planted hot bucket).
    * Past MAX_SUB·SPLIT_ROWS rows in ONE bucket the shared Salting
    * helper goes two-dimensional (round 13; Salting.scala scaladoc):
    * the b-side also chunks and `sub` becomes a grid cell, so per-task
@@ -140,7 +131,7 @@ object KnnGraphIndex {
    * replicate to all nsub subs. Exposed to the spec so it can pin the
    * per-sub-task a-row bound and the b-side replication factor.
    * `sizesIn`: per-bucket row counts (bucket, bucket_n) when the
-   * caller already has a cheap source — [[refresh]] passes its cached
+   * caller already has a cheap source — [[edges]]' build passes its cached
    * 24-byte (vec_id, bucket, vec_hash) projection's counts so the size
    * pass never re-scans (and re-sign-buckets) the embedding vectors;
    * bucket is COMPUTED from the embedding column, so column pruning
@@ -216,79 +207,72 @@ object KnnGraphIndex {
   def buildPlan(s: SparkSession, dir: String): DataFrame =
     edgesFor(corpusVecs(s, dir))
 
-  /** Write one published segment: `df` keeps its full data schema;
-   * `pb` is a DIRECTORY copy of the bucket used only for layout.
-   * Edges are split on (bucket, rn ≤ KMAX/2) at up to two files per
-   * bucket, each spanning exactly half the rn range — parquet min/max
-   * stats then let a small-k serve skip the top-k tail's files
-   * without a directory scheme (dir-level sub-partitions under
-   * manifest roots trip Spark's multi-root partition discovery), and
-   * the per-file scan overhead of a 16×KMAX-file layout (measured
-   * +0.1 s per serve at gate scale) is avoided. The split is a HASH
-   * repartition on the deterministic half bit, NOT repartitionByRange
-   * (round 13): RangePartitioning samples its child, which RE-EXECUTES
-   * the full quadratic edge-build plan once for the sample and again
-   * for the write — profiling (SCALING.md) read the artifact build at 2× the
+  /** Write the edge set into `out`, clustered on (bucket, rn ≤ KMAX/2)
+   * at up to two files per bucket, each spanning exactly half the rn
+   * range — parquet min/max stats then let a small-k serve skip the
+   * top-k tail's files (the pushed `rn <= k` filter). The bucket dirs
+   * are `pb=<b>` copies of the bucket, layout only: the serve lists the
+   * one root recursively with no partition discovery, so the data
+   * files carry every served column. The split is a HASH repartition
+   * on the deterministic half bit, NOT repartitionByRange (round 13):
+   * RangePartitioning samples its child, which RE-EXECUTES the full
+   * quadratic edge-build plan once for the sample and again for the
+   * write — profiling (SCALING.md) read the artifact build at 2× the
    * bare plan (41.9 vs 17.8 s at 50k vecs) from exactly this. A hash
    * collision merges a bucket's two halves into one file (~40% chance
    * SOME bucket collides per build at 32 keys into 32 partitions), so
    * rows also sort by (pb, rn) WITHIN partitions — a graph-sized sort
    * — which keeps row-group min/max stats tight on rn in merged files
    * (interleaved rn would make every row group span the full range and
-   * defeat the pushed rn <= k filter for that bucket). At lake scale
-   * the half-split granularity is the knob; files are row-group-sized
-   * either way. Returns manifest entries (one per bucket dir). */
-  private def writeSeg(st: Path, df: DataFrame, kind: String,
-                       withRn: Boolean): Seq[ManifestStore.Entry] = {
-    val staging = ManifestStore.newSegStaging(st)
-    val laid = df.withColumn("pb", col("bucket"))
-    val clustered = if (withRn)
-      laid.repartition(2 * 16, col("pb"), col("rn") <= lit(KMAX / 2))
-        .sortWithinPartitions(col("pb"), col("rn"))
-    else laid.repartition(col("pb"))
-    clustered.write.mode("overwrite").partitionBy("pb")
-      .parquet(staging.toString)
-    val seg = ManifestStore.finalizeSeg(staging)
-    ManifestStore.entriesWithRows(df.sparkSession, st, kind,
-      ManifestStore.bucketChildren(st, seg, "pb"), "pb")
-  }
+   * defeat the pushed rn <= k filter for that bucket). */
+  private def writeEdges(df: DataFrame, out: Path): Unit =
+    df.withColumn("pb", col("bucket"))
+      .repartition(2 * 16, col("pb"), col("rn") <= lit(KMAX / 2))
+      .sortWithinPartitions(col("pb"), col("rn"))
+      .write.mode("overwrite").partitionBy("pb").parquet(out.toString)
+
+  private def readEdges(s: SparkSession, artDir: Path): DataFrame =
+    s.read.schema(schema).option("recursiveFileLookup", "true")
+      .parquet(artDir.resolve("edges").toString)
 
   /**
    * The persisted edge set for `dir`'s embeddings, filtered to each
    * vector's top-`k` (`k <= KMAX`): build-if-absent — changed-bucket
-   * refresh against the previous manifest when one survives — then a
-   * dir-pruned scan of the referenced bucket partitions.
+   * refresh against the newest surviving base when one exists — then
+   * a scan of the one artifact dir.
    */
   def edges(s: SparkSession, dir: String, k: Int = 2): DataFrame = {
     require(k >= 1 && k <= KMAX,
       s"edge index serves k in [1, $KMAX], got $k — raise KMAX to widen")
-    val st = store(dir)
-    val stamp = Q.contentStamp(dir, "embeddings")
-    ManifestStore.memoFrame[DataFrame](s, st, stamp) {
-      val m = ManifestStore.lockFor(st).synchronized {
-        ManifestStore.currentManifest(st, stamp).getOrElse {
-          // serve the ON-DISK winner, not the local build: a losing
-          // concurrent builder's segments are gc'ed as unreferenced
-          // (ManifestStore.publishAndServe doc; VERDICT r11 item 1)
-          ManifestStore.publishAndServe(st, refresh(s, st, dir, stamp))
-        }
+    val art = artifact(dir)
+    // same-family builders serialize within the JVM (refreshes across
+    // corpus states too, so none races the base sweep)
+    val idx = ArtifactStore.lockFor(ArtifactStore.root.resolve(art.family))
+      .synchronized {
+      // vecs is written LAST, so its marker is the completeness marker
+      Q.ensureStampedIncr(art, marker = "vecs/_SUCCESS") { (staging, baseOpt) =>
+        build(s, dir, staging, baseOpt)
       }
-      ManifestStore.readEntries(s, st, m.entries, "edges", schema)
+    }
+    ArtifactStore.memoFrame[DataFrame](s, idx, art.stamp) {
+      readEdges(s, idx)
     }.filter(col("rn") <= k) // pushed to parquet; rn-clustered files skip
   }
 
-  private def refresh(s: SparkSession, st: Path, dir: String,
-                      stamp: String): ManifestStore.Manifest = {
+  private def build(s: SparkSession, dir: String, staging: Path,
+                    baseOpt: Option[Path]): Unit = {
     val cur = corpusVecs(s, dir)
-    // the 24-byte/row manifest view is reused across the delta
-    // detection (twice) and the vecs write; caching keeps those passes
-    // off the full embedding scan + rehash. Vectors themselves are
-    // never cached — only the changed-bucket slice re-reads them.
+    // the 24-byte/row coverage view is reused across the delta
+    // detection (twice), the split sizes and the vecs write; caching
+    // keeps those passes off the full embedding scan + rehash. Vectors
+    // themselves are never cached — only the changed-bucket slice
+    // re-reads them.
     val curMeta = cur.select("vec_id", "bucket", "vec_hash").cache()
     try {
-      val entries = ManifestStore.newestOtherManifest(st, stamp) match {
+      val edgeSet = baseOpt match {
         case Some(base) =>
-          val oldVecs = ManifestStore.readEntries(s, st, base.entries, "vecs", vecsSchema)
+          val oldVecs = s.read.schema(vecsSchema)
+            .parquet(base.resolve("vecs").toString)
           // a bucket must rebuild iff its membership changed in either
           // direction; both anti-joins shuffle only (id, hash, bucket)
           val changed = curMeta
@@ -299,9 +283,9 @@ object KnnGraphIndex {
               .join(curMeta.select("vec_id", "vec_hash"),
                 Seq("vec_id", "vec_hash"), "left_anti")
               .select("bucket"))
-            .distinct().collect().map(_.getInt(0)).toSet // ≤ 16 values
-          val carried = base.entries
-            .filterNot(e => changed.contains(e.bucket))
+            .distinct().collect().map(_.getInt(0)).toSeq // ≤ 16 values
+          val carried = readEdges(s, base)
+            .filter(!col("bucket").isin(changed: _*))
           if (changed.isEmpty) carried
           else {
             // the changed-bucket slice re-reads the embeddings scan and
@@ -309,25 +293,22 @@ object KnnGraphIndex {
             // scale the upgrade is storing the corpus bucketed by the
             // sign key, turning this into a pruned scan of exactly the
             // changed buckets' files.
-            val slice = cur.filter(col("bucket").isin(changed.toSeq: _*))
+            val slice = cur.filter(col("bucket").isin(changed: _*))
             // split sizes from the CACHED 24-byte projection — never a
             // second scan+rehash of the embedding vectors (saltedSides)
             val sliceSizes = curMeta
-              .filter(col("bucket").isin(changed.toSeq: _*))
+              .filter(col("bucket").isin(changed: _*))
               .groupBy("bucket").agg(count(lit(1)).as("bucket_n"))
-            writeSeg(st, edgesFor(slice, Some(sliceSizes)),
-                "edges", withRn = true) ++
-              writeSeg(st,
-                curMeta.filter(col("bucket").isin(changed.toSeq: _*)),
-                "vecs", withRn = false) ++ carried
+            carried.unionByName(edgesFor(slice, Some(sliceSizes)))
           }
         case None =>
           val sizes = curMeta.groupBy("bucket")
             .agg(count(lit(1)).as("bucket_n"))
-          writeSeg(st, edgesFor(cur, Some(sizes)), "edges", withRn = true) ++
-            writeSeg(st, curMeta, "vecs", withRn = false)
+          edgesFor(cur, Some(sizes))
       }
-      ManifestStore.Manifest(stamp, entries)
+      writeEdges(edgeSet, staging.resolve("edges"))
+      curMeta.repartition(1).write.mode("overwrite")
+        .parquet(staging.resolve("vecs").toString)
     } finally curMeta.unpersist()
   }
 }

@@ -15,38 +15,21 @@ import graft.queries.Q
  * q_cluster_rep, q_split_leakage) serves from instead of re-running
  * the corpus-wide shingle explode + 32-permutation MinHash fold.
  *
- * Round 10 (VERDICT r9 item 1) moves the artifact onto the
- * [[ManifestStore]] per-partition manifest layout so refresh WRITE I/O
- * is delta-sized, not corpus-sized:
- *
- *  - Rows live in immutable parquet segments partitioned by a stable
- *    doc_id bucket (`pmod(doc_id, 32)`). The per-stamp manifest maps
- *    each bucket to its ordered chain of segment dirs.
- *  - A refresh signs ONLY docs whose (doc_id, text_hash) no segment
- *    already holds (left-anti over 16-byte keys — the corpus-scale
- *    shingle+fold runs over the delta slice) and appends ONE new
- *    delta segment; every other byte of the artifact is carried over
- *    by manifest reference, zero data I/O.
- *  - Removed/changed rows are masked by a TOMBSTONE segment — the
- *    complete current set `segKeys − corpusKeys`, rewritten each
- *    refresh (it is delta-cumulative-sized and bounded by compaction),
- *    and applied at serve as one left-anti join on (doc_id,
- *    text_hash). AQE broadcasts it in the common case.
- *  - INVARIANT: the (doc_id, text_hash) key sets of the data segments
- *    are pairwise DISJOINT — a key is signed at most once for the
- *    lifetime of its segment. Delta detection anti-joins against ALL
- *    segment keys (not just live rows), so a doc that reverts to a
- *    previous text resurrects its existing row by tombstone removal
- *    instead of being signed again — which is what makes the serve a
- *    plain union + anti, no dedup shuffle.
- *  - When a bucket's chain exceeds [[MAXCHAIN]] segments, that BUCKET
- *    is compacted: its reconciled rows rewrite into one segment
- *    (I/O ∝ bucket, never corpus) and its tombstones drop.
+ * One parquet dir per corpus state, published through
+ * [[Q.ensureStampedIncr]] (staging, one atomic rename, post-publish
+ * stale sweep). A stamp change with a surviving base refreshes
+ * incrementally: the base rows whose (doc_id, text_hash) is still in
+ * the corpus are kept as written, only the missing keys are signed
+ * (the corpus-scale shingle+fold runs over the delta slice), and the
+ * union is written as the new dir. A removed key simply drops; a key
+ * that returns later is signed again. Refresh COMPUTE is therefore
+ * delta-sized; the write is the signature table itself, one
+ * fixed-width row per doc.
  *
  * Incremental ≡ full rebuild UNCONDITIONALLY (q_incr_sigs oracle-pins
  * it in the gate; MinHashSigIndexSpec pins the carry-over actually
- * happening and the delta-sized write bytes). The serve schema is
- * unchanged from r9 — consumers are untouched.
+ * happening). The serve schema is unchanged from r9 — consumers are
+ * untouched.
  */
 object MinHashSigIndex {
 
@@ -56,172 +39,67 @@ object MinHashSigIndex {
     StructField("text_hash", LongType),
     StructField("n_sh", IntegerType)))
 
-  private val keySchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text_hash", LongType)))
+  /** v7: one stamped dir per corpus state (v6 was a segment store). */
+  private val PREFIX = "graft_minhash_sigs_v7_"
 
-  /** Stable doc_id buckets — the per-partition refresh/compaction unit
-   * (and, at lake scale, the parallel-compaction unit: each bucket's
-   * chain compacts independently). */
-  val NBUCKETS = 32
+  private def artifact(dir: String) =
+    ArtifactStore.stamped(PREFIX, dir, "documents")
 
-  /** Per-bucket segment-chain bound: past this, the bucket compacts. */
-  val MAXCHAIN = 4
-
-  private def bucketOf(c: org.apache.spark.sql.Column) =
-    pmod(c, lit(NBUCKETS.toLong)).cast("int")
-
-  /** NBUCKETS is part of the layout (the r18 review's KMAX-precedent
-   * hole): published segment dirs and manifest entries carry bucket
-   * ids computed under it, and a width change against an existing
-   * store would make compaction's slice filter (`bucketOf(doc_id)
-   * isin old-ids`) silently EMPTY — the bucket's live rows dropped at
-   * the next compaction. Encoding the width here forces a fresh store
-   * instead. v6 also switches the dir tag to the collision-safe
-   * [[ManifestStore.dirTag]]. */
-  private val PREFIX = s"graft_minhash_store_v6_b${NBUCKETS}_"
-
-  private[graft] def store(dir: String): Path =
-    ManifestStore.storeDir(PREFIX, dir)
+  /** The artifact dir the current corpus state publishes to — exposed
+   * for the spec's tamper probe. */
+  private[graft] def artifactDir(dir: String): Path = artifact(dir).path
 
   /** The full-corpus signature-build plan (unpersisted) — exposed for
    * spec pins. */
   def buildPlan(s: SparkSession, dir: String): DataFrame =
     graft.queries.LlmOps.sigsPlan(s, dir)
 
-  /** Serve the reconciled table from an entry set: union of data
-   * segments, minus tombstoned keys. Steady-state (one segment, no
-   * tombstones) this is a single multi-path scan — the r9 serve plan. */
-  private def serveFrom(s: SparkSession, st: Path,
-                        entries: Seq[ManifestStore.Entry]): DataFrame = {
-    val data = ManifestStore.readEntries(s, st, entries, "data", schema)
-    val tombs = entries.filter(_.kind == "tomb")
-    if (tombs.isEmpty) data
-    else data.join(ManifestStore.readEntries(s, st, entries, "tomb", keySchema),
-        Seq("doc_id", "text_hash"), "left_anti")
-      .select(schema.fieldNames.map(col): _*) // join hoists key columns
-  }
-
-  /** Write `df` (schema [+ bucket]) as one published bucket-partitioned
-   * segment; returns its manifest entries under `kind`, row counts
-   * recorded (the compaction-pressure statistic). One shuffle on the
-   * bucket key keeps it one file per bucket dir. */
-  private def writeSeg(st: Path, df: DataFrame, kind: String)
-      : Seq[ManifestStore.Entry] = {
-    val staging = ManifestStore.newSegStaging(st)
-    df.withColumn("bucket", bucketOf(col("doc_id")))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(staging.toString)
-    val seg = ManifestStore.finalizeSeg(staging)
-    ManifestStore.entriesWithRows(df.sparkSession, st, kind,
-      ManifestStore.bucketChildren(st, seg))
-  }
-
   /** The persisted signature table for `dir`'s documents:
-   * build-if-absent — delta-segment refresh against the previous
-   * manifest when one survives — then the reconciled serve. */
+   * build-if-absent — keep-and-sign-the-delta refresh against the
+   * newest surviving base when one exists — then a single-dir scan. */
   def sigs(s: SparkSession, dir: String): DataFrame = {
-    val st = store(dir)
-    val stamp = Q.contentStamp(dir, "documents")
-    ManifestStore.memoFrame[DataFrame](s, st, stamp) {
-      val m = ManifestStore.lockFor(st).synchronized {
-        ManifestStore.currentManifest(st, stamp).getOrElse {
-          // serve the ON-DISK winner, not the local build: a losing
-          // concurrent builder's segments are gc'ed as unreferenced
-          // (ManifestStore.publishAndServe doc; VERDICT r11 item 1)
-          ManifestStore.publishAndServe(st, refresh(s, st, dir, stamp))
+    val art = artifact(dir)
+    // same-family builders serialize within the JVM (refreshes across
+    // corpus states too, so none races the base sweep)
+    val idx = ArtifactStore.lockFor(ArtifactStore.root.resolve(art.family))
+      .synchronized {
+      Q.ensureStampedIncr(art) { (staging, baseOpt) =>
+        // null doc_id rows are UNINDEXABLE (no keyed consumer could
+        // ever address the row): filtered at the source, the same
+        // no-null-mass contract as HotColdFreq's freq frame
+        val docs = Q.rd(s, dir, "documents")
+          .filter(col("doc_id").isNotNull)
+          .select(col("doc_id"), col("text"),
+            xxhash64(col("text")).as("text_hash"))
+        baseOpt match {
+          case Some(base) =>
+            // CACHED: the 16-byte key projection feeds both directions
+            // (kept rows and fresh keys); uncached, each re-paid the
+            // corpus text scan + rehash. Text never crosses an
+            // exchange — freshKeys (delta-sized) joins back against
+            // the corpus scan, AQE broadcasts it when the delta is small.
+            val keys = docs.select("doc_id", "text_hash").cache()
+            try {
+              val old = s.read.schema(schema).parquet(base.toString)
+              val kept = old.join(keys, Seq("doc_id", "text_hash"), "left_semi")
+              val freshKeys = keys.join(old.select("doc_id", "text_hash"),
+                Seq("doc_id", "text_hash"), "left_anti")
+              val fresh = graft.queries.LlmOps.sigsPlanFor(
+                docs.join(freshKeys, Seq("doc_id", "text_hash"), "left_semi")
+                  .select("doc_id", "text"))
+              write(kept.unionByName(fresh), staging)
+            } finally keys.unpersist()
+          case None =>
+            write(graft.queries.LlmOps.sigsPlanFor(
+              docs.select("doc_id", "text")), staging)
         }
       }
-      serveFrom(s, st, m.entries)
+    }
+    ArtifactStore.memoFrame[DataFrame](s, idx, art.stamp) {
+      s.read.schema(schema).parquet(idx.toString)
     }
   }
 
-  private def refresh(s: SparkSession, st: Path, dir: String,
-                      stamp: String): ManifestStore.Manifest = {
-    // null doc_id rows are UNINDEXABLE here (the bucket key is
-    // pmod(doc_id, N) — a null bucket would publish the
-    // __HIVE_DEFAULT_PARTITION__ dir bucketChildren rejects, and no
-    // keyed consumer could ever address the row): filtered at the
-    // source, the same no-null-mass contract as HotColdFreq's freq frame
-    val docs = Q.rd(s, dir, "documents")
-      .filter(col("doc_id").isNotNull)
-      .select(col("doc_id"), col("text"),
-        xxhash64(col("text")).as("text_hash"))
-    val entries = ManifestStore.newestOtherManifest(st, stamp) match {
-      case Some(base) =>
-        // all keys physically present in segments — NOT the live set:
-        // anti-joining fresh against segment keys (disjointness
-        // invariant) is what lets a reverted doc resurrect its old row
-        // instead of creating a duplicate. 16-byte keys only; text
-        // never crosses an exchange — freshKeys (delta-sized) joins
-        // back against the corpus scan, AQE broadcasts it when the
-        // delta is small.
-        val segKeys = ManifestStore.readEntries(s, st, base.entries, "data", keySchema)
-        // CACHED: dh's lineage is the full corpus text scan + rehash,
-        // and it feeds BOTH delta directions (freshKeys below and the
-        // tombstone anti-join) — uncached, each write re-paid a corpus
-        // text pass, tripling the refresh's widest-column I/O (r18
-        // review; the 16-byte/row cache is the same pattern as
-        // KnnGraphIndex's curMeta)
-        val dh = docs.select("doc_id", "text_hash").cache()
-        try {
-          val freshKeys = dh.join(segKeys,
-            Seq("doc_id", "text_hash"), "left_anti")
-          val fresh = docs.join(freshKeys,
-            Seq("doc_id", "text_hash"), "left_semi")
-          val dataEntries = base.entries.filter(_.kind == "data") ++
-            writeSeg(st, graft.queries.LlmOps.sigsPlanFor(
-              fresh.select("doc_id", "text")), "data")
-          // complete tombstone set, rewritten each refresh (tiny: keys
-          // ever written minus keys still in the corpus; compaction
-          // resets it) — a key re-added to the corpus leaves the set
-          // here, un-masking its surviving row
-          val tombEntries = writeSeg(st,
-            segKeys.join(dh, Seq("doc_id", "text_hash"), "left_anti"),
-            "tomb")
-          maybeCompact(s, st, dataEntries ++ tombEntries)
-        } finally dh.unpersist()
-      case None =>
-        writeSeg(st, graft.queries.LlmOps.sigsPlanFor(
-          docs.select("doc_id", "text")), "data")
-    }
-    ManifestStore.Manifest(stamp, entries)
-  }
-
-  /** Buckets under compaction pressure rewrite into one fresh segment
-   * from their RECONCILED rows (per-bucket I/O, never corpus); their
-   * old data entries and tombstones drop from the manifest. Everything
-   * else is carried over untouched. Two triggers, both read from the
-   * manifest's recorded row counts — no extra jobs:
-   *  - chain length > [[MAXCHAIN]] (append pressure: too many
-   *    segments to union at serve);
-   *  - tombstoned rows > 30% of the bucket's physical rows (delete
-   *    pressure: a shrink-only corpus appends no segments, so without
-   *    this the cumulative tombstone set would be rewritten per
-   *    refresh and dead rows never reclaimed — write I/O would grow
-   *    with total-ever-deleted instead of the delta). */
-  private def maybeCompact(s: SparkSession, st: Path,
-                           entries: Seq[ManifestStore.Entry])
-      : Seq[ManifestStore.Entry] = {
-    val data = entries.filter(_.kind == "data")
-    val chainLen = data.groupBy(_.bucket).view.mapValues(_.size)
-    val dataRows = data.groupBy(_.bucket).view.mapValues(_.map(_.rows).sum)
-    val deletePressure = entries.filter(_.kind == "tomb")
-      .groupBy(_.bucket).collect {
-        case (b, es) if es.map(_.rows).sum * 10 >
-          dataRows.getOrElse(b, 0L) * 3 => b
-      }.toSet
-    val compacting =
-      chainLen.filter(_._2 > MAXCHAIN).keys.toSet ++ deletePressure
-    if (compacting.isEmpty) entries
-    else {
-      val slice = serveFrom(s, st,
-          entries.filter(e => compacting.contains(e.bucket) ||
-            e.kind == "tomb"))
-        .filter(bucketOf(col("doc_id")).isin(compacting.toSeq: _*))
-      val compacted = writeSeg(st, slice, "data")
-      entries.filterNot(e => compacting.contains(e.bucket)) ++ compacted
-    }
-  }
+  private def write(table: DataFrame, staging: Path): Unit =
+    table.write.mode("overwrite").parquet(staging.toString)
 }

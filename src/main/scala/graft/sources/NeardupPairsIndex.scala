@@ -31,7 +31,7 @@ import graft.queries.Q
  * artifact full-rebuilt per stamp, so a 1-doc append re-paid the full
  * corpus band join, 356 s at the 110× smoke). The artifact now carries
  * a COVER table — the (doc_id, text_hash) corpus identity it was built
- * from, the 16-byte/row projection the signature store already keys
+ * from, the 16-byte/row projection the signature index already keys
  * delta detection on — and a stamp change with a surviving base
  * refreshes through [[Q.ensureStampedIncr]]:
  *
@@ -59,15 +59,14 @@ import graft.queries.Q
  * runs), and endpoint-removal drops. At a small delta the cross band
  * join broadcasts the delta side, so the corpus-side cost is a scan
  * of the persisted signature artifact — compute ∝ delta, the 110×
- * refresh-vs-build rows of `SCALESMOKE_r20*.json` are the measured curve.
+ * refresh-vs-build rows of `archive/SCALESMOKE_r20*.json` are the measured curve.
  *
  * Layout: `<stamped dir>/pairs` + `<stamped dir>/cover`, published by
  * the shared stamped-artifact protocol (per-process staging, one
  * atomic rename, post-publish stale sweep so the base outlives the
- * build reading it) — not the per-partition ManifestStore: pairs are
+ * build reading it), like the signature and edge indexes: pairs are
  * graph-sized and the cover is 16 bytes/doc, so a full republish of
- * BOTH is orders of magnitude below corpus I/O (the store's
- * per-partition machinery would buy nothing here).
+ * BOTH is orders of magnitude below corpus I/O.
  *
  * Serve schema: (a_id, b_id, jaccard) with a_id < b_id, full-precision
  * jaccard — consumers round at their declared output.
@@ -92,7 +91,7 @@ object NeardupPairsIndex {
    * two decimals (0.585 → t58) AND made post-fix 0.57 resolve to a
    * PRE-fix 0.58 artifact published under the truncated t57 — hence
    * the v3 layout bump. The v4 bump moved the corpus tag from 32-bit
-   * `dir.hashCode` to [[ManifestStore.dirTag]]: under the old tag, two
+   * `dir.hashCode` to [[ArtifactStore.dirTag]]: under the old tag, two
    * corpus dirs colliding on hashCode shared a prefix, so
    * `ensureStampedIncr` could adopt the OTHER corpus's pair table as
    * its incremental base and silently carry its pairs. */
@@ -117,7 +116,7 @@ object NeardupPairsIndex {
 
   /** The artifact the current corpus state publishes to. */
   private def artifact(dir: String, threshold: Double) =
-    ManifestStore.stamped(prefix(threshold), dir, "documents")
+    ArtifactStore.stamped(prefix(threshold), dir, "documents")
 
   /** The artifact dir the current corpus state publishes to — exposed
    * for the spec's tamper probe. */
@@ -129,9 +128,7 @@ object NeardupPairsIndex {
    * build's final stage (the exact-verify join runs after the last
    * exchange) to one task; the explicit shuffle moves only the
    * graph-sized result rows and keeps the verify parallel. The cover
-   * is corpus-CARDINALITY but 16 bytes/row (a metadata-class write; at
-   * lake scale it would ride the manifest store like the signature
-   * keys it mirrors). */
+   * is corpus-CARDINALITY but 16 bytes/row (a metadata-class write). */
   private def writeParts(pairs: DataFrame, cover: DataFrame,
                          staging: Path): Unit = {
     pairs.repartition(1)
@@ -149,7 +146,7 @@ object NeardupPairsIndex {
     val art = artifact(dir, threshold)
     // serialize same-artifact builders within the JVM (the same
     // lockFor REGISTRY MinHashSigIndex's refresh uses, keyed by THIS
-    // artifact's store path — a distinct monitor from the sig store's;
+    // artifact's family — a distinct monitor from the sig index's;
     // no mutual exclusion with sig refreshes exists or is needed, the
     // build takes the sig lock through sigs()): ensureStampedIncr is
     // CORRECT under a concurrent duplicate (the loser's rename fails
@@ -157,7 +154,7 @@ object NeardupPairsIndex {
     // keyed by the artifact's family, not its stamp, so refreshes
     // across corpus states serialize too instead of racing the base
     // sweep
-    val idx = ManifestStore.lockFor(ManifestStore.root.resolve(art.family))
+    val idx = ArtifactStore.lockFor(ArtifactStore.root.resolve(art.family))
       .synchronized {
       // cover is written LAST, so its marker is the completeness marker
       Q.ensureStampedIncr(art, marker = "cover/_SUCCESS") { (staging, baseOpt) =>
@@ -198,7 +195,7 @@ object NeardupPairsIndex {
         }
       }
     }
-    ManifestStore.memoFrame[DataFrame](s, idx, art.stamp) {
+    ArtifactStore.memoFrame[DataFrame](s, idx, art.stamp) {
       s.read.schema(schema).parquet(idx.resolve("pairs").toString)
     }
   }

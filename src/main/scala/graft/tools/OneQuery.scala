@@ -2,7 +2,8 @@ package graft.tools
 
 import graft.{GraftSession, SparkEntry}
 
-/** Time a single query in isolation (repeat N times):
+/** Time a single query in isolation (repeat N times), printing each
+ * rep's wall time and row count:
  * runMain graft.tools.OneQuery <name> [sfDir] [reps] */
 object OneQuery {
   def main(args: Array[String]): Unit = {
@@ -15,9 +16,9 @@ object OneQuery {
     spark.read.parquet(s"$dir/lineitem.parquet").groupBy("l_returnflag").count().count()
     for (i <- 1 to reps) {
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).count()
+      val rows = SparkEntry.queries(name)(spark, dir).count()
       spark.catalog.clearCache()
-      println(f"[onequery] $name rep$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      println(f"[onequery] $name rep$i ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$rows")
     }
     spark.stop()
   }

@@ -31,7 +31,7 @@ class EmptyInputSpec extends AnyFunSuite {
     val d = emptyCorpusDir()
     try assert(graft.sources.MinHashSigIndex.sigs(spark, d).count() == 0)
     finally {
-      val st = graft.sources.MinHashSigIndex.store(d)
+      val st = graft.sources.MinHashSigIndex.artifactDir(d)
       graft.queries.Q.deleteRecursively(java.nio.file.Paths.get(d))
       graft.queries.Q.deleteRecursively(st)
     }
@@ -51,7 +51,7 @@ class EmptyInputSpec extends AnyFunSuite {
     val d = emptyCorpusDir()
     try assert(graft.sources.KnnGraphIndex.edges(spark, d).count() == 0)
     finally {
-      val st = graft.sources.KnnGraphIndex.store(d)
+      val st = graft.sources.KnnGraphIndex.artifactDir(d)
       graft.queries.Q.deleteRecursively(java.nio.file.Paths.get(d))
       graft.queries.Q.deleteRecursively(st)
     }

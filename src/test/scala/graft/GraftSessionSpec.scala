@@ -5,7 +5,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** GraftSession is the one session factory: its session carries the
- * engine's conf set, and no other main source builds a session. */
+ * engine's conf set, and no other main source builds a session. The
+ * source guards below keep the other one-owner rules: one artifact
+ * root, one publish path. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("the factory's session carries the engine confs, master and shuffle width") {
@@ -56,12 +58,12 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits)
   }
 
-  test("only ManifestStore.scala names the artifact root or a corpus tag") {
+  test("only ArtifactStore.scala names the artifact root or a corpus tag") {
     // every persisted artifact's dir is rooted and named in one place;
     // a hand-built path elsewhere can drift from the names the stores
     // sweep and reuse
     val hits = mainSourcesWith("java.io.tmpdir", "dirTag(")
-    assert(hits == List("graft/sources/ManifestStore.scala"), hits)
+    assert(hits == List("graft/sources/ArtifactStore.scala"), hits)
     // a one-argument createTempDirectory reads java.io.tmpdir implicitly
     // (an argument list without a top-level comma)
     val oneArg = """createTempDirectory\((?:[^(),]|\([^()]*\))*\)""".r
@@ -70,6 +72,17 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(oneArg.findFirstIn("createTempDirectory(root, s\"graft_$n\")").isEmpty)
     val implicitRoot = mainSourcesWhere(oneArg.findFirstIn(_).nonEmpty)
     assert(implicitRoot.isEmpty, implicitRoot)
+  }
+
+  test("only Q.publishDirAtomic and SnapshotStore publish by atomic move") {
+    // every stamped artifact publishes through Q.ensureStamped's one
+    // rename; SnapshotStore keeps its own because its losing writer must
+    // fail loudly. A second publish path (or a hard-link publish) would
+    // be a protocol with its own crash and race rules
+    val moves = mainSourcesWith("ATOMIC_MOVE")
+    assert(moves == List("graft/queries/QueryDef.scala",
+      "graft/sources/SnapshotStore.scala"), moves)
+    assert(mainSourcesWith("createLink").isEmpty)
   }
 
   test("without a warehouse conf, managed tables live under the artifact root") {

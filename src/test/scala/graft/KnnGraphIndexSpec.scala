@@ -5,18 +5,19 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sources.{KnnGraphIndex, ManifestStore}
+import graft.queries.Q
+import graft.sources.{ArtifactStore, KnnGraphIndex}
 
 /**
- * Pins the shared kNN edge index's contract on the round-10
- * per-partition manifest layout: the persisted edge set equals the
- * build plan's result row-for-row at every served k ≤ KMAX (one
- * top-KMAX artifact, k-filtered serve), reuse is content-stamped with
- * zero file churn, a k-filtered serve dir-prunes the rn
- * sub-partitions, incremental maintenance over a grown corpus is
- * equivalent to a full rebuild AND carries unchanged buckets over by
- * manifest REFERENCE (tamper-proof, delta-sized writes — the r10
- * headline), and the serve stays typed on an empty corpus.
+ * Pins the shared kNN edge index's contract: the persisted edge set
+ * equals the build plan's result row-for-row at every served k ≤ KMAX
+ * (one top-KMAX artifact, k-filtered serve), reuse is content-stamped
+ * with zero file churn, a k-filtered serve pushes the rn filter to the
+ * rn-clustered files, incremental maintenance over a grown corpus is
+ * equivalent to a full rebuild AND carries unchanged buckets' edges as
+ * written (tamper-proof), a refresh leaves one published dir, an
+ * artifact without its `vecs/_SUCCESS` marker is rebuilt, and the
+ * serve stays typed on an empty corpus.
  */
 class KnnGraphIndexSpec extends AnyFunSuite {
   import SparkTestBase.{spark, sf}
@@ -29,10 +30,21 @@ class KnnGraphIndexSpec extends AnyFunSuite {
     finally w.close()
   }
 
-  private def manifest(dir: String): ManifestStore.Manifest =
-    ManifestStore.currentManifest(KnnGraphIndex.store(dir),
-        graft.queries.Q.contentStamp(dir, "embeddings"))
-      .getOrElse(fail(s"no current manifest for $dir"))
+  /** Every dir of `dir`'s edge-index family under the artifact root,
+   * published or staging. */
+  private def family(dir: String): Vector[String] = {
+    val fam = KnnGraphIndex.artifactDir(dir).getFileName.toString
+      .stripSuffix(Q.contentStamp(dir, "embeddings"))
+    val l = Files.list(ArtifactStore.root)
+    try l.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(fam)).toVector
+    finally l.close()
+  }
+
+  private def vectors(lo: Long, hi: Long) = spark.range(lo, hi).selectExpr(
+    "id AS vec_id",
+    "transform(sequence(0, 63), i -> CAST(sin(id * 131 + i) AS FLOAT)) AS embedding",
+    "CAST(id % 10 AS INT) AS label")
 
   test("persisted edges equal the build plan at k=2 and k=5; reuse is stamped; rn dirs prune") {
     val want2 = KnnGraphIndex.buildPlan(spark, sf)
@@ -48,8 +60,8 @@ class KnnGraphIndexSpec extends AnyFunSuite {
     assert(scanPlan.contains("PushedFilters") && scanPlan.contains("rn"),
       "k-filtered serve lost the pushed rn filter:\n" + scanPlan)
     // the SAME artifact serves k=5 — no rebuild, zero file churn
-    val store = KnnGraphIndex.store(sf)
-    val before = fileState(store)
+    val art = KnnGraphIndex.artifactDir(sf)
+    val before = fileState(art)
     val want5 = KnnGraphIndex.buildPlan(spark, sf)
       .filter(col("rn") <= 5)
       .collect().map(_.toString).sorted.toSeq
@@ -58,25 +70,19 @@ class KnnGraphIndexSpec extends AnyFunSuite {
     assert(got5 == want5, "k=5 serve diverged from the build plan")
     assert(got5.size > got2.size,
       "k=5 must surface more edges than k=2 on the gate corpus")
-    assert(fileState(store) == before,
-      "edge store churned files for an unchanged corpus / different k")
+    assert(fileState(art) == before,
+      "edge artifact churned files for an unchanged corpus / different k")
     // k beyond the artifact's width is a loud error, not a silent serve
     intercept[IllegalArgumentException] {
       KnnGraphIndex.edges(spark, sf, k = KnnGraphIndex.KMAX + 1)
     }
   }
 
-  test("incremental maintenance: grown corpus ≡ full rebuild, untouched buckets carried by reference") {
+  test("incremental maintenance: grown corpus ≡ full rebuild, untouched buckets carried") {
     val dir = Files.createTempDirectory("graft_knnidx_incr").toString
-    val base = spark.range(0, 400).selectExpr(
-      "id AS vec_id",
-      "transform(sequence(0, 63), i -> CAST(sin(id * 131 + i) AS FLOAT)) AS embedding",
-      "CAST(id % 10 AS INT) AS label")
-    base.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val first = KnnGraphIndex.edges(spark, dir, KnnGraphIndex.KMAX)
-      .collect().map(_.toString).sorted.toSeq
+    vectors(0, 400).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val first = KnnGraphIndex.edges(spark, dir, KnnGraphIndex.KMAX).collect()
     assert(first.nonEmpty)
-    val m0 = manifest(dir)
     // delta vectors engineered into ONE sign bucket (all components
     // positive → bucket 15) so most buckets stay untouched and the
     // carry-over path below is observable
@@ -90,32 +96,29 @@ class KnnGraphIndexSpec extends AnyFunSuite {
           |+ 4 * CAST(element_at(embedding, 3) > 0 AS INT)
           |+ 8 * CAST(element_at(embedding, 4) > 0 AS INT) AS b""".stripMargin)
       .distinct().collect().map(_.getInt(0)).toSet
-    val untouched = m0.entries.filter(_.kind == "edges")
-      .map(_.bucket).toSet.diff(deltaBuckets)
+    val untouched = first.map(_.getInt(2)).toSet.diff(deltaBuckets)
     assume(untouched.nonEmpty,
       "delta touched every bucket — cannot observe carry-over")
-    // tamper one edge row inside an untouched bucket's published dir:
-    // if the refresh truly carries unchanged buckets by reference, the
+    // tamper one edge row of an untouched bucket inside the published
+    // base: if the refresh truly carries unchanged buckets, the
     // tampered row survives verbatim; a silent full rebuild erases it
     val markBucket = untouched.min
-    val bdirRel = m0.entries
-      .find(e => e.kind == "edges" && e.bucket == markBucket).get.rel
-    val bdir = KnnGraphIndex.store(dir).resolve(bdirRel)
-    val rows = spark.read.schema(KnnGraphIndex.schema)
-      .parquet(bdir.toString).collect()
-    val tampered = rows.map { r =>
-      if (r.getInt(4) == 1)
-        org.apache.spark.sql.Row(r.getLong(0), r.getLong(1), r.getInt(2),
-          -99.0, r.getInt(4))
-      else r
-    }
+    val edgesDir = KnnGraphIndex.artifactDir(dir).resolve("edges")
+    val tampered = spark.read.schema(KnnGraphIndex.schema)
+      .option("recursiveFileLookup", "true").parquet(edgesDir.toString)
+      .collect().map { r =>
+        if (r.getInt(2) == markBucket && r.getInt(4) == 1)
+          org.apache.spark.sql.Row(r.getLong(0), r.getLong(1), r.getInt(2),
+            -99.0, r.getInt(4))
+        else r
+      }
     val tmpDir = Files.createTempDirectory("graft_knnidx_tamper").toString
     spark.createDataFrame(
         spark.sparkContext.parallelize(tampered.toSeq),
         KnnGraphIndex.schema)
       .write.mode("overwrite").parquet(tmpDir)
-    graft.queries.Q.deleteRecursively(bdir)
-    Files.move(Paths.get(tmpDir), bdir)
+    Q.deleteRecursively(edgesDir)
+    Files.move(Paths.get(tmpDir), edgesDir)
     // grow the corpus: stamp changes, the tampered artifact is the base
     delta.write.mode("append").parquet(s"$dir/embeddings.parquet")
     val incr = KnnGraphIndex.edges(spark, dir, KnnGraphIndex.KMAX)
@@ -131,16 +134,39 @@ class KnnGraphIndexSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     assert(gotRest == wantRest,
       "incremental result diverged from full rebuild outside the tampered bucket")
-    // the r10 headline: untouched buckets' entries are carried by
-    // REFERENCE — identical rel paths, zero data I/O for them
-    val m1 = manifest(dir)
-    untouched.foreach { b =>
-      val e0 = m0.entries.filter(e => e.bucket == b).toSet
-      val e1 = m1.entries.filter(e => e.bucket == b).toSet
-      assert(e0 == e1,
-        s"untouched bucket $b was rewritten instead of carried by reference")
-    }
-    graft.queries.Q.deleteRecursively(Paths.get(dir))
+    Q.deleteRecursively(Paths.get(dir))
+  }
+
+  test("a refresh leaves exactly one published dir in the family") {
+    val dir = Files.createTempDirectory("graft_knnidx_one").toString
+    val vecPath = s"$dir/embeddings.parquet"
+    vectors(0, 40).write.mode("overwrite").parquet(vecPath)
+    KnnGraphIndex.edges(spark, dir).count()
+    val first = KnnGraphIndex.artifactDir(dir)
+    vectors(40, 50).write.mode("append").parquet(vecPath)
+    KnnGraphIndex.edges(spark, dir).count()
+    val cur = KnnGraphIndex.artifactDir(dir)
+    assert(cur != first, "the append must move the stamp")
+    assert(family(dir) == Vector(cur.getFileName.toString), family(dir))
+    Q.deleteRecursively(Paths.get(dir))
+  }
+
+  test("an artifact with edges/ but no vecs/_SUCCESS is rebuilt") {
+    val dir = Files.createTempDirectory("graft_knnidx_half").toString
+    vectors(0, 60).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    // a build that died after its edges and mid-vecs, left at the
+    // published path: its edges (cos planted at -99) must not be served
+    val half = KnnGraphIndex.artifactDir(dir)
+    KnnGraphIndex.buildPlan(spark, dir).withColumn("cos", lit(-99.0))
+      .write.parquet(half.resolve("edges").toString)
+    Files.createDirectories(half.resolve("vecs"))
+    val got = KnnGraphIndex.edges(spark, dir, KnnGraphIndex.KMAX)
+      .collect().map(_.toString).sorted.toSeq
+    val want = KnnGraphIndex.buildPlan(spark, dir)
+      .collect().map(_.toString).sorted.toSeq
+    assert(got.nonEmpty && got == want, "the half-built artifact was served")
+    assert(Files.exists(half.resolve("vecs").resolve("_SUCCESS")))
+    Q.deleteRecursively(Paths.get(dir))
   }
 
   test("empty→grown and grown→empty transitions refresh correctly") {
@@ -151,7 +177,7 @@ class KnnGraphIndexSpec extends AnyFunSuite {
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)),
       StructField("label", IntegerType)))
-    // a manifest with ZERO entries is a valid refresh base
+    // an empty artifact is a valid refresh base
     spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       .write.mode("overwrite").parquet(vecPath)
@@ -174,14 +200,13 @@ class KnnGraphIndexSpec extends AnyFunSuite {
     val emptied = KnnGraphIndex.edges(spark, dir)
     assert(emptied.schema == KnnGraphIndex.schema)
     assert(emptied.count() == 0L)
-    graft.queries.Q.deleteRecursively(Paths.get(dir))
+    Q.deleteRecursively(Paths.get(dir))
   }
 
   test("null and <4-dim embeddings are unindexable: filtered, never a crash") {
-    // a null (or too-short) embedding has no sign bucket — pre-r18 the
-    // full build published the __HIVE_DEFAULT_PARTITION__ dir
-    // bucketChildren rejects, and a refresh NPE'd collecting the
-    // changed-bucket set; the contract is the no-null-mass posture:
+    // a null (or too-short) embedding has no sign bucket — it would
+    // land in a null bucket dir, and pre-r18 a refresh NPE'd collecting
+    // the changed-bucket set; the contract is the no-null-mass posture:
     // such rows appear in no edge and break nothing (r18 review)
     val dir = Files.createTempDirectory("graft_knnidx_null").toString
     val vecPath = s"$dir/embeddings.parquet"
@@ -212,7 +237,7 @@ class KnnGraphIndexSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     assert(refreshed == want && refreshed.nonEmpty,
       "refresh over a corpus containing unindexable rows diverged")
-    graft.queries.Q.deleteRecursively(Paths.get(dir))
+    Q.deleteRecursively(Paths.get(dir))
   }
 
   test("a different corpus content gets its own index; empty stays typed") {
@@ -227,8 +252,8 @@ class KnnGraphIndexSpec extends AnyFunSuite {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val empty = KnnGraphIndex.edges(spark, dir)
-    // the pinned schema survives an empty build (no referenced
-    // partitions — the schema-stable empty frame is what keeps this typed)
+    // the pinned schema survives an empty build (no data files — the
+    // explicit read schema is what keeps this typed)
     assert(empty.schema == KnnGraphIndex.schema)
     assert(empty.count() == 0L)
     // and the real corpus's index is untouched by the other build

@@ -5,17 +5,15 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sources.{ManifestStore, MinHashSigIndex}
+import graft.queries.Q
+import graft.sources.{ArtifactStore, MinHashSigIndex}
 
-/** Pins the persisted MinHash signature table's contract on the
- * round-10 per-partition manifest layout: persisted rows equal the
- * build plan, reuse is content-stamped at the metadata level (zero
- * file churn), incremental maintenance over a grown/changed corpus is
- * equivalent to a full rebuild AND carries still-covered rows over by
- * reference (tamper-proof), refresh WRITE bytes are delta-sized (the
- * r10 headline), removals tombstone + resurrect without re-signing,
- * long chains compact per bucket, and the schema survives an empty
- * corpus. */
+/** Pins the persisted MinHash signature table's contract: persisted
+ * rows equal the build plan, reuse is content-stamped (zero file
+ * churn), incremental maintenance over a grown/changed corpus is
+ * equivalent to a full rebuild AND keeps still-covered rows as written
+ * (tamper-proof), removal and resurrection stay equivalent, a refresh
+ * leaves one published dir, and the schema survives an empty corpus. */
 class MinHashSigIndexSpec extends AnyFunSuite {
   import SparkTestBase.{spark, sf}
 
@@ -30,14 +28,16 @@ class MinHashSigIndexSpec extends AnyFunSuite {
     finally w.close()
   }
 
-  private def manifest(dir: String): ManifestStore.Manifest =
-    ManifestStore.currentManifest(MinHashSigIndex.store(dir),
-        graft.queries.Q.contentStamp(dir, "documents"))
-      .getOrElse(fail(s"no current manifest for $dir"))
-
-  private def entryBytes(dir: String,
-                         es: Seq[ManifestStore.Entry]): Long =
-    ManifestStore.entryBytes(MinHashSigIndex.store(dir), es)
+  /** Every dir of `dir`'s signature family under the artifact root,
+   * published or staging. */
+  private def family(dir: String): Vector[String] = {
+    val fam = MinHashSigIndex.artifactDir(dir).getFileName.toString
+      .stripSuffix(Q.contentStamp(dir, "documents"))
+    val l = Files.list(ArtifactStore.root)
+    try l.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(fam)).toVector
+    finally l.close()
+  }
 
   private def gen(lo: Int, hi: Int, marker: String) =
     spark.range(lo, hi).selectExpr("id AS doc_id",
@@ -52,32 +52,26 @@ class MinHashSigIndexSpec extends AnyFunSuite {
     assert(got == want, "persisted signature table diverged from the build plan")
     assert(got.nonEmpty && got.forall(_._2.length == 32),
       "every doc must carry a 32-permutation signature")
-    // unchanged corpus → second call touches NO file in the store
-    val store = MinHashSigIndex.store(sf)
-    val before = fileState(store)
+    // unchanged corpus → second call touches NO file in the artifact
+    val art = MinHashSigIndex.artifactDir(sf)
+    val before = fileState(art)
     MinHashSigIndex.sigs(spark, sf).count()
-    assert(fileState(store) == before,
-      "signature store churned files for unchanged content")
+    assert(fileState(art) == before,
+      "signature artifact churned files for unchanged content")
   }
 
-  test("incremental refresh: append + edit ≡ full rebuild, carried rows reused, writes delta-sized") {
+  test("incremental refresh: append + edit ≡ full rebuild, carried rows kept") {
     val dir = Files.createTempDirectory("graft_sigidx_incr").toString
     gen(0, 3000, "v1").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     MinHashSigIndex.sigs(spark, dir).count()
-    val m0 = manifest(dir)
-    val baseBytes = entryBytes(dir, m0.entries)
-    // tamper one still-covered row's signature INSIDE its published
-    // bucket dir: a true carry-over serves it verbatim, a silent full
-    // rebuild erases it
+    // tamper one still-covered row's signature INSIDE the published
+    // base: a true carry-over serves it verbatim, a silent full rebuild
+    // erases it
     val markId = 7L
-    val markBucket = (markId % MinHashSigIndex.NBUCKETS).toInt
-    val bdirRel = m0.entries
-      .find(e => e.kind == "data" && e.bucket == markBucket)
-      .getOrElse(fail("no data entry for the mark bucket")).rel
-    val bdir = MinHashSigIndex.store(dir).resolve(bdirRel)
+    val base = MinHashSigIndex.artifactDir(dir)
     val rows = spark.read.schema(MinHashSigIndex.schema)
-      .parquet(bdir.toString).collect()
+      .parquet(base.toString).collect()
     val tampered = rows.map { r =>
       if (r.getLong(0) == markId)
         org.apache.spark.sql.Row(r.getLong(0),
@@ -89,8 +83,8 @@ class MinHashSigIndexSpec extends AnyFunSuite {
         spark.sparkContext.parallelize(tampered.toSeq),
         MinHashSigIndex.schema)
       .write.mode("overwrite").parquet(tmpDir)
-    graft.queries.Q.deleteRecursively(bdir)
-    Files.move(Paths.get(tmpDir), bdir)
+    Q.deleteRecursively(base)
+    Files.move(Paths.get(tmpDir), base)
     // grow AND change the corpus: append 60 docs and add a second text
     // version of doc 3 (both versions are corpus rows with distinct
     // text_hash, so both must be signed)
@@ -110,24 +104,11 @@ class MinHashSigIndexSpec extends AnyFunSuite {
       "incremental result diverged from full rebuild outside the tampered row")
     assert(gotRest.exists(_._1 == 3L) && gotRest.count(_._1 == 3L) == 2,
       "both text versions of the edited doc must be signed")
-    // the r10 headline: refresh WRITE I/O ∝ delta. Unchanged buckets'
-    // entries are carried by REFERENCE (identical rel paths), and the
-    // bytes behind newly-written entries are a small fraction of the
-    // base artifact (61 fresh docs vs 3000).
-    val m1 = manifest(dir)
-    val m0Rels = m0.entries.map(_.rel).toSet
-    assert(m0.entries.forall(e => m1.entries.contains(e)),
-      "append-only refresh must carry every base entry by reference")
-    val newEntries = m1.entries.filterNot(e => m0Rels.contains(e.rel))
-    val newBytes = entryBytes(dir, newEntries)
-    assert(newBytes > 0L, "refresh wrote nothing?")
-    assert(newBytes < baseBytes / 5,
-      s"refresh write bytes not delta-sized: wrote $newBytes vs base $baseBytes")
-    graft.queries.Q.deleteRecursively(Paths.get(dir))
+    Q.deleteRecursively(Paths.get(dir))
   }
 
-  test("removal tombstones, resurrection re-serves without re-signing") {
-    val dir = Files.createTempDirectory("graft_sigidx_tomb").toString
+  test("removal and resurrection ≡ full rebuild") {
+    val dir = Files.createTempDirectory("graft_sigidx_res").toString
     val docsPath = s"$dir/documents.parquet"
     gen(0, 300, "v1").write.mode("overwrite").parquet(docsPath)
     MinHashSigIndex.sigs(spark, dir).count()
@@ -141,75 +122,31 @@ class MinHashSigIndexSpec extends AnyFunSuite {
       .collect().map(row).sortBy(t => (t._1, t._3)).toSeq
     assert(shrunk.collect().map(row).sortBy(t => (t._1, t._3)).toSeq
       == wantShrunk, "post-removal serve diverged from full rebuild")
-    // resurrect EVERY key ever signed (original 300 + the v2 edit):
-    // all of them already live in the data segments (tombstoned), so
-    // the refresh must re-serve by tombstone removal alone — ZERO new
-    // data entries (the segment-key disjointness invariant in action)
-    val m1 = manifest(dir)
+    // resurrect EVERY key ever signed (original 300 + the v2 edit): the
+    // removed keys left the base, so the refresh signs them again
     gen(0, 300, "v1").unionByName(gen(10, 11, "v2"))
       .write.mode("overwrite").parquet(docsPath)
     val res = MinHashSigIndex.sigs(spark, dir)
-    val m2 = manifest(dir)
-    val dataRels = (m: ManifestStore.Manifest) =>
-      m.entries.filter(_.kind == "data").map(_.rel).toSet
-    assert(dataRels(m2) == dataRels(m1),
-      "resurrection must not write new data segments — rows were already signed")
-    assert(m2.entries.forall(_.kind == "data"),
-      "fully-resurrected corpus must carry no live tombstones")
     val wantRes = MinHashSigIndex.buildPlan(spark, dir)
       .collect().map(row).sortBy(t => (t._1, t._3)).toSeq
+    assert(wantRes.size == 301)
     assert(res.collect().map(row).sortBy(t => (t._1, t._3)).toSeq
       == wantRes, "resurrected serve diverged from full rebuild")
-    graft.queries.Q.deleteRecursively(Paths.get(dir))
+    Q.deleteRecursively(Paths.get(dir))
   }
 
-  test("a bucket's chain compacts past MAXCHAIN; serve stays equivalent") {
-    val dir = Files.createTempDirectory("graft_sigidx_compact").toString
+  test("a refresh leaves exactly one published dir in the family") {
+    val dir = Files.createTempDirectory("graft_sigidx_one").toString
     val docsPath = s"$dir/documents.parquet"
-    gen(0, 200, "v1").write.mode("overwrite").parquet(docsPath)
+    gen(0, 50, "v1").write.mode("overwrite").parquet(docsPath)
     MinHashSigIndex.sigs(spark, dir).count()
-    // each append lands rows in every bucket → every bucket's chain
-    // grows by one per refresh, crossing MAXCHAIN together
-    for (i <- 1 to MinHashSigIndex.MAXCHAIN + 1) {
-      gen(200 + i * 100, 300 + i * 100, "v1").write.mode("append")
-        .parquet(docsPath)
-      MinHashSigIndex.sigs(spark, dir).count()
-    }
-    val m = manifest(dir)
-    val chains = m.entries.filter(_.kind == "data").groupBy(_.bucket)
-    assert(chains.nonEmpty)
-    chains.foreach { case (b, es) =>
-      assert(es.size <= MinHashSigIndex.MAXCHAIN,
-        s"bucket $b chain ${es.size} exceeds MAXCHAIN after compaction")
-    }
-    val got = MinHashSigIndex.sigs(spark, dir)
-      .collect().map(row).sortBy(t => (t._1, t._3)).toSeq
-    val want = MinHashSigIndex.buildPlan(spark, dir)
-      .collect().map(row).sortBy(t => (t._1, t._3)).toSeq
-    assert(got == want, "post-compaction serve diverged from full rebuild")
-    graft.queries.Q.deleteRecursively(Paths.get(dir))
-  }
-
-  test("delete pressure compacts: a shrink-only corpus reclaims dead rows and tombstones") {
-    val dir = Files.createTempDirectory("graft_sigidx_shrink").toString
-    val docsPath = s"$dir/documents.parquet"
-    gen(0, 400, "v1").write.mode("overwrite").parquet(docsPath)
+    val first = MinHashSigIndex.artifactDir(dir)
+    gen(50, 60, "v1").write.mode("append").parquet(docsPath)
     MinHashSigIndex.sigs(spark, dir).count()
-    // drop 75% of the corpus: no bucket appends a segment, so only the
-    // delete-pressure trigger can stop the tombstone set from being
-    // rewritten forever and the dead rows from being served-around
-    gen(0, 100, "v1").write.mode("overwrite").parquet(docsPath)
-    val shrunk = MinHashSigIndex.sigs(spark, dir)
-    val want = MinHashSigIndex.buildPlan(spark, dir)
-      .collect().map(row).sortBy(t => (t._1, t._3)).toSeq
-    assert(shrunk.collect().map(row).sortBy(t => (t._1, t._3)).toSeq == want,
-      "post-shrink serve diverged from full rebuild")
-    val m = manifest(dir)
-    assert(m.entries.forall(_.kind == "data"),
-      "75% deletion must compact the affected buckets — no live tombstones")
-    assert(m.entries.map(_.rows).sum == 100L,
-      "compacted manifest must account exactly the live rows")
-    graft.queries.Q.deleteRecursively(Paths.get(dir))
+    val cur = MinHashSigIndex.artifactDir(dir)
+    assert(cur != first, "the append must move the stamp")
+    assert(family(dir) == Vector(cur.getFileName.toString), family(dir))
+    Q.deleteRecursively(Paths.get(dir))
   }
 
   test("empty→grown and grown→empty transitions refresh correctly") {
@@ -218,7 +155,7 @@ class MinHashSigIndexSpec extends AnyFunSuite {
     val docsPath = s"$dir/documents.parquet"
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    // a manifest with ZERO entries is a valid refresh base
+    // an empty artifact is a valid refresh base
     spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       .write.mode("overwrite").parquet(docsPath)
@@ -230,14 +167,14 @@ class MinHashSigIndexSpec extends AnyFunSuite {
       .collect().map(row).sortBy(_._1).toSeq
     assert(grown == want && grown.size == 50,
       "growth from an empty base diverged from full rebuild")
-    // and back to empty: every row tombstones, serve is empty but typed
+    // and back to empty: no base row is kept, serve is empty but typed
     spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       .write.mode("overwrite").parquet(docsPath)
     val emptied = MinHashSigIndex.sigs(spark, dir)
     assert(emptied.schema == MinHashSigIndex.schema)
     assert(emptied.count() == 0L)
-    graft.queries.Q.deleteRecursively(Paths.get(dir))
+    Q.deleteRecursively(Paths.get(dir))
   }
 
   test("empty corpus stays typed through the explicit read schema") {

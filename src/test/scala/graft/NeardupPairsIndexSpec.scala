@@ -45,7 +45,7 @@ class NeardupPairsIndexSpec extends AnyFunSuite {
   }
 
   private def sweep(dir: String): Unit = {
-    val tag = graft.sources.ManifestStore.dirTag(dir)
+    val tag = graft.sources.ArtifactStore.dirTag(dir)
     val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
     val l = Files.list(tmp)
     try l.iterator().asScala.toVector
@@ -53,9 +53,9 @@ class NeardupPairsIndexSpec extends AnyFunSuite {
         .startsWith(s"graft_neardup_pairs_v4_t0p5_${tag}_"))
       .foreach(graft.queries.Q.deleteRecursively)
     finally l.close()
-    // the scenario corpus also built a signature store; sweep it
+    // the scenario corpus also built a signature index; sweep it
     graft.queries.Q.deleteRecursively(
-      graft.sources.MinHashSigIndex.store(dir))
+      graft.sources.MinHashSigIndex.artifactDir(dir))
   }
 
   test("threshold labels are lossless: distinct thresholds never share an artifact") {

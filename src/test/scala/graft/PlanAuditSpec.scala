@@ -796,7 +796,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("routed corpus frequency: no window over a power-law key, " +
       "one persisted freq build, executed scans pinned") {
-    // r15 (ZIPFPROBE_r*.json): the r14 window-over-key formulations put
+    // r15 (archive/ZIPFPROBE_r*.json): the r14 window-over-key formulations put
     // every occurrence of a hot key in ONE WindowExec task, so
     // q_substr_dedup / q_tfidf / q_lm_score route frequency through
     // HotColdFreq — groupBy partial-agg (skew-immune), persisted so
@@ -852,7 +852,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // key's per-key row count is bounded by construction (per-doc
     // tokens, per-vector k neighbors, a pre-aggregated frame). The
     // three unbounded corpus-frequency windows were routed through
-    // HotColdFreq in r15 (ZIPFPROBE_r*.json record the straggler);
+    // HotColdFreq in r15 (archive/ZIPFPROBE_r*.json record the straggler);
     // this pin freezes the full inventory of partitionBy key sets so
     // ANY new window fails here and must either show its bound in the
     // allowlist comment or take the HotColdFreq treatment first.
@@ -935,7 +935,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // joins the caches. Before the fix, q_pagerank's per-iteration
     // nodes join re-scanned embeddings every round (1 + iters direct
     // scans). Pinned here at two depths; the committed artifact
-    // ITERSCAN_r16.json records the full 1..4 curve.
+    // archive/ITERSCAN_r16.json records the full 1..4 curve.
     for ((name, build) <- Seq[(String, Int => DataFrame)](
         "q_pagerank" -> (d => graft.queries.LlmOps.pageRankRanks(spark, sf, d)),
         "q_graph_bfs" -> (d => graft.queries.LlmOps.graphBfsDist(spark, sf, d)))) {

@@ -72,7 +72,7 @@ class SourcesSpec extends AnyFunSuite {
     val o = spark.read.parquet(s"$sf/orders.parquet")
     // match this sf-dir's export specifically (other sf exports may
     // coexist in tmp); the dir name embeds the sf-dir hash tag
-    val tag = graft.sources.ManifestStore.dirTag(sf)
+    val tag = graft.sources.ArtifactStore.dirTag(sf)
     val exportDirs = new java.io.File(System.getProperty("java.io.tmpdir"))
       .listFiles().filter(_.getName.startsWith(s"graft_src2_hivepart_$tag"))
     assert(exportDirs.nonEmpty, "export dir missing")
@@ -96,7 +96,7 @@ class SourcesSpec extends AnyFunSuite {
     // materialize both generations of the q_compact_files round-trip dirs
     SparkEntry.queries("q_compact_files")(spark, sf).count()
     val tmpdir = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val tag = graft.sources.ManifestStore.dirTag(sf)
+    val tag = graft.sources.ArtifactStore.dirTag(sf)
     def partFiles(prefix: String): Int = {
       val d = tmpdir.listFiles()
         .filter(_.getName.startsWith(s"graft_src2_${prefix}_$tag"))
@@ -117,7 +117,7 @@ class SourcesSpec extends AnyFunSuite {
   test("mergeSchema read surfaces the pre-evolution files' column as null") {
     SparkEntry.queries("q_schema_evolution")(spark, sf).count()
     val tmpdir = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val tag = graft.sources.ManifestStore.dirTag(sf)
+    val tag = graft.sources.ArtifactStore.dirTag(sf)
     val evo = tmpdir.listFiles()
       .filter(_.getName.startsWith(s"graft_src2_evo_$tag")).head
     val merged = spark.read.option("mergeSchema", "true").parquet(evo.toString)
@@ -134,7 +134,7 @@ class SourcesSpec extends AnyFunSuite {
     // a run killed between q_schema_evolution's two writes leaves its
     // dir holding gen=1 only
     val half = corpusCopy("orders")
-    val evo = graft.sources.ManifestStore.stamped("graft_src2_evo_", half, "orders").path
+    val evo = graft.sources.ArtifactStore.stamped("graft_src2_evo_", half, "orders").path
     spark.read.parquet(s"$half/orders.parquet")
       .filter(col("o_orderkey") % 2 === 0)
       .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -145,7 +145,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("a regenerated source's stale export is swept") {
     val d = corpusCopy("supplier")
-    val art = graft.sources.ManifestStore.stamped("graft_src2_orc_", d, "supplier")
+    val art = graft.sources.ArtifactStore.stamped("graft_src2_orc_", d, "supplier")
     val stale = art.path.resolveSibling(art.family + "0ldstamp")
     Files.createDirectories(stale)
     Files.createFile(stale.resolve("_SUCCESS"))

@@ -3,12 +3,12 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Q
-import graft.sources.ManifestStore
-import graft.sources.ManifestStore.Stamped
+import graft.sources.ArtifactStore
+import graft.sources.ArtifactStore.Stamped
 
 /** Q.ensureStamped is the ONE implementation of the build-once
- * artifact protocol for whole-dir artifacts (IVF index, s_incr_dedup
- * corpus index, the CDC and late-data feeds, the near-dup pair table,
+ * artifact protocol (IVF index, s_incr_dedup corpus index, the CDC and
+ * late-data feeds, the signature, kNN edge and near-dup pair indexes,
  * SourceOps' exports and snapshot chains all route through it) — these
  * pins cover the protocol itself: build-once reuse, half-artifact
  * replacement, stale-stamp sweep, and in-flight staging respect. */
@@ -97,7 +97,7 @@ class StampedArtifactSpec extends AnyFunSuite {
       val idle = tmp.resolve(family + s"s4.stage_${pid}_tok_2")
       Files.createDirectories(idle)
       Files.setLastModifiedTime(idle, java.nio.file.attribute.FileTime
-        .fromMillis(System.currentTimeMillis() - ManifestStore.STAGE_MAX_AGE_MS - 60000L))
+        .fromMillis(System.currentTimeMillis() - ArtifactStore.STAGE_MAX_AGE_MS - 60000L))
       val n = new java.util.concurrent.atomic.AtomicInteger(0)
       Q.ensureStamped(Stamped(family, "s5"))(buildInto(n))
       assert(!Files.exists(crashed), "a dead builder's staging must be reclaimed")
@@ -109,12 +109,9 @@ class StampedArtifactSpec extends AnyFunSuite {
     val pid = ProcessHandle.current().pid()
     val a = Q.stagingFor(tmp.resolve("graft_x_s1")).getFileName.toString
     val b = Q.stagingFor(tmp.resolve("graft_x_s1")).getFileName.toString
-    val want = s"graft_x_s1.stage_${pid}_${ManifestStore.jvmToken}_"
+    val want = s"graft_x_s1.stage_${pid}_${ArtifactStore.jvmToken}_"
     assert(a.startsWith(want) && b.startsWith(want), a)
     assert(a != b, "one name per invocation")
-    // the same generator names the manifest stores' segment staging
-    assert(ManifestStore.newSegStaging(tmp.resolve("unused")).getFileName
-      .toString.startsWith(s".stage_${pid}_${ManifestStore.jvmToken}_"))
   }
 
   test("concurrent builders: loser discards its copy, both serve one artifact") {

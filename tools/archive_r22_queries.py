@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Build BENCH_r22_queries.json: element-wise min over the committed
-bench_local_r22_*.json windows, in the driver's bench_out.json shape —
+archive/bench_local_r22_*.json windows, in bench_out.json's shape —
 the same convention as BENCH_r21_queries.json (r19/r21).
 
 Every window must carry the same query keyset, cpus, errors and sf;
@@ -40,13 +40,13 @@ def archive(files):
         "sf": fields["sf"],
         "cpus": fields["cpus"],
         "windows": len(files),
-        "source": ("element-wise min over committed bench_local_r22_*.json "
+        "source": ("element-wise min over committed archive/bench_local_r22_*.json "
                    "(min-of-reps per window; OPTIMIZATION_r22.md round protocol)"),
     }
 
 
 if __name__ == "__main__":
-    files = sorted(glob.glob("bench_local_r22_*.json"))
+    files = sorted(glob.glob("archive/bench_local_r22_*.json"))
     out = archive(files)
     with open("BENCH_r22_queries.json", "w") as fh:
         json.dump(out, fh, indent=1)

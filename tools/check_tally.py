@@ -18,6 +18,7 @@ two consecutive driver benches measured at 8.9-17.7 s.
 Usage: python3 tools/check_tally.py [SURVEY.md] [bench_out.json]
 """
 import json
+import os
 import re
 import sys
 
@@ -81,8 +82,9 @@ def main(survey_path, bench_path):
 
 
 def default_bench():
-    """Prefer the newest committed per-round local snapshot
-    (bench_local_rN.json or a lettered window bench_local_rN_x.json —
+    """Prefer the newest committed per-round local snapshot under
+    archive/ (bench_local_rN.json or a lettered window
+    bench_local_rN_x.json —
     VERDICT r7 item 3: the driver's own run overwrites bench_out.json,
     orphaning the claims this gate checks), falling back to
     bench_out.json for mid-round iteration.
@@ -97,7 +99,7 @@ def default_bench():
     element-wise min — the statistic the claims are pinned to — rather
     than one arbitrary window's co-tenant noise."""
     import glob
-    snaps = glob.glob("bench_local_r*.json")
+    snaps = glob.glob(os.path.join("archive", "bench_local_r*.json"))
     if not snaps:
         return "bench_out.json"
 

@@ -48,15 +48,17 @@ def test_default_bench_newest_round_all_windows():
                  "bench_local_r14.json"] + \
                 [f"bench_local_r15_{c}.json" for c in "abcd"] + \
                 [f"bench_local_r19_{c}.json" for c in "abcdefgh"]
+        os.mkdir(os.path.join(d, "archive"))
         for n in names:
-            open(os.path.join(d, n), "w").close()
+            open(os.path.join(d, "archive", n), "w").close()
         cwd = os.getcwd()
         os.chdir(d)
         try:
             picked = check_tally.default_bench()
         finally:
             os.chdir(cwd)
-        want = sorted(f"bench_local_r19_{c}.json" for c in "abcdefgh")
+        want = sorted(os.path.join("archive", f"bench_local_r19_{c}.json")
+                      for c in "abcdefgh")
         ok(picked == want,
            f"default_bench returns ALL newest-round windows (got {picked})")
 
@@ -117,8 +119,9 @@ def test_tally_min_across_windows_end_to_end():
     # a min-pinned claim must pass even when ONE window of the round is
     # >3x the min — the exact false-STALE the single-window pick risked
     with tempfile.TemporaryDirectory() as d:
-        calm = os.path.join(d, "bench_local_r30_a.json")
-        noisy = os.path.join(d, "bench_local_r30_b.json")
+        os.mkdir(os.path.join(d, "archive"))
+        calm = os.path.join(d, "archive", "bench_local_r30_a.json")
+        noisy = os.path.join(d, "archive", "bench_local_r30_b.json")
         dump(calm, {"queries": {"q_x": 1.0}})
         dump(noisy, {"queries": {"q_x": 4.0}})
         survey = os.path.join(d, "s.md")
