@@ -36,7 +36,8 @@ object SparkEntry {
     allDefs.map(d => d.name -> d.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. Omit for non-SQL-expressible ops. For a
+    * [[QueryDef.sql]] entry the oracle is the text the entry runs. */
   def oracleSql: Map[String, String] =
     allDefs.collect { case QueryDef(n, _, Some(sql)) => n -> sql }.toMap
 }

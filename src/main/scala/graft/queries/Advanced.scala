@@ -86,6 +86,7 @@ object Advanced {
     // max(3, 10%·exact) — the oracle recomputes the exact count and
     // emits TRUE, so a sketch regression (estimate drifting out of
     // tolerance) hash-fails the gate, not just a spec.
+    // Not QueryDef.sql: the HLL++ estimate; the oracle pins est_ok TRUE.
     QueryDef("q_approx_distinct",
       (s, dir) => {
         rd(s, dir, "orders")
@@ -117,6 +118,7 @@ object Advanced {
     // estimate must land within max(3, 5%) of the exact distinct —
     // DataSketches HLL at default lgK=12 is ~1.6% rse, so the bound is
     // ~3σ; deterministic for a fixed input.
+    // Not QueryDef.sql: DataSketches HLL sketches; the oracle pins est_ok TRUE.
     QueryDef("q_hll_rollup",
       (s, dir) => {
         val daily = events(s, dir)
@@ -718,6 +720,7 @@ object Advanced {
     // oracle runs the unfiltered join, pinning no-false-negatives at gate
     // scale. Driver cost: two scalar jobs over the SMALL side only (a
     // count to size the filter, the filter bytes themselves).
+    // Not QueryDef.sql: the graft Bloom-filter kernel.
     QueryDef("q_bloom_join",
       (s, dir) => {
         val dim = rd(s, dir, "customer")
@@ -761,6 +764,7 @@ object Advanced {
     // estimated) and is gate-checked against the exact NDV via the
     // est_ok pattern (q_approx_distinct), so at scale the exact-NDV
     // column can be swapped for the sketch and the contract stays.
+    // Not QueryDef.sql: the one-scan two-stage plan and its HLL estimate.
     QueryDef("q_table_stats",
       (s, dir) => {
         val cols = Seq("l_orderkey", "l_partkey", "l_suppkey",
@@ -826,6 +830,7 @@ object Advanced {
     // pattern). Probing is 10 driver-side lookups against the 8 KB-scale
     // sketch; at 100 TB the sketch build is ONE map-side-combined
     // aggregation, never a distinct-key shuffle.
+    // Not QueryDef.sql: the count-min sketch probed on the driver.
     QueryDef("q_cms_counts",
       (s, dir) => {
         val keys = rd(s, dir, "lineitem").select(col("l_partkey"))
@@ -929,6 +934,7 @@ object Advanced {
     // a TakeOrderedAndProject, never a global sort. lift =
     // pair_cnt·N / (cnt1·cnt2): exact BIGINT products, ONE IEEE
     // division — identical in both engines.
+    // Not QueryDef.sql: the explicit repartition before the baskets.
     QueryDef("q_cooccur",
       (s, dir) => {
         // NOT cached (round 10): all three consumers below sit in ONE

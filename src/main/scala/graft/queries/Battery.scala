@@ -69,32 +69,22 @@ object Battery {
   val defs: Vector[QueryDef] = Vector(
 
     // ---- pivot (conditional aggregation) ------------------------------
-    // Spark's pivot() plans one pass with per-value conditional
-    // aggregates — same shape as the oracle's FILTER clauses. Explicit
-    // value list (F/O/N), so no extra distinct-values job at scale.
-    QueryDef("q_pivot",
-      (s, dir) => {
-        rd(s, dir, "lineitem")
-          .groupBy("l_returnflag")
-          .pivot("l_linestatus", Seq("F", "O"))
-          .agg(dsum(col("l_quantity")))
-          .select(col("l_returnflag"),
-            coalesce(col("F"), lit(0.0)).as("qty_f"),
-            coalesce(col("O"), lit(0.0)).as("qty_o"))
-          .orderBy("l_returnflag")
-      },
-      Some("""SELECT l_returnflag,
-             |  COALESCE(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
-             |    FILTER (WHERE l_linestatus = 'F') AS DOUBLE), 0.0) AS qty_f,
-             |  COALESCE(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
-             |    FILTER (WHERE l_linestatus = 'O') AS DOUBLE), 0.0) AS qty_o
-             |FROM lineitem GROUP BY l_returnflag
-             |ORDER BY l_returnflag""".stripMargin)),
+    // One pass of per-value conditional aggregates (FILTER clauses) over
+    // an explicit value list (F/O), so no distinct-values job at scale.
+    QueryDef.sql("q_pivot",
+      """SELECT l_returnflag,
+        |  COALESCE(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
+        |    FILTER (WHERE l_linestatus = 'F') AS DOUBLE), 0.0) AS qty_f,
+        |  COALESCE(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
+        |    FILTER (WHERE l_linestatus = 'O') AS DOUBLE), 0.0) AS qty_o
+        |FROM lineitem GROUP BY l_returnflag
+        |ORDER BY l_returnflag""".stripMargin),
 
     // ---- unpivot/melt (wide measures → long rows) ----------------------
     // The inverse of q_pivot, via the first-class unpivot API (plans a
     // single Expand, one pass — not a self-union of 4 scans, which is
     // what the portable oracle writes).
+    // Not QueryDef.sql: as SQL it plans 4 lineitem scans, not 1 (sf0.1).
     QueryDef("q_unpivot",
       (s, dir) => {
         rd(s, dir, "lineitem")
@@ -209,45 +199,25 @@ object Battery {
     // integer ratios (identical IEEE division), max/argmax over
     // identical doubles; ties on the gap break to the smallest cents in
     // both engines.
-    QueryDef("q_ks_drift",
-      (s, dir) => {
-        val cnt = rd(s, dir, "events")
-          .filter(col("event_type").isin("click", "purchase"))
-          .select(col("event_type"),
-            expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-          .groupBy("cents")
-          .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("c1"),
-            sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("c2"))
-        val tot = cnt.agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
-        val w = Window.orderBy("cents")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        cnt.crossJoin(broadcast(tot))
-          .withColumn("gap",
-            abs(sum(col("c1")).over(w).cast("double") / col("n1").cast("double")
-              - sum(col("c2")).over(w).cast("double") / col("n2").cast("double")))
-          .orderBy(col("gap").desc, col("cents").asc)
-          .limit(1)
-          .select(col("n1"), col("n2"), round(col("gap"), 6).as("ks_stat"),
-            col("cents").as("ks_at_cents"))
-      },
-      Some("""WITH e AS (SELECT event_type,
-             |             CAST(round(value * 100) AS BIGINT) AS cents
-             |           FROM events
-             |           WHERE event_type IN ('click', 'purchase')),
-             |c AS (SELECT cents,
-             |        SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS c1,
-             |        SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS c2
-             |      FROM e GROUP BY cents),
-             |n AS (SELECT CAST(SUM(c1) AS BIGINT) AS n1,
-             |        CAST(SUM(c2) AS BIGINT) AS n2 FROM c),
-             |d AS (SELECT cents, n1, n2,
-             |        ABS(CAST(SUM(c1) OVER w AS DOUBLE) / CAST(n1 AS DOUBLE)
-             |          - CAST(SUM(c2) OVER w AS DOUBLE) / CAST(n2 AS DOUBLE)) AS gap
-             |      FROM c CROSS JOIN n
-             |      WINDOW w AS (ORDER BY cents
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-             |SELECT n1, n2, ROUND(gap, 6) AS ks_stat, cents AS ks_at_cents
-             |FROM d ORDER BY gap DESC, cents LIMIT 1""".stripMargin)),
+    QueryDef.sql("q_ks_drift",
+      """WITH e AS (SELECT event_type,
+        |             CAST(round(value * 100) AS BIGINT) AS cents
+        |           FROM events
+        |           WHERE event_type IN ('click', 'purchase')),
+        |c AS (SELECT cents,
+        |        SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS c1,
+        |        SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS c2
+        |      FROM e GROUP BY cents),
+        |n AS (SELECT CAST(SUM(c1) AS BIGINT) AS n1,
+        |        CAST(SUM(c2) AS BIGINT) AS n2 FROM c),
+        |d AS (SELECT /*+ BROADCAST(n) */ cents, n1, n2,
+        |        ABS(CAST(SUM(c1) OVER w AS DOUBLE) / CAST(n1 AS DOUBLE)
+        |          - CAST(SUM(c2) OVER w AS DOUBLE) / CAST(n2 AS DOUBLE)) AS gap
+        |      FROM c CROSS JOIN n
+        |      WINDOW w AS (ORDER BY cents
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+        |SELECT n1, n2, ROUND(gap, 6) AS ks_stat, cents AS ks_at_cents
+        |FROM d ORDER BY gap DESC, cents LIMIT 1""".stripMargin),
 
     // ---- PSI drift (binned population-stability index) -----------------
     // The monitoring twin of q_ks_drift: where KS reports the single
@@ -348,24 +318,13 @@ object Battery {
              |ORDER BY l_returnflag""".stripMargin)),
 
     // ---- ntile + first_value frame windows ----------------------------
-    QueryDef("q_ntile_frames",
-      (s, dir) => {
-        val byPrice = Window.partitionBy("o_custkey")
-          .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        val byDate = Window.partitionBy("o_custkey")
-          .orderBy(col("o_orderdate"), col("o_orderkey"))
-        rd(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"),
-            ntile(4).over(byPrice).as("price_quartile"),
-            first_value(col("o_orderkey")).over(byDate).as("first_order"))
-          .orderBy("o_custkey", "o_orderkey")
-      },
-      Some("""SELECT o_orderkey, o_custkey,
-             |  CAST(NTILE(4) OVER (PARTITION BY o_custkey
-             |    ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS price_quartile,
-             |  FIRST_VALUE(o_orderkey) OVER (PARTITION BY o_custkey
-             |    ORDER BY o_orderdate, o_orderkey) AS first_order
-             |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin)),
+    QueryDef.sql("q_ntile_frames",
+      """SELECT o_orderkey, o_custkey,
+        |  CAST(NTILE(4) OVER (PARTITION BY o_custkey
+        |    ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS price_quartile,
+        |  FIRST_VALUE(o_orderkey) OVER (PARTITION BY o_custkey
+        |    ORDER BY o_orderdate, o_orderkey) AS first_order
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin),
 
     // ---- date arithmetic battery --------------------------------------
     // Both engines clamp month-add to month end and share ISO weekday
@@ -400,6 +359,7 @@ object Battery {
     // with nullif and then pushed through coalesce, null-safe equality,
     // count(col) vs count(*), and a null group key. Spark asc sorts
     // nulls first; DuckDB's default is nulls last → explicit NULLS FIRST.
+    // Not QueryDef.sql: its SQL plan adds one exchange (sf0.1).
     QueryDef("q_null_handling",
       (s, dir) => {
         rd(s, dir, "customer")
@@ -430,25 +390,14 @@ object Battery {
     // Catalyst decorrelates this into a join against the per-nation
     // aggregate (one shuffle on nationkey + broadcast of 25 rows) —
     // exactly the rewrite you'd hand-write at scale.
-    QueryDef("q_subquery_scalar",
-      (s, dir) => {
-        rd(s, dir, "customer").createOrReplaceTempView("graft_cust_sq")
-        s.sql("""SELECT c_custkey, c_nationkey, c_acctbal
-                |FROM graft_cust_sq c
-                |WHERE c_acctbal > (
-                |  SELECT CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-                |           / COUNT(*)
-                |  FROM graft_cust_sq c2
-                |  WHERE c2.c_nationkey = c.c_nationkey)
-                |ORDER BY c_custkey""".stripMargin)
-      },
-      Some(s"""SELECT c_custkey, c_nationkey, c_acctbal
-              |FROM customer c
-              |WHERE c_acctbal > (
-              |  SELECT ${dsumSql("c_acctbal")} / COUNT(*)
-              |  FROM customer c2
-              |  WHERE c2.c_nationkey = c.c_nationkey)
-              |ORDER BY c_custkey""".stripMargin)),
+    QueryDef.sql("q_subquery_scalar",
+      s"""SELECT c_custkey, c_nationkey, c_acctbal
+         |FROM customer c
+         |WHERE c_acctbal > (
+         |  SELECT ${dsumSql("c_acctbal")} / COUNT(*)
+         |  FROM customer c2
+         |  WHERE c2.c_nationkey = c.c_nationkey)
+         |ORDER BY c_custkey""".stripMargin),
 
     // ---- SCD2 dimension build (validity intervals from an event log) ---
     // The warehouse staple: turn a mutation log into a slowly-changing-
@@ -461,32 +410,19 @@ object Battery {
     // CHANGE ROWS for each version's end — the second window sorts only
     // change rows, a fraction of the log. Deterministic order: (ts,
     // event_id) is a total key.
-    QueryDef("q_scd2",
-      (s, dir) => {
-        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        events(s, dir)
-          .select("user_id", "event_type", "ts", "event_id")
-          .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-          .filter(col("prev_type").isNull
-            || col("prev_type") =!= col("event_type"))
-          .withColumn("valid_to", lead(col("ts"), 1).over(w))
-          .withColumn("is_current", col("valid_to").isNull)
-          .select(col("user_id"), col("event_type"),
-            col("ts").as("valid_from"), col("valid_to"), col("is_current"))
-          .orderBy("user_id", "valid_from")
-      },
-      Some("""WITH c AS (SELECT user_id, event_type, ts, event_id,
-             |        LAG(event_type) OVER (PARTITION BY user_id
-             |          ORDER BY ts, event_id) AS prev_type
-             |      FROM events),
-             |f AS (SELECT user_id, event_type, ts, event_id FROM c
-             |      WHERE prev_type IS NULL OR prev_type <> event_type)
-             |SELECT user_id, event_type, ts AS valid_from,
-             |  LEAD(ts) OVER (PARTITION BY user_id
-             |    ORDER BY ts, event_id) AS valid_to,
-             |  LEAD(ts) OVER (PARTITION BY user_id
-             |    ORDER BY ts, event_id) IS NULL AS is_current
-             |FROM f ORDER BY user_id, valid_from""".stripMargin)),
+    QueryDef.sql("q_scd2",
+      """WITH c AS (SELECT user_id, event_type, ts, event_id,
+        |        LAG(event_type) OVER (PARTITION BY user_id
+        |          ORDER BY ts, event_id) AS prev_type
+        |      FROM events),
+        |f AS (SELECT user_id, event_type, ts, event_id FROM c
+        |      WHERE prev_type IS NULL OR prev_type <> event_type)
+        |SELECT user_id, event_type, ts AS valid_from,
+        |  LEAD(ts) OVER (PARTITION BY user_id
+        |    ORDER BY ts, event_id) AS valid_to,
+        |  LEAD(ts) OVER (PARTITION BY user_id
+        |    ORDER BY ts, event_id) IS NULL AS is_current
+        |FROM f ORDER BY user_id, valid_from""".stripMargin),
 
     // ---- point-in-time join against the SCD2 dimension -----------------
     // The feature-store lookup that PREVENTS training-data leakage: each
@@ -501,50 +437,25 @@ object Battery {
     // the join stays co-partitioned on user at any scale (no as-of sort
     // of facts×dim, no cartesian). Intervals partition each user's
     // timeline, so every fact matches at most one version and the
-    // output is exactly one row per purchase.
-    QueryDef("q_pit_join",
-      (s, dir) => {
-        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        val dim = events(s, dir)
-          .filter(col("event_type").isin("signup", "error"))
-          .select("user_id", "event_type", "ts", "event_id")
-          .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-          .filter(col("prev_type").isNull
-            || col("prev_type") =!= col("event_type"))
-          .withColumn("valid_to", lead(col("ts"), 1).over(w))
-          .select(col("user_id").as("d_user_id"),
-            col("event_type").as("state"),
-            col("ts").as("valid_from"), col("valid_to"))
-        val facts = events(s, dir)
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        // the interval predicate must live IN the join condition: a
-        // post-filter after a user-only left join would drop purchases
-        // whose user has versions but none valid yet, where PIT
-        // semantics demand a NULL-state row
-        facts.join(dim,
-            facts("user_id") === dim("d_user_id") &&
-              dim("valid_from") <= facts("ts") &&
-              (dim("valid_to").isNull || facts("ts") < dim("valid_to")),
-            "left")
-          .select("event_id", "user_id", "ts", "state", "valid_from")
-          .orderBy("event_id")
-      },
-      Some("""WITH st AS (SELECT user_id, event_type, ts, event_id,
-             |        LAG(event_type) OVER (PARTITION BY user_id
-             |          ORDER BY ts, event_id) AS pt
-             |      FROM events WHERE event_type IN ('signup', 'error')),
-             |d AS (SELECT user_id, event_type AS state, ts AS valid_from,
-             |        LEAD(ts) OVER (PARTITION BY user_id
-             |          ORDER BY ts, event_id) AS valid_to
-             |      FROM st WHERE pt IS NULL OR pt <> event_type),
-             |f AS (SELECT event_id, user_id, ts FROM events
-             |      WHERE event_type = 'purchase')
-             |SELECT f.event_id, f.user_id, f.ts, d.state, d.valid_from
-             |FROM f LEFT JOIN d ON f.user_id = d.user_id
-             |  AND d.valid_from <= f.ts
-             |  AND (d.valid_to IS NULL OR f.ts < d.valid_to)
-             |ORDER BY f.event_id""".stripMargin)),
+    // output is exactly one row per purchase. The interval sits IN the
+    // join condition: a post-filter after a user-only left join would
+    // drop the purchases PIT semantics keep with a NULL state.
+    QueryDef.sql("q_pit_join",
+      """WITH st AS (SELECT user_id, event_type, ts, event_id,
+        |        LAG(event_type) OVER (PARTITION BY user_id
+        |          ORDER BY ts, event_id) AS pt
+        |      FROM events WHERE event_type IN ('signup', 'error')),
+        |d AS (SELECT user_id, event_type AS state, ts AS valid_from,
+        |        LEAD(ts) OVER (PARTITION BY user_id
+        |          ORDER BY ts, event_id) AS valid_to
+        |      FROM st WHERE pt IS NULL OR pt <> event_type),
+        |f AS (SELECT event_id, user_id, ts FROM events
+        |      WHERE event_type = 'purchase')
+        |SELECT f.event_id, f.user_id, f.ts, d.state, d.valid_from
+        |FROM f LEFT JOIN d ON f.user_id = d.user_id
+        |  AND d.valid_from <= f.ts
+        |  AND (d.valid_to IS NULL OR f.ts < d.valid_to)
+        |ORDER BY f.event_id""".stripMargin),
 
     // ---- equal-frequency quantile binning (feature discretization) -----
     // The feature-bucketing TRANSFORM beside q_winsorize's clipping:
@@ -658,6 +569,7 @@ object Battery {
     // a window over the lang frame) and joins back as a |sources|-row
     // broadcast. mean_chars and top_share are single IEEE divisions of
     // exact integers.
+    // Not QueryDef.sql: the TopKPerKey operator.
     QueryDef("q_dataset_card",
       (s, dir) => {
         val d = rd(s, dir, "documents").select("source", "lang", "n_chars")
@@ -703,27 +615,15 @@ object Battery {
     // two totals broadcast back, TakeOrdered(5) — no sort of the key
     // domain, no corpus-sized shuffle. skew_factor = c·n_keys/n_rows is
     // a ratio of exact integers, IEEE-identical in both engines.
-    QueryDef("q_skew_report",
-      (s, dir) => {
-        val r = rd(s, dir, "orders")
-          .groupBy("o_custkey").agg(count(lit(1)).as("c"))
-        val t = r.agg(count(lit(1)).as("nk"), sum(col("c")).as("nr"))
-        r.crossJoin(broadcast(t))
-          .withColumn("skew_factor", col("c").cast("double")
-            * col("nk").cast("double") / col("nr").cast("double"))
-          .orderBy(col("c").desc, col("o_custkey").asc)
-          .limit(5)
-          .select(col("o_custkey").as("key"), col("c").as("n_rows"),
-            round(col("skew_factor"), 6).as("skew_factor"))
-      },
-      Some("""WITH r AS (SELECT o_custkey, COUNT(*) AS c FROM orders
-             |           GROUP BY o_custkey),
-             |t AS (SELECT COUNT(*) AS nk, CAST(SUM(c) AS BIGINT) AS nr FROM r)
-             |SELECT o_custkey AS key, c AS n_rows,
-             |  ROUND(CAST(c AS DOUBLE) * CAST(nk AS DOUBLE)
-             |        / CAST(nr AS DOUBLE), 6) AS skew_factor
-             |FROM r CROSS JOIN t
-             |ORDER BY c DESC, o_custkey LIMIT 5""".stripMargin)),
+    QueryDef.sql("q_skew_report",
+      """WITH r AS (SELECT o_custkey, COUNT(*) AS c FROM orders
+        |           GROUP BY o_custkey),
+        |t AS (SELECT COUNT(*) AS nk, CAST(SUM(c) AS BIGINT) AS nr FROM r)
+        |SELECT /*+ BROADCAST(t) */ o_custkey AS key, c AS n_rows,
+        |  ROUND(CAST(c AS DOUBLE) * CAST(nk AS DOUBLE)
+        |        / CAST(nr AS DOUBLE), 6) AS skew_factor
+        |FROM r CROSS JOIN t
+        |ORDER BY c DESC, o_custkey LIMIT 5""".stripMargin),
 
     // ---- PPS systematic sample (integer-exact weighted sampling) -------
     // Probability-proportional-to-size sampling — long documents are
@@ -786,6 +686,7 @@ object Battery {
     // the same key). The oracle is the PLAIN join: salting must be
     // result-invariant, and a hash mismatch here means the salt leaked
     // into the semantics.
+    // Not QueryDef.sql: salting; the oracle is the plain join.
     QueryDef("q_salted_join",
       (s, dir) => {
         val li = rd(s, dir, "lineitem")
@@ -817,6 +718,7 @@ object Battery {
     // join-only cost — the amortization the pattern exists for (r3
     // verdict: the unconditional rewrite re-paid the ingest shuffle on
     // every bench rep).
+    // Not QueryDef.sql: bucketed catalog tables; the oracle is the plain join.
     QueryDef("q_bucketed_join",
       (s, dir) => {
         // named like the tmp artifacts, so a table keys its corpus
@@ -855,62 +757,33 @@ object Battery {
     // this is the compaction job a format with MERGE sugar (Delta/
     // Iceberg) runs underneath. Result verified as the merged table's
     // per-status aggregate.
-    QueryDef("q_merge_upsert",
-      (s, dir) => {
-        val orders = rd(s, dir, "orders")
-        val base = orders.filter(col("o_orderkey") % 100 =!= 0)
-          .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
-            col("o_totalprice").as("price"))
-        val changes = orders.filter(col("o_orderkey") % 100 === 0)
-          .select((col("o_orderkey") + 7).as("k"),
-            col("o_orderstatus").as("c_st"),
-            (col("o_totalprice") * 1.1).as("c_price"))
-        base.join(changes, Seq("k"), "full_outer")
-          .select(col("k"),
-            coalesce(col("c_st"), col("st")).as("status"),
-            coalesce(col("c_price"), col("price")).as("price"))
-          .groupBy("status")
-          .agg(count(lit(1)).as("n_rows"), dsumS(col("price"), 3).as("sum_price"))
-          .orderBy("status")
-      },
-      Some(s"""WITH base AS (
-              |  SELECT o_orderkey AS k, o_orderstatus AS st, o_totalprice AS price
-              |  FROM orders WHERE o_orderkey % 100 <> 0),
-              |changes AS (
-              |  SELECT o_orderkey + 7 AS k, o_orderstatus AS c_st,
-              |    o_totalprice * 1.1 AS c_price
-              |  FROM orders WHERE o_orderkey % 100 = 0),
-              |m AS (SELECT COALESCE(c.k, b.k) AS k,
-              |        COALESCE(c_st, st) AS status,
-              |        COALESCE(c_price, price) AS price
-              |      FROM base b FULL OUTER JOIN changes c ON b.k = c.k)
-              |SELECT status, COUNT(*) AS n_rows,
-              |  ${dsumSqlS("price", 3)} AS sum_price
-              |FROM m GROUP BY status ORDER BY status""".stripMargin)),
+    QueryDef.sql("q_merge_upsert",
+      s"""WITH base AS (
+         |  SELECT o_orderkey AS k, o_orderstatus AS st, o_totalprice AS price
+         |  FROM orders WHERE o_orderkey % 100 <> 0),
+         |changes AS (
+         |  SELECT o_orderkey + 7 AS k, o_orderstatus AS c_st,
+         |    o_totalprice * 1.1 AS c_price
+         |  FROM orders WHERE o_orderkey % 100 = 0),
+         |m AS (SELECT COALESCE(c.k, b.k) AS k,
+         |        COALESCE(c_st, st) AS status,
+         |        COALESCE(c_price, price) AS price
+         |      FROM base b FULL OUTER JOIN changes c ON b.k = c.k)
+         |SELECT status, COUNT(*) AS n_rows,
+         |  ${dsumSqlS("price", 3)} AS sum_price
+         |FROM m GROUP BY status ORDER BY status""".stripMargin),
 
     // ---- time-range window frame (trailing 30-day revenue) -------------
     // RANGE frames bound by a time interval, not row counts: each order
     // sums the customer's revenue over the PRECEDING 30 days including
-    // itself. Spark expresses interval ranges on the epoch-seconds
-    // ordering key; DuckDB on the timestamp directly — same frame.
-    QueryDef("q_window_range",
-      (s, dir) => {
-        val w = Window.partitionBy("o_custkey")
-          .orderBy(col("o_orderdate").cast("timestamp").cast("long"))
-          .rangeBetween(-30L * 86400, 0)
-        rd(s, dir, "orders")
-          .withColumn("trail_30d",
-            sum(col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-              .over(w).cast("double"))
-          .select("o_orderkey", "o_custkey", "o_totalprice", "trail_30d")
-          .orderBy("o_orderkey")
-      },
-      Some("""SELECT o_orderkey, o_custkey, o_totalprice,
-             |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-             |    PARTITION BY o_custkey ORDER BY o_orderdate
-             |    RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW)
-             |    AS DOUBLE) AS trail_30d
-             |FROM orders ORDER BY o_orderkey""".stripMargin)),
+    // itself; both engines bound the frame on the timestamp directly.
+    QueryDef.sql("q_window_range",
+      """SELECT o_orderkey, o_custkey, o_totalprice,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+        |    PARTITION BY o_custkey ORDER BY o_orderdate
+        |    RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW)
+        |    AS DOUBLE) AS trail_30d
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
     // ---- statistical moments, deterministically ------------------------
     // stddev/variance aggregates are float-accumulation-order-dependent
@@ -919,39 +792,19 @@ object Battery {
     // 4dp — followed by identical double arithmetic in both engines.
     // This is also the mergeable form you'd use at scale (3 numbers of
     // combinable state per group, like a t-digest-free welford).
-    QueryDef("q_stats_moments",
-      (s, dir) => {
-        rd(s, dir, "lineitem")
-          .groupBy("l_returnflag")
-          .agg(count(lit(1)).as("n"),
-            sum(col("l_quantity").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-              .cast("double").as("sum_q"),
-            sum((col("l_quantity").cast(org.apache.spark.sql.types.DecimalType(18, 2)) *
-              col("l_quantity").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-              .cast(org.apache.spark.sql.types.DecimalType(28, 4)))
-              .cast("double").as("sumsq_q"))
-          .withColumn("mean_q", col("sum_q") / col("n"))
-          .withColumn("var_q",
-            (col("sumsq_q") - col("sum_q") * col("sum_q") / col("n")) / col("n"))
-          .withColumn("stddev_q", sqrt(col("var_q")))
-          .select(col("l_returnflag"), col("n"),
-            round(col("mean_q"), 4).as("mean_q"),
-            round(col("var_q"), 4).as("var_q"),
-            round(col("stddev_q"), 4).as("stddev_q"))
-          .orderBy("l_returnflag")
-      },
-      Some("""WITH m AS (
-             |  SELECT l_returnflag, COUNT(*) AS n,
-             |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_q,
-             |    CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2))
-             |                  * CAST(l_quantity AS DECIMAL(18,2))
-             |             AS DECIMAL(28,4))) AS DOUBLE) AS sumsq_q
-             |  FROM lineitem GROUP BY l_returnflag)
-             |SELECT l_returnflag, n,
-             |  ROUND(sum_q / n, 4) AS mean_q,
-             |  ROUND((sumsq_q - sum_q * sum_q / n) / n, 4) AS var_q,
-             |  ROUND(sqrt((sumsq_q - sum_q * sum_q / n) / n), 4) AS stddev_q
-             |FROM m ORDER BY l_returnflag""".stripMargin)),
+    QueryDef.sql("q_stats_moments",
+      """WITH m AS (
+        |  SELECT l_returnflag, COUNT(*) AS n,
+        |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_q,
+        |    CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2))
+        |                  * CAST(l_quantity AS DECIMAL(18,2))
+        |             AS DECIMAL(28,4))) AS DOUBLE) AS sumsq_q
+        |  FROM lineitem GROUP BY l_returnflag)
+        |SELECT l_returnflag, n,
+        |  ROUND(sum_q / n, 4) AS mean_q,
+        |  ROUND((sumsq_q - sum_q * sum_q / n) / n, 4) AS var_q,
+        |  ROUND(sqrt((sumsq_q - sum_q * sum_q / n) / n), 4) AS stddev_q
+        |FROM m ORDER BY l_returnflag""".stripMargin),
 
     // ---- ordered string aggregation ------------------------------------
     // listagg-style rollup: collect_list is order-nondeterministic across
@@ -980,6 +833,7 @@ object Battery {
     // plain groupBy, which is exactly what the oracle checks. The cost
     // is one extra (tiny: #keys × salt rows) shuffle — the trade a
     // 100 TB pipeline makes when AQE can't split a skewed aggregation.
+    // Not QueryDef.sql: salting; the oracle is the plain aggregation.
     QueryDef("q_salted_agg",
       (s, dir) => {
         val salt = 8
@@ -1000,27 +854,17 @@ object Battery {
               |FROM lineitem GROUP BY l_returnflag
               |ORDER BY l_returnflag""".stripMargin)),
 
-    // ---- histogram via width_bucket ------------------------------------
-    QueryDef("q_histogram",
-      (s, dir) => {
-        rd(s, dir, "orders")
-          .withColumn("bucket",
-            width_bucket(col("o_totalprice"), lit(0.0), lit(600000.0), lit(12))
-              .cast("int"))
-          .groupBy("bucket")
-          .agg(count(lit(1)).as("n_orders"),
-            dsum(col("o_totalprice")).as("sum_price"))
-          .orderBy("bucket")
-      },
-      // DuckDB has no width_bucket: mirror its definition with the same
-      // IEEE division both engines perform (bounds 0..600000, 12 buckets
-      // of width 50000; out-of-range clamps to 0 / 13)
-      Some(s"""SELECT CAST(CASE WHEN o_totalprice < 0.0 THEN 0
-              |            WHEN o_totalprice >= 600000.0 THEN 13
-              |            ELSE FLOOR(o_totalprice / 50000.0) + 1 END AS INTEGER)
-              |    AS bucket,
-              |  COUNT(*) AS n_orders, ${dsumSql("o_totalprice")} AS sum_price
-              |FROM orders GROUP BY bucket ORDER BY bucket""".stripMargin)),
+    // ---- histogram (width_bucket's definition, spelled out) -----------
+    // DuckDB has no width_bucket: the text states its definition with
+    // the IEEE division both engines perform (bounds 0..600000, 12
+    // buckets of width 50000; out-of-range clamps to 0 / 13).
+    QueryDef.sql("q_histogram",
+      s"""SELECT CAST(CASE WHEN o_totalprice < 0.0 THEN 0
+         |            WHEN o_totalprice >= 600000.0 THEN 13
+         |            ELSE FLOOR(o_totalprice / 50000.0) + 1 END AS INTEGER)
+         |    AS bucket,
+         |  COUNT(*) AS n_orders, ${dsumSql("o_totalprice")} AS sum_price
+         |FROM orders GROUP BY bucket ORDER BY bucket""".stripMargin),
 
     // ---- outer explode (empty collections keep their parent row) -------
     QueryDef("q_explode_outer",
@@ -1089,6 +933,7 @@ object Battery {
     // last. Conversion ratios are exact-integer divisions, IEEE-identical
     // in both engines. (Timestamp comparisons ride the same µs model as
     // q_asof_last_signup / q_sessionize.)
+    // Not QueryDef.sql: as SQL, ~2x the exchanges and 2.6x the scans (sf0.1).
     QueryDef("q_funnel",
       (s, dir) => {
         val e = events(s, dir).select("user_id", "event_type", "ts")
@@ -1196,30 +1041,18 @@ object Battery {
     // real corpus — never the corpus itself), so the unpartitioned
     // window is constant-sized at any scale. All sums are exact
     // integers; the two final divisions are identical IEEE.
-    QueryDef("q_gini_sources",
-      (s, dir) => {
-        val x = rd(s, dir, "documents")
-          .groupBy("source").agg(count(lit(1)).as("x"))
-        val w = Window.orderBy(col("x").asc, col("source").asc)
-        x.withColumn("i", row_number().over(w).cast("long"))
-          .agg(count(lit(1)).as("n_sources"), sum(col("x")).as("n_docs"),
-            round(lit(2.0) * sum(col("i") * col("x")).cast("double")
-              / (count(lit(1)).cast("double") * sum(col("x")).cast("double"))
-              - (count(lit(1)).cast("double") + lit(1.0))
-                / count(lit(1)).cast("double"), 6)
-              .as("gini"))
-      },
-      Some("""WITH x AS (SELECT source, COUNT(*) AS x FROM documents
-             |           GROUP BY source),
-             |r AS (SELECT x, ROW_NUMBER() OVER (ORDER BY x, source) AS i
-             |      FROM x)
-             |SELECT CAST(COUNT(*) AS BIGINT) AS n_sources,
-             |  CAST(SUM(x) AS BIGINT) AS n_docs,
-             |  ROUND(2.0 * CAST(SUM(i * x) AS DOUBLE)
-             |          / (CAST(COUNT(*) AS DOUBLE) * CAST(SUM(x) AS DOUBLE))
-             |        - (CAST(COUNT(*) AS DOUBLE) + 1.0)
-             |          / CAST(COUNT(*) AS DOUBLE), 6) AS gini
-             |FROM r""".stripMargin)),
+    QueryDef.sql("q_gini_sources",
+      """WITH x AS (SELECT source, COUNT(*) AS x FROM documents
+        |           GROUP BY source),
+        |r AS (SELECT x, ROW_NUMBER() OVER (ORDER BY x, source) AS i
+        |      FROM x)
+        |SELECT CAST(COUNT(*) AS BIGINT) AS n_sources,
+        |  CAST(SUM(x) AS BIGINT) AS n_docs,
+        |  ROUND(2.0 * CAST(SUM(i * x) AS DOUBLE)
+        |          / (CAST(COUNT(*) AS DOUBLE) * CAST(SUM(x) AS DOUBLE))
+        |        - (CAST(COUNT(*) AS DOUBLE) + 1.0)
+        |          / CAST(COUNT(*) AS DOUBLE), 6) AS gini
+        |FROM r""".stripMargin),
 
     // ---- regex (BPE-ish) tokenizer vs whitespace tokenizer ------------
     // The "token counting: whitespace + a BPE-ish regex" north-star
@@ -1671,34 +1504,19 @@ object Battery {
     // identical bounded pair set. Within a block only same-decade id
     // pairs land at distance ≤ 1, so the verify step separates real
     // matches from the blocked candidates (n_close < n_pairs).
-    QueryDef("q_fuzzy_match",
-      (s, dir) => {
-        val c = rd(s, dir, "customer")
-          .select(col("c_custkey").as("id"), col("c_name").as("nm"),
-            substring(col("c_name"), 1, 16).as("blk"))
-        val a = c.select(col("blk"), col("id").as("a_id"), col("nm").as("a_nm"))
-        val b = c.select(col("blk"), col("id").as("b_id"), col("nm").as("b_nm"))
-        a.join(b, Seq("blk")).filter(col("a_id") < col("b_id"))
-          .withColumn("dist", levenshtein(col("a_nm"), col("b_nm")))
-          .groupBy("blk")
-          .agg(count(lit(1)).as("n_pairs"),
-            sum(when(col("dist") <= 1, 1L).otherwise(0L)).as("n_close"),
-            coalesce(min(when(col("dist") <= 1, col("a_id"))), lit(-1L))
-              .as("first_close_a"))
-          .orderBy("blk")
-      },
-      Some("""WITH c AS (SELECT c_custkey AS id, c_name AS nm,
-             |             substring(c_name, 1, 16) AS blk
-             |           FROM customer),
-             |p AS (SELECT a.blk, a.id AS a_id,
-             |        levenshtein(a.nm, b.nm) AS dist
-             |      FROM c a JOIN c b ON a.blk = b.blk AND a.id < b.id)
-             |SELECT blk, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-             |  CAST(SUM(CASE WHEN dist <= 1 THEN 1 ELSE 0 END) AS BIGINT)
-             |    AS n_close,
-             |  CAST(COALESCE(MIN(CASE WHEN dist <= 1 THEN a_id END), -1)
-             |       AS BIGINT) AS first_close_a
-             |FROM p GROUP BY blk ORDER BY blk""".stripMargin)),
+    QueryDef.sql("q_fuzzy_match",
+      """WITH c AS (SELECT c_custkey AS id, c_name AS nm,
+        |             substring(c_name, 1, 16) AS blk
+        |           FROM customer),
+        |p AS (SELECT a.blk, a.id AS a_id,
+        |        levenshtein(a.nm, b.nm) AS dist
+        |      FROM c a JOIN c b ON a.blk = b.blk AND a.id < b.id)
+        |SELECT blk, CAST(COUNT(*) AS BIGINT) AS n_pairs,
+        |  CAST(SUM(CASE WHEN dist <= 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_close,
+        |  CAST(COALESCE(MIN(CASE WHEN dist <= 1 THEN a_id END), -1)
+        |       AS BIGINT) AS first_close_a
+        |FROM p GROUP BY blk ORDER BY blk""".stripMargin),
 
     // ---- MapType end-to-end (construct → extract → fold) ---------------
     // The one column-type family the rest of the gate doesn't carry: a

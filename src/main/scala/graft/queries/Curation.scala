@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.DecimalType
 import Q._
 
 /**
@@ -198,38 +197,22 @@ object Curation {
     // languages) and the final weights are single IEEE divisions of
     // identical operands. One tiny keyed agg — everything after the
     // count is |langs|-scale.
-    QueryDef("q_temperature_mix",
-      (s, dir) => {
-        val counts = rd(s, dir, "documents")
-          .groupBy("lang").agg(count(lit(1)).as("n_docs"))
-        val wAll = Window.partitionBy()
-        counts
-          .withColumn("total", sum(col("n_docs")).over(wAll))
-          .withColumn("p", col("n_docs").cast("double") / col("total"))
-          .withColumn("sq", floor(sqrt(col("p")) * lit(1e12)).cast("long"))
-          .withColumn("ssum", sum(col("sq")).over(wAll))
-          .withColumn("w", col("sq").cast("double") / col("ssum").cast("double"))
-          .select(col("lang"), col("n_docs"), col("p"), col("w"),
-            (col("w") / col("p")).as("upsample"),
-            floor(col("w") * col("total").cast("double")).cast("long")
-              .as("expected_docs"))
-          .orderBy("lang")
-      },
-      Some("""WITH c AS (SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY lang),
-             |e AS (
-             |  SELECT lang, n_docs,
-             |    SUM(n_docs) OVER () AS total,
-             |    CAST(n_docs AS DOUBLE) / (SUM(n_docs) OVER ()) AS p,
-             |    CAST(FLOOR(sqrt(CAST(n_docs AS DOUBLE) / (SUM(n_docs) OVER ()))
-             |      * 1e12) AS BIGINT) AS sq
-             |  FROM c),
-             |f AS (
-             |  SELECT lang, n_docs, total, p,
-             |    CAST(sq AS DOUBLE) / CAST(SUM(sq) OVER () AS DOUBLE) AS w
-             |  FROM e)
-             |SELECT lang, n_docs, p, w, w / p AS upsample,
-             |  CAST(FLOOR(w * CAST(total AS DOUBLE)) AS BIGINT) AS expected_docs
-             |FROM f ORDER BY lang""".stripMargin)),
+    QueryDef.sql("q_temperature_mix",
+      """WITH c AS (SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY lang),
+        |e AS (
+        |  SELECT lang, n_docs,
+        |    SUM(n_docs) OVER () AS total,
+        |    CAST(n_docs AS DOUBLE) / (SUM(n_docs) OVER ()) AS p,
+        |    CAST(FLOOR(sqrt(CAST(n_docs AS DOUBLE) / (SUM(n_docs) OVER ()))
+        |      * 1e12) AS BIGINT) AS sq
+        |  FROM c),
+        |f AS (
+        |  SELECT lang, n_docs, total, p,
+        |    CAST(sq AS DOUBLE) / CAST(SUM(sq) OVER () AS DOUBLE) AS w
+        |  FROM e)
+        |SELECT lang, n_docs, p, w, w / p AS upsample,
+        |  CAST(FLOOR(w * CAST(total AS DOUBLE)) AS BIGINT) AS expected_docs
+        |FROM f ORDER BY lang""".stripMargin),
 
     // ---- k-anonymity audit over quasi-identifiers ----------------------
     // Release-gate privacy check: group by the quasi-identifier tuple
@@ -346,50 +329,27 @@ object Curation {
     // (Spark) and round-nearest (DuckDB) agree on every term. k is
     // capped at 62 (shift-safe); beyond that the weight underflows the
     // decimal grid identically in both engines. Daily counts reduce
-    // map-side; the window runs over |days| rows per type.
-    QueryDef("q_ewma_smooth",
-      (s, dir) => {
-        val daily = events(s, dir)
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("cnt"))
-        val w = Window.partitionBy("event_type").orderBy("day")
-        daily
-          .withColumn("i", row_number().over(w).cast("long"))
-          .withColumn("n", count(lit(1)).over(Window.partitionBy("event_type")))
-          .withColumn("k",
-            when(col("i") === 1, least(col("n") - 1, lit(62L)))
-              .otherwise(least(col("n") - col("i") + 1, lit(62L))))
-          .withColumn("term",
-            (col("cnt").cast("double") /
-              expr("CAST(shiftleft(1L, CAST(k AS INT)) AS DOUBLE)"))
-              .cast(DecimalType(38, 20)))
-          .groupBy("event_type")
-          .agg(max(col("n")).as("n_days"),
-            // the DECIMAL(38,20) sum is exact and identical in both
-            // engines, but DuckDB's int128-decimal→double cast is not
-            // correctly rounded (Spark's BigDecimal one is) — round to
-            // the 1e-9 grid to absorb the 1-ulp cast divergence
-            round(sum(col("term")).cast("double"), 9).as("ewma"))
-          .orderBy("event_type")
-      },
-      Some("""WITH daily AS (
-             |  SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS cnt
-             |  FROM events GROUP BY 1, 2),
-             |idx AS (
-             |  SELECT event_type, cnt,
-             |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i,
-             |    COUNT(*) OVER (PARTITION BY event_type) AS n
-             |  FROM daily),
-             |t AS (
-             |  SELECT event_type, n,
-             |    CAST(CAST(cnt AS DOUBLE) /
-             |      CAST(1::BIGINT << CAST(LEAST(CASE WHEN i = 1 THEN n - 1
-             |        ELSE n - i + 1 END, 62) AS INTEGER) AS DOUBLE)
-             |      AS DECIMAL(38,20)) AS term
-             |  FROM idx)
-             |SELECT event_type, CAST(MAX(n) AS BIGINT) AS n_days,
-             |  ROUND(CAST(SUM(term) AS DOUBLE), 9) AS ewma
-             |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    // map-side; the window runs over |days| rows per type. DuckDB's
+    // decimal→double cast is not correctly rounded: hence ROUND(·, 9).
+    QueryDef.sql("q_ewma_smooth",
+      """WITH daily AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS cnt
+        |  FROM events GROUP BY 1, 2),
+        |idx AS (
+        |  SELECT event_type, cnt,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i,
+        |    COUNT(*) OVER (PARTITION BY event_type) AS n
+        |  FROM daily),
+        |t AS (
+        |  SELECT event_type, n,
+        |    CAST(CAST(cnt AS DOUBLE) /
+        |      CAST(1::BIGINT << CAST(LEAST(CASE WHEN i = 1 THEN n - 1
+        |        ELSE n - i + 1 END, 62) AS INTEGER) AS DOUBLE)
+        |      AS DECIMAL(38,20)) AS term
+        |  FROM idx)
+        |SELECT event_type, CAST(MAX(n) AS BIGINT) AS n_days,
+        |  ROUND(CAST(SUM(term) AS DOUBLE), 9) AS ewma
+        |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // ---- session prefix-path mining ------------------------------------
     // Behavioral sequence mining: the first-3-event path per
@@ -561,57 +521,30 @@ object Curation {
     // identical operands in both engines — no rounding, no tolerance.
     // Single-pass conditional aggregation; at any scale this is one
     // map-side partial per variant.
-    QueryDef("q_ab_test",
-      (s, dir) => {
-        rd(s, dir, "documents")
-          .withColumn("v", (col("doc_id") % 2).cast("int"))
-          .agg(
-            sum(when(col("v") === 0, 1L).otherwise(0L)).as("n_a"),
-            sum(when(col("v") === 0, col("n_chars")).otherwise(0L)).as("sx_a"),
-            sum(when(col("v") === 0, col("n_chars") * col("n_chars"))
-              .otherwise(0L)).as("sxx_a"),
-            sum(when(col("v") === 1, 1L).otherwise(0L)).as("n_b"),
-            sum(when(col("v") === 1, col("n_chars")).otherwise(0L)).as("sx_b"),
-            sum(when(col("v") === 1, col("n_chars") * col("n_chars"))
-              .otherwise(0L)).as("sxx_b"))
-          .withColumn("m_a", col("sx_a").cast("double") / col("n_a"))
-          .withColumn("m_b", col("sx_b").cast("double") / col("n_b"))
-          .withColumn("var_a",
-            (col("sxx_a").cast("double") - col("m_a") * col("sx_a").cast("double"))
-              / (col("n_a") - 1))
-          .withColumn("var_b",
-            (col("sxx_b").cast("double") - col("m_b") * col("sx_b").cast("double"))
-              / (col("n_b") - 1))
-          .withColumn("t_stat",
-            (col("m_a") - col("m_b")) /
-              sqrt(col("var_a") / col("n_a") + col("var_b") / col("n_b")))
-          .select(col("n_a"), col("n_b"), col("m_a"), col("m_b"),
-            col("var_a"), col("var_b"), col("t_stat"),
-            (abs(col("t_stat")) > 1.96).as("significant"))
-      },
-      Some("""WITH s AS (
-             |  SELECT
-             |    SUM(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS n_a,
-             |    SUM(CASE WHEN doc_id % 2 = 0 THEN n_chars ELSE 0 END) AS sx_a,
-             |    SUM(CASE WHEN doc_id % 2 = 0 THEN n_chars * n_chars ELSE 0 END) AS sxx_a,
-             |    SUM(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS n_b,
-             |    SUM(CASE WHEN doc_id % 2 = 1 THEN n_chars ELSE 0 END) AS sx_b,
-             |    SUM(CASE WHEN doc_id % 2 = 1 THEN n_chars * n_chars ELSE 0 END) AS sxx_b
-             |  FROM documents),
-             |m AS (
-             |  SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-             |    CAST(sx_a AS DOUBLE) / n_a AS m_a,
-             |    CAST(sx_b AS DOUBLE) / n_b AS m_b,
-             |    (CAST(sxx_a AS DOUBLE) - (CAST(sx_a AS DOUBLE) / n_a) * CAST(sx_a AS DOUBLE))
-             |      / (n_a - 1) AS var_a,
-             |    (CAST(sxx_b AS DOUBLE) - (CAST(sx_b AS DOUBLE) / n_b) * CAST(sx_b AS DOUBLE))
-             |      / (n_b - 1) AS var_b
-             |  FROM s)
-             |SELECT n_a, n_b, m_a, m_b, var_a, var_b,
-             |  (m_a - m_b) / sqrt(var_a / n_a + var_b / n_b) AS t_stat,
-             |  (abs((m_a - m_b) / sqrt(var_a / n_a + var_b / n_b)) > 1.96)
-             |    AS significant
-             |FROM m""".stripMargin)),
+    QueryDef.sql("q_ab_test",
+      """WITH s AS (
+        |  SELECT
+        |    SUM(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS n_a,
+        |    SUM(CASE WHEN doc_id % 2 = 0 THEN n_chars ELSE 0 END) AS sx_a,
+        |    SUM(CASE WHEN doc_id % 2 = 0 THEN n_chars * n_chars ELSE 0 END) AS sxx_a,
+        |    SUM(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS n_b,
+        |    SUM(CASE WHEN doc_id % 2 = 1 THEN n_chars ELSE 0 END) AS sx_b,
+        |    SUM(CASE WHEN doc_id % 2 = 1 THEN n_chars * n_chars ELSE 0 END) AS sxx_b
+        |  FROM documents),
+        |m AS (
+        |  SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
+        |    CAST(sx_a AS DOUBLE) / n_a AS m_a,
+        |    CAST(sx_b AS DOUBLE) / n_b AS m_b,
+        |    (CAST(sxx_a AS DOUBLE) - (CAST(sx_a AS DOUBLE) / n_a) * CAST(sx_a AS DOUBLE))
+        |      / (n_a - 1) AS var_a,
+        |    (CAST(sxx_b AS DOUBLE) - (CAST(sx_b AS DOUBLE) / n_b) * CAST(sx_b AS DOUBLE))
+        |      / (n_b - 1) AS var_b
+        |  FROM s)
+        |SELECT n_a, n_b, m_a, m_b, var_a, var_b,
+        |  (m_a - m_b) / sqrt(var_a / n_a + var_b / n_b) AS t_stat,
+        |  (abs((m_a - m_b) / sqrt(var_a / n_a + var_b / n_b)) > 1.96)
+        |    AS significant
+        |FROM m""".stripMargin),
 
     // ---- differential-privacy count release (discrete Laplace) ---------
     // The release mechanism between k-anonymity auditing and publishing:

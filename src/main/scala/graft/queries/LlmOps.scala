@@ -644,19 +644,11 @@ object LlmOps {
     // ---- exact dedup: hash-groupBy on normalized text ----------------
     // At 100 TB this is one shuffle on a 32-byte digest; the text itself
     // never travels (md5 computed map-side, min-id reduce).
-    QueryDef("q_dedup_exact",
-      (s, dir) => {
-        rd(s, dir, "documents")
-          .withColumn("text_md5", md5(lower(trim(col("text")))))
-          .groupBy("text_md5")
-          .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-          .select("keep_id", "n_copies", "text_md5")
-          .orderBy("keep_id")
-      },
-      Some("""SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies,
-             |       md5(LOWER(TRIM(text))) AS text_md5
-             |FROM documents GROUP BY md5(LOWER(TRIM(text)))
-             |ORDER BY keep_id""".stripMargin)),
+    QueryDef.sql("q_dedup_exact",
+      """SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies,
+        |       md5(LOWER(TRIM(text))) AS text_md5
+        |FROM documents GROUP BY md5(LOWER(TRIM(text)))
+        |ORDER BY keep_id""".stripMargin),
 
     // ---- near-dup pairs: MinHash + LSH banding, exact-Jaccard verify -
     // The declared semantics are EXACT (3-gram-shingle Jaccard > 0.5);
@@ -753,6 +745,7 @@ object LlmOps {
     // artifact and re-verify equivalence without re-paying
     // construction; a regenerated corpus rebuilds both and sweeps the
     // stale twins.
+    // Not QueryDef.sql: the persisted signature index's incremental refresh.
     QueryDef("q_incr_sigs",
       (s, dir) => {
         import java.nio.file.Files

@@ -18,6 +18,45 @@ final case class QueryDef(
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String])
 
+object QueryDef {
+
+  /** An entry that IS its SQL text, for a query with nothing to state
+   * but the query: `run` binds each core table the text reads as a temp
+   * view (through [[Q.rd]]; `events` through [[Q.events]]) and returns
+   * `s.sql(text)`; the text is also the DuckDB oracle, so the gate
+   * compares two engines on one text, not two formulations. Tables come
+   * from the parsed plan, never from words, so aliases and CTE names
+   * bind no file. Views are rebound on every call (one session runs an
+   * entry over several dirs); a frame already returned keeps the plan
+   * it resolved. Spark-only hints ride in comments DuckDB ignores. */
+  def sql(name: String, text: String): QueryDef =
+    QueryDef(name, (s, dir) => {
+      tablesRead(s, text).foreach { t =>
+        (if (t == "events") Q.events(s, dir) else Q.rd(s, dir, t))
+          .createOrReplaceTempView(t)
+      }
+      s.sql(text)
+    }, Some(text))
+
+  /** The core tables `text` reads: the relation names of its parsed
+   * plan, CTE bodies and subquery expressions included. */
+  private def tablesRead(s: SparkSession, text: String): Set[String] = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+    import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    def walk(p: LogicalPlan): Seq[String] = {
+      val here = p match {
+        case UnresolvedRelation(Seq(t), _, _) => Seq(t.toLowerCase(java.util.Locale.ROOT))
+        case _ => Nil
+      }
+      here ++ (p.children ++ p.innerChildren.collect { case c: LogicalPlan => c } ++
+        p.expressions.flatMap(_.collect { case e: SubqueryExpression => e.plan })
+      ).flatMap(walk)
+    }
+    walk(s.sessionState.sqlParser.parsePlan(text)).filter(Q.coreTables).toSet
+  }
+}
+
 /**
  * Shared helpers. The float-determinism rules (SURVEY.md §5.3, §7 "oracle
  * determinism" risk) are enforced here:
@@ -41,7 +80,7 @@ object Q {
    * these ten names go through the cache — anything an entry writes
    * itself (round-trip dirs, snapshots, evolving-schema fixtures) must
    * keep re-inferring, because those paths DO change within a JVM. */
-  private val coreTables = Set("region", "nation", "customer", "supplier",
+  val coreTables: Set[String] = Set("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()

@@ -7,10 +7,29 @@ import graft.chschema.{ClickHouseType, DdlRenderer}
 /**
  * The reference's own capability surfaced as queryable results
  * (SURVEY.md §2.C "core"): footer schema as rows, and the generated DDL
- * text. Both are engine-specific strings, so no DuckDB oracle — the
- * byte-level contract is locked by the golden tests in DdlRendererSpec.
+ * text. The two lineitem entries have a DuckDB oracle over DuckDB's own
+ * footer read (`information_schema.columns`); the two fixture entries
+ * write their fixture inside the entry, out of any oracle view's reach,
+ * and golden specs (NestedDdlGateSpec, ExtendedDdlGateSpec) lock them.
  */
 object SchemaQueries {
+
+  /** lineitem's columns as DuckDB reads its footer, through the Legacy
+   * map of [[ClickHouseType.fromSpark]] on DuckDB's type names (an
+   * unmapped type yields NULL and fails the check). */
+  private val lineitemColumnsSql =
+    """SELECT CAST(ordinal_position - 1 AS INTEGER) AS ordinal,
+      |  column_name AS col_name,
+      |  CASE data_type
+      |    WHEN 'BOOLEAN' THEN 'Bool' WHEN 'INTEGER' THEN 'Int32'
+      |    WHEN 'BIGINT' THEN 'Int64' WHEN 'FLOAT' THEN 'Float32'
+      |    WHEN 'DOUBLE' THEN 'Float64' WHEN 'VARCHAR' THEN 'String'
+      |    WHEN 'BLOB' THEN 'String' WHEN 'DATE' THEN 'Int32'
+      |    WHEN 'TIMESTAMP' THEN 'Int64' WHEN 'TIMESTAMP_NS' THEN 'Int64'
+      |    WHEN 'TIMESTAMP WITH TIME ZONE' THEN 'Int64' END AS ch_type,
+      |  is_nullable = 'YES' AS nullable
+      |FROM information_schema.columns
+      |WHERE table_name = 'lineitem'""".stripMargin
 
   private def chTypeName(dt: DataType): String = dt match {
     case st: StructType => st.fields.map(f => s"${f.name} ${chTypeName(f.dataType)}")
@@ -47,7 +66,7 @@ object SchemaQueries {
           .toDF("ordinal", "col_name", "ch_type", "nullable")
           .orderBy("ordinal")
       },
-      None),
+      Some(s"$lineitemColumnsSql\nORDER BY ordinal")),
 
     QueryDef("ddl_lineitem",
       (s, dir) => {
@@ -56,7 +75,17 @@ object SchemaQueries {
         val ddl = DdlRenderer.render(schema, "lineitem", "l_orderkey")
         Seq(("lineitem", ddl)).toDF("table_name", "ddl")
       },
-      None),
+      Some(s"""WITH c AS ($lineitemColumnsSql)
+              |SELECT 'lineitem' AS table_name,
+              |  'drop table if exists lineitem;' || chr(10)
+              |  || 'create table lineitem (' || chr(10)
+              |  || string_agg('    ' || CASE WHEN ordinal = 0 THEN '' ELSE ', ' END
+              |       || col_name || ' ' || CASE WHEN col_name = 'l_orderkey'
+              |         THEN ch_type ELSE 'Nullable(' || ch_type || ')' END,
+              |       chr(10) ORDER BY ordinal)
+              |  || chr(10) || ') engine = MergeTree() primary key (l_orderkey);'
+              |  || chr(10) AS ddl
+              |FROM c""".stripMargin)),
 
     // ---- nested-type DDL through a REAL parquet round trip -------------
     // The reference's core capability on its own nested fixture

@@ -73,6 +73,7 @@ object SourceOps {
   val defs: Vector[QueryDef] = Vector(
 
     // ---- CSV source: customer keys/segments through csv ---------------
+    // Not QueryDef.sql: the CSV file-format round trip.
     QueryDef("q_csv_source",
       (s, dir) => {
         val out = roundTripDir("csv", dir, "customer") { staging =>
@@ -98,6 +99,7 @@ object SourceOps {
              |ORDER BY c_mktsegment""".stripMargin)),
 
     // ---- JSON-lines source: order keys/status through json -------------
+    // Not QueryDef.sql: the JSON-lines file-format round trip.
     QueryDef("q_json_source",
       (s, dir) => {
         val out = roundTripDir("json", dir, "orders") { staging =>
@@ -127,6 +129,7 @@ object SourceOps {
     // reader/writer — the other columnar format a lakehouse ingests.
     // Doubles survive ORC exactly (binary format, no text parse), so
     // acctbal can ride along here.
+    // Not QueryDef.sql: the ORC file-format round trip.
     QueryDef("q_orc_source",
       (s, dir) => {
         val out = roundTripDir("orc", dir, "supplier") { staging =>
@@ -155,6 +158,7 @@ object SourceOps {
     // value; the filter never reaches row groups of other partitions).
     // Oracle computes the same aggregate from the raw table with the
     // equivalent WHERE.
+    // Not QueryDef.sql: the partitioned write and its pruned read.
     QueryDef("q_partitioned_write",
       (s, dir) => {
         val out = roundTripDir("hivepart", dir, "orders") { staging =>
@@ -294,6 +298,7 @@ object SourceOps {
     // disagree on null ORDER BY placement, so the sentinel also keeps
     // the output ordering portable). The oracle reconstructs the same
     // generation split directly from the parquet table.
+    // Not QueryDef.sql: the two-generation evolving-schema files.
     QueryDef("q_schema_evolution",
       (s, dir) => {
         val out = roundTripDir("evo", dir, "orders", "gen=2/_SUCCESS") { staging =>
@@ -330,6 +335,7 @@ object SourceOps {
     // and the no-shuffle plan. At 100 TB the same job runs per
     // partition-directory with the target file count sized to
     // bytes/128 MB.
+    // Not QueryDef.sql: the small-file compaction it writes.
     QueryDef("q_compact_files",
       (s, dir) => {
         val frag = roundTripDir("frag", dir, "orders") { staging =>
@@ -363,6 +369,7 @@ object SourceOps {
     // property (an as-of scan's inputFiles all live under its one v=N
     // directory) and write isolation (a new version never perturbs an
     // open as-of read).
+    // Not QueryDef.sql: the snapshot chain's as-of read.
     QueryDef("q_snapshot_asof",
       (s, dir) => {
         import graft.sources.SnapshotStore
@@ -417,6 +424,7 @@ object SourceOps {
     // gate. SnapshotReadSpec pins the listing side: genuinely fewer
     // files scanned, every scanned file inside v=2, and
     // pruned ≡ unpruned row-for-row.
+    // Not QueryDef.sql: the snapshot chain's pruned read.
     QueryDef("q_snapshot_pruned",
       (s, dir) => {
         import graft.sources.SnapshotStore
@@ -465,6 +473,7 @@ object SourceOps {
     // classification runs per partition-directory, and a manifest-
     // carrying format would first prune to files that changed between
     // the versions — the join shape is unchanged.
+    // Not QueryDef.sql: the snapshot chain's version diff.
     QueryDef("q_snapshot_diff",
       (s, dir) => {
         import graft.sources.SnapshotStore
@@ -516,6 +525,7 @@ object SourceOps {
     // correctness property the whole pattern rests on. Exact decimal
     // sums make ⊕ associative and order-free (float deltas would drift
     // under 1000-executor accumulation orders).
+    // Not QueryDef.sql: the snapshot chain's incremental aggregate.
     QueryDef("q_snapshot_incr_agg",
       (s, dir) => {
         import graft.sources.SnapshotStore

@@ -328,6 +328,7 @@ object StreamingOps {
   val defs: Vector[QueryDef] = Vector(
 
     // ---- 1h tumbling counts with a 10-min watermark ------------------
+    // Not QueryDef.sql: a Structured Streaming query.
     QueryDef("s_tumbling_counts",
       (s, dir) => {
         sharedWindowedRun(s, dir, "tumbling")(tumblingAgg)
@@ -359,6 +360,7 @@ object StreamingOps {
               |GROUP BY 1 ORDER BY window_start""".stripMargin)),
 
     // ---- 30-min-gap session windows per user -------------------------
+    // Not QueryDef.sql: a Structured Streaming query.
     QueryDef("s_session",
       (s, dir) => {
         sharedWindowedRun(s, dir, "session", stateParts = 2)(sessionAgg)
@@ -400,6 +402,7 @@ object StreamingOps {
     // every sf dir by StreamingAppendSpec's boundary test). The
     // append/file-sink MACHINERY itself is exercised by the six
     // append-mode entries below.
+    // Not QueryDef.sql: a Structured Streaming query.
     QueryDef("s_tumbling_append",
       (s, dir) => {
         watermarkCut(s, dir, sharedWindowedRun(s, dir, "tumbling")(tumblingAgg))
@@ -458,6 +461,7 @@ object StreamingOps {
     // stays empirically pinned by StreamingAppendSpec's real
     // file-sink run per test, and the append/file-sink machinery by
     // the five append entries below.
+    // Not QueryDef.sql: a Structured Streaming query.
     QueryDef("s_session_append",
       (s, dir) => {
         watermarkCut(s, dir,
@@ -493,6 +497,7 @@ object StreamingOps {
     // time-range condition; the watermarks bound both sides' join state,
     // which is what makes this viable on unbounded streams. Append mode:
     // inner-join matches emit as soon as both rows are in state.
+    // Not QueryDef.sql: a Structured Streaming query.
     QueryDef("s_stream_join",
       (s, dir) => {
         val base = streamEvents(s, dir)
@@ -537,6 +542,7 @@ object StreamingOps {
     // production bounds it with dropDuplicatesWithinWatermark (pinned in
     // StreamingDedupSpec) — semantics then depend on arrival time, which
     // an oracle over sorted parquet can't replay.
+    // Not QueryDef.sql: a Structured Streaming query.
     QueryDef("s_dedup_keys",
       (s, dir) => {
         val keys = streamEvents(s, dir)
@@ -556,6 +562,7 @@ object StreamingOps {
     // hatch for state machines windowed aggs can't express. With one
     // input batch the final state equals the batch group-by, which is
     // the oracle.
+    // Not QueryDef.sql: a Structured Streaming query.
     QueryDef("s_stateful_counts",
       (s, dir) => {
         import s.implicits._
@@ -602,6 +609,7 @@ object StreamingOps {
     // register-bias error, which 5% alone would flag. StreamingSketchSpec
     // additionally pins streaming == batch sketch EQUALITY (HLL++ merge
     // is order-independent).
+    // Not QueryDef.sql: a Structured Streaming query.
     QueryDef("s_approx_users",
       (s, dir) => {
         val agg = streamEvents(s, dir)
@@ -647,6 +655,7 @@ object StreamingOps {
     // the identical ranking from plain counts; ranks compare the user
     // id AS A NUMBER on both sides (the sketch keys are strings — a
     // string tie-order would diverge from the oracle's integers).
+    // Not QueryDef.sql: a Structured Streaming query.
     QueryDef("s_heavy_hitters",
       (s, dir) => {
         val agg = streamEvents(s, dir)
@@ -841,6 +850,7 @@ object StreamingOps {
     // row per live key; at 100 TB the per-batch merge is a MERGE INTO
     // a table format keyed on user_id, and file-level min/max pruning
     // limits the rewrite to touched files.
+    // Not QueryDef.sql: a Structured Streaming query.
     QueryDef("s_cdc_apply",
       (s, dir) => if (events(s, dir).take(1).isEmpty) {
         // empty change feed: the materialized view is empty — return

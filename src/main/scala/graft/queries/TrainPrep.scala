@@ -521,6 +521,7 @@ object TrainPrep {
     // 100 TB. Arithmetic: counts/sums are exact BIGINTs; each output is
     // a fixed double expression tree evaluated identically by both
     // engines (every operand cast explicitly, one division per term).
+    // Not QueryDef.sql: its SQL plan adds a nested-loop join (sf0.1).
     QueryDef("q_target_encode",
       (s, dir) => {
         val o = rd(s, dir, "orders").select(col("o_orderkey"),
@@ -572,28 +573,15 @@ object TrainPrep {
     // The per-split (min, max) bounds are IN the output so the oracle
     // itself pins the no-overlap invariant; revenue rides the exact
     // decimal grid.
-    QueryDef("q_purged_split",
-      (s, dir) => {
-        rd(s, dir, "orders")
-          .withColumn("d", to_date(col("o_orderdate")))
-          .withColumn("split",
-            when(col("d") < lit("2000-01-01"), "train")
-              .when(col("d") < lit("2000-03-01"), "embargo")
-              .otherwise("val"))
-          .groupBy("split")
-          .agg(count(lit(1)).as("n"),
-            min("d").as("d_min"), max("d").as("d_max"),
-            dsum(col("o_totalprice")).as("revenue"))
-          .orderBy("split")
-      },
-      Some(s"""WITH o AS (SELECT CAST(o_orderdate AS DATE) AS d, o_totalprice
-              |           FROM orders)
-              |SELECT CASE WHEN d < DATE '2000-01-01' THEN 'train'
-              |            WHEN d < DATE '2000-03-01' THEN 'embargo'
-              |            ELSE 'val' END AS split,
-              |  COUNT(*) AS n, MIN(d) AS d_min, MAX(d) AS d_max,
-              |  ${dsumSql("o_totalprice")} AS revenue
-              |FROM o GROUP BY 1 ORDER BY split""".stripMargin)),
+    QueryDef.sql("q_purged_split",
+      s"""WITH o AS (SELECT CAST(o_orderdate AS DATE) AS d, o_totalprice
+         |           FROM orders)
+         |SELECT CASE WHEN d < DATE '2000-01-01' THEN 'train'
+         |            WHEN d < DATE '2000-03-01' THEN 'embargo'
+         |            ELSE 'val' END AS split,
+         |  COUNT(*) AS n, MIN(d) AS d_min, MAX(d) AS d_max,
+         |  ${dsumSql("o_totalprice")} AS revenue
+         |FROM o GROUP BY 1 ORDER BY split""".stripMargin),
 
     // ---- class weights for imbalanced training -------------------------
     // The two standard reweighting schemes a classifier head trains

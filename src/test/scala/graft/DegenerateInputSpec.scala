@@ -13,52 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
  */
 class DegenerateInputSpec extends AnyFunSuite {
   import SparkTestBase.spark
-
-  private def tmpDir(name: String): String =
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), name).toString
-
-  private lazy val emptyDir: String = {
-    val dir = tmpDir(s"graft-test-empty-${ProcessHandle.current().pid()}")
-    def write(table: String, schema: StructType): Unit =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .write.mode("overwrite").parquet(s"$dir/$table.parquet")
-    write("documents", StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType))))
-    write("embeddings", StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType))))
-    write("customer", StructType(Seq(
-      StructField("c_custkey", LongType), StructField("c_name", StringType),
-      StructField("c_nationkey", IntegerType),
-      StructField("c_acctbal", DoubleType),
-      StructField("c_mktsegment", StringType))))
-    write("orders", StructType(Seq(
-      StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
-      StructField("o_orderstatus", StringType),
-      StructField("o_totalprice", DoubleType),
-      StructField("o_orderdate", TimestampType),
-      StructField("o_orderpriority", StringType))))
-    write("events", StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType))))
-    write("lineitem", StructType(Seq(
-      StructField("l_orderkey", LongType), StructField("l_partkey", LongType),
-      StructField("l_suppkey", LongType),
-      StructField("l_linenumber", IntegerType),
-      StructField("l_quantity", DoubleType),
-      StructField("l_extendedprice", DoubleType),
-      StructField("l_discount", DoubleType), StructField("l_tax", DoubleType),
-      StructField("l_returnflag", StringType),
-      StructField("l_linestatus", StringType),
-      StructField("l_shipdate", TimestampType))))
-    dir
-  }
+  import DegenerateInputSpec.{emptyDir, tmpDir}
 
   for (q <- Seq("q_bloom_join", "q_bpe_train", "q_bpe_apply", "q_pagerank",
       "q_jl_project", "q_cms_counts", "q_minhash_est", "q_token_entropy",
@@ -176,5 +131,57 @@ class DegenerateInputSpec extends AnyFunSuite {
         out("bin_tokens") =!= truth("bin_tokens") ||
         out("n_docs").isNull || truth("n_docs").isNull)
     assert(diff.count() == 0, "hierarchical cumsum diverged from the flat window")
+  }
+}
+
+/** The empty corpus: six of the ten tables, each with its schema and no
+ * rows (QueryDefSqlSpec reuses it). */
+object DegenerateInputSpec {
+  import SparkTestBase.spark
+
+  private def tmpDir(name: String): String =
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), name).toString
+
+  lazy val emptyDir: String = {
+    val dir = tmpDir(s"graft-test-empty-${ProcessHandle.current().pid()}")
+    def write(table: String, schema: StructType): Unit =
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        .write.mode("overwrite").parquet(s"$dir/$table.parquet")
+    write("documents", StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType),
+      StructField("lang", StringType), StructField("source", StringType),
+      StructField("n_chars", LongType))))
+    write("embeddings", StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType)),
+      StructField("label", IntegerType))))
+    write("customer", StructType(Seq(
+      StructField("c_custkey", LongType), StructField("c_name", StringType),
+      StructField("c_nationkey", IntegerType),
+      StructField("c_acctbal", DoubleType),
+      StructField("c_mktsegment", StringType))))
+    write("orders", StructType(Seq(
+      StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
+      StructField("o_orderstatus", StringType),
+      StructField("o_totalprice", DoubleType),
+      StructField("o_orderdate", TimestampType),
+      StructField("o_orderpriority", StringType))))
+    write("events", StructType(Seq(
+      StructField("event_id", LongType), StructField("ts", LongType),
+      StructField("user_id", LongType),
+      StructField("event_type", StringType),
+      StructField("value", DoubleType), StructField("props", StringType))))
+    write("lineitem", StructType(Seq(
+      StructField("l_orderkey", LongType), StructField("l_partkey", LongType),
+      StructField("l_suppkey", LongType),
+      StructField("l_linenumber", IntegerType),
+      StructField("l_quantity", DoubleType),
+      StructField("l_extendedprice", DoubleType),
+      StructField("l_discount", DoubleType), StructField("l_tax", DoubleType),
+      StructField("l_returnflag", StringType),
+      StructField("l_linestatus", StringType),
+      StructField("l_shipdate", TimestampType))))
+    dir
   }
 }

@@ -85,6 +85,14 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(mainSourcesWith("createLink").isEmpty)
   }
 
+  test("only QueryDef.sql binds temp views") {
+    // an entry that is its SQL text binds the tables it reads through
+    // QueryDef.sql, rebound per call; a hand-rolled view-plus-s.sql
+    // entry would bind under names of its own and duplicate its oracle
+    val views = mainSourcesWith("createOrReplaceTempView")
+    assert(views == List("graft/queries/QueryDef.scala"), views)
+  }
+
   test("without a warehouse conf, managed tables live under the artifact root") {
     // q_bucketed_join's graft_bkt_* tables, not the working directory
     val t = SparkTestBase.spark.sessionState.catalog.defaultTablePath(
