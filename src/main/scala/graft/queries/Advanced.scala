@@ -830,7 +830,7 @@ object Advanced {
     // pattern). Probing is 10 driver-side lookups against the 8 KB-scale
     // sketch; at 100 TB the sketch build is ONE map-side-combined
     // aggregation, never a distinct-key shuffle.
-    // Not QueryDef.sql: the count-min sketch probed on the driver.
+    // Not QueryDef.sql: the count-min sketch it builds and probes per key.
     QueryDef("q_cms_counts",
       (s, dir) => {
         val keys = rd(s, dir, "lineitem").select(col("l_partkey"))

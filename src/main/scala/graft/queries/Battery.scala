@@ -933,7 +933,7 @@ object Battery {
     // last. Conversion ratios are exact-integer divisions, IEEE-identical
     // in both engines. (Timestamp comparisons ride the same µs model as
     // q_asof_last_signup / q_sessionize.)
-    // Not QueryDef.sql: as SQL, ~2x the exchanges and 2.6x the scans (sf0.1).
+    // Not QueryDef.sql: as SQL, ~2x the exchanges and 2.3x the scans (sf0.1).
     QueryDef("q_funnel",
       (s, dir) => {
         val e = events(s, dir).select("user_id", "event_type", "ts")
